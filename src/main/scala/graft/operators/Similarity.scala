@@ -292,11 +292,13 @@ object Similarity {
     * across bench queries — each still computes from the parquet inputs.
     * Thread-safe without holding locks during the staging itself: the
     * winner of putIfAbsent computes, losers join the same future (they
-    * would otherwise have re-run the identical training). Memoized
-    * entries are LEAVES only (views already landed); a memoized
+    * would otherwise have re-run the identical training). A FAILED
+    * staging is not memoized: its future leaves the map, so waiters that
+    * already joined it see the error and the next caller retries.
+    * Memoized entries are LEAVES only (views already landed); a memoized
     * computation never calls back into the memo, so no recursive-update
     * hazard exists. */
-  private final class StageMemo {
+  private[graft] final class StageMemo {
     private val m = new java.util.concurrent.ConcurrentHashMap[
       AnyRef, java.util.concurrent.CompletableFuture[AnyRef]]()
     def apply[T <: AnyRef](key: AnyRef)(f: => T): T = {
@@ -304,7 +306,10 @@ object Similarity {
       val prior = m.putIfAbsent(key, fresh)
       val fut = if (prior == null) {
         try fresh.complete(f: AnyRef)
-        catch { case e: Throwable => fresh.completeExceptionally(e) }
+        catch { case e: Throwable =>
+          fresh.completeExceptionally(e)
+          m.remove(key, fresh)
+        }
         fresh
       } else prior
       fut.join().asInstanceOf[T]

@@ -86,26 +86,20 @@ final class SnapshotTable(
   private def metas(): Seq[SnapMeta] = {
     val p = new Path(root)
     if (!fs.exists(p)) return Seq.empty
+    val qroot = qualifiedRoot
     fs.listStatus(p).toSeq
       .filter(_.getPath.getName.endsWith(".meta"))
       .map { st =>
-        val id = st.getPath.getName
-          .stripPrefix("snap-").stripSuffix(".meta").toLong
+        val name = st.getPath.getName
+        val id = name.stripPrefix("snap-").stripSuffix(".meta").toLong
         // markers are write-once, so the listing's (len, mtime) stamp
-        // validates a cached line exactly — [[SnapshotTable.markerCache]]
-        val key = fs.makeQualified(st.getPath).toString
-        val stamp = (st.getLen, st.getModificationTime)
-        SnapshotTable.markerCache.get(key) match {
-          case Some((s, line)) if s == stamp => parseMarkerLine(id, line)
-          case _ =>
-            val in = fs.open(st.getPath)
-            val line = try scala.io.Source.fromInputStream(in).mkString.trim
-              finally in.close()
-            if (SnapshotTable.markerCache.size > SnapshotTable.MarkerCacheCap)
-              SnapshotTable.markerCache.clear()
-            SnapshotTable.markerCache.put(key, (stamp, line))
-            parseMarkerLine(id, line)
+        // validates a cached line exactly
+        val line = StampedCache.shared.getOrLoad(qroot, name,
+            (st.getLen, st.getModificationTime)) {
+          val in = fs.open(st.getPath)
+          try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
         }
+        parseMarkerLine(id, line)
       }
       .sortBy(_.id)
   }
@@ -433,20 +427,19 @@ final class SnapshotTable(
         val hinted = cache.getOrElseUpdate((keys, batches.map(_.id)), {
           // requested-key capture fast path (r18): when EVERY batch in
           // this group was committed by THIS process as a small batch
-          // (see [[SnapshotTable.captureDelKeys]] for the equivalence
+          // (see [[SnapshotTable.CapturedDelKeys]] for the equivalence
           // argument and guards), the anti-join's build side is a
           // driver-local frame of the captured requested keys — no
           // sidecar dir listing, no scan stage, a straight broadcast.
-          // Identity is verified per batch against the live marker's
-          // commit timestamp, so a drop+recreate (different ts) or a
-          // foreign process's sidecar (never captured) falls back to the
-          // sidecar read below.
-          val captured: Option[Seq[SnapshotTable.CapturedDelKeys]] =
-            SnapshotTable.delKeyCapture.get(root).flatMap { m =>
-              val hits = batches.map(b => m.get(b.id).filter(c =>
-                c.physKeys == physKeys && b.ts.contains(c.ts)))
-              if (hits.forall(_.isDefined)) Some(hits.flatten) else None
-            }
+          // The stamp is the live marker's commit ts, so a drop+recreate
+          // (different ts) or a foreign process's sidecar (never
+          // captured) falls back to the sidecar read below.
+          val qroot = qualifiedRoot
+          val hits = batches.flatMap(b => b.ts.flatMap(ts =>
+            StampedCache.shared.get[SnapshotTable.CapturedDelKeys](
+              qroot, SnapshotTable.delKeysName(b.id), ts))
+            .filter(_.physKeys == physKeys))
+          val captured = if (hits.size == batches.size) Some(hits) else None
           captured.filter(cs => cs.map(_.rows.size).sum <= 4096 &&
               cs.map(_.schema).distinct.size == 1) match {
             case Some(cs) =>
@@ -507,7 +500,8 @@ final class SnapshotTable(
     }.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 
-  private def qualifiedRoot: String = fs.makeQualified(new Path(root)).toString
+  /** The table's fully-qualified root — also its [[StampedCache]] scope. */
+  private[graft] def qualifiedRoot: String = fs.makeQualified(new Path(root)).toString
 
   /** Root-relative form of a fully-qualified data-file path. */
   private def relToRoot(full: String): String =
@@ -535,7 +529,7 @@ final class SnapshotTable(
     * leaves the note in both places, never in neither), so
     * [[noteEverCommitted]] stays true across the whole
     * [[SnapshotTable.RetiredNotesCap]] horizon. Reads are CACHED per
-    * (path, length, mtime) — [[noteEverCommitted]] runs once per applied
+    * (length, mtime) — [[noteEverCommitted]] runs once per applied
     * window, and an unbounded re-read per window was the same
     * quiet-growth class as the fixed LogTable self-rescan (r14 verdict
     * finding #2). A missing file with a complete `.tmp` sibling is the
@@ -545,15 +539,9 @@ final class SnapshotTable(
     val p = retiredNotesFile
     if (fs.exists(p)) {
       val st = fs.getFileStatus(p)
-      val key = fs.makeQualified(p).toString
-      val stamp = (st.getLen, st.getModificationTime)
-      SnapshotTable.retiredCache.get(key) match {
-        case Some((s, lines)) if s == stamp => lines
-        case _ =>
-          val lines = readNoteLines(p)
-          SnapshotTable.retiredCache.put(key, (stamp, lines))
-          lines
-      }
+      // replaced only by rename (see retireNotes), so (len, mtime) is exact
+      StampedCache.shared.getOrLoad(qualifiedRoot, p.getName,
+        (st.getLen, st.getModificationTime))(readNoteLines(p))
     } else {
       val tmp = retiredNotesTmp
       if (fs.exists(tmp)) readNoteLines(tmp) else Seq.empty
@@ -594,9 +582,8 @@ final class SnapshotTable(
     // single-writer-per-table process model even when two expires land
     // inside one mtime tick
     val st = fs.getFileStatus(retiredNotesFile)
-    SnapshotTable.retiredCache.put(
-      fs.makeQualified(retiredNotesFile).toString,
-      ((st.getLen, st.getModificationTime), all))
+    StampedCache.shared.put(qualifiedRoot, retiredNotesFile.getName,
+      (st.getLen, st.getModificationTime), all)
   }
 
   /** Has a commit carrying note token `n` EVER been committed on this
@@ -1092,7 +1079,7 @@ final class SnapshotTable(
   }
 
   /** Returns the commit-wall-time millis written into the marker line —
-    * the identity [[SnapshotTable.captureDelKeys]] verifies against. */
+    * the stamp of a [[SnapshotTable.CapturedDelKeys]] entry. */
   private def writeMarker(id: Long, kind: String, parts: Seq[String], rows: Long,
                           sort: Seq[String], note: Option[String]): Long = {
     val ts = System.currentTimeMillis()
@@ -2852,26 +2839,19 @@ final class SnapshotTable(
     val st = try fs.getFileStatus(p) catch {
       case _: java.io.FileNotFoundException => return Map.empty
     }
-    // write-once file: the (len, mtime) stamp validates a cached parse
-    // exactly — see [[SnapshotTable.statsCache]]
-    val key = fs.makeQualified(p).toString
-    val stamp = (st.getLen, st.getModificationTime)
-    SnapshotTable.statsCache.get(key) match {
-      case Some((s, parsed)) if s == stamp => parsed
-      case _ =>
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-        val parsed = txt.split('\n').filter(_.nonEmpty).toSeq.map { line =>
-          val f = line.split("\\|", -1).map(unesc) // '|' in values is escaped as \p
-          def optL(i: Int) = if (f.length > i && f(i).nonEmpty) Some(f(i).toLong) else None
-          (f(0), f(1), FileColStat(f(2), f(3), f(4), optL(5), optL(6), optL(7)))
-        }.groupBy(_._1).map { case (p2, rows) =>
-          p2 -> rows.map(r => r._2 -> r._3).toMap
-        }
-        if (SnapshotTable.statsCache.size > SnapshotTable.MarkerCacheCap)
-          SnapshotTable.statsCache.clear()
-        SnapshotTable.statsCache.put(key, (stamp, parsed))
-        parsed
+    // write-once file (complete before its marker commits): the
+    // (len, mtime) stamp validates a cached parse exactly
+    StampedCache.shared.getOrLoad(qualifiedRoot, p.getName,
+        (st.getLen, st.getModificationTime)) {
+      val in = fs.open(p)
+      val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+      txt.split('\n').filter(_.nonEmpty).toSeq.map { line =>
+        val f = line.split("\\|", -1).map(unesc) // '|' in values is escaped as \p
+        def optL(i: Int) = if (f.length > i && f(i).nonEmpty) Some(f(i).toLong) else None
+        (f(0), f(1), FileColStat(f(2), f(3), f(4), optL(5), optL(6), optL(7)))
+      }.groupBy(_._1).map { case (p2, rows) =>
+        p2 -> rows.map(r => r._2 -> r._3).toMap
+      }
     }
   }
 
@@ -3001,14 +2981,10 @@ final class SnapshotTable(
 
   /** Read a COMMITTED snapshot dir — whole (`files` empty), or an
     * explicit surviving-file subset under hive `basePath` — passing the
-    * dir's cached inferred schema when available
-    * ([[SnapshotTable.dirSchemaCache]]): snapshot dirs are immutable once
-    * committed, so the first inference is exact for every later read, and
-    * skipping re-inference removes the footer-read + DataSource-resolution
-    * cost every read construction paid. The stamp is the OWNING MARKER's
-    * (len, mtime) — a drop + recreate at the same path writes a fresh
-    * marker and invalidates. Staged/markerless dirs fall back to plain
-    * inference, uncached. */
+    * dir's cached inferred schema when available: skipping re-inference
+    * removes the footer-read + DataSource-resolution cost (~70 ms per
+    * read construction on the MoR trickle) every read construction paid.
+    * Staged/markerless dirs fall back to plain inference, uncached. */
   private def snapDirRead(ownerId: Long, files: Seq[String] = Seq.empty): DataFrame = {
     val dir = fs.makeQualified(snapDir(ownerId)).toString
     val (reader, paths) =
@@ -3021,13 +2997,16 @@ final class SnapshotTable(
     stamp match {
       case None => reader.parquet(paths: _*)
       case Some(s) =>
-        SnapshotTable.dirSchemaCache.get(dir) match {
-          case Some((cs, sch)) if cs == s => reader.schema(sch).parquet(paths: _*)
-          case _ =>
+        // committed dirs are immutable, so the first inference is exact for
+        // every later read; the OWNING MARKER's (len, mtime) is the stamp,
+        // so a drop + recreate at the same path (a fresh marker) misses
+        val name = snapDir(ownerId).getName
+        StampedCache.shared.get[org.apache.spark.sql.types.StructType](
+            qualifiedRoot, name, s) match {
+          case Some(sch) => reader.schema(sch).parquet(paths: _*)
+          case None =>
             val df = reader.parquet(paths: _*)
-            if (SnapshotTable.dirSchemaCache.size > SnapshotTable.MarkerCacheCap)
-              SnapshotTable.dirSchemaCache.clear()
-            SnapshotTable.dirSchemaCache.put(dir, (s, df.schema))
+            StampedCache.shared.put(qualifiedRoot, name, s, df.schema)
             df
         }
     }
@@ -3433,12 +3412,13 @@ final class SnapshotTable(
                 val ts = writeMarker(id, "del", Seq.empty, rows, Seq.empty,
                   Some(s"eqdel=${keys.mkString(",")}"))
                 fs.delete(stagedFile(id), false)
-                // requested-key capture (see [[SnapshotTable.captureDelKeys]]):
-                // only small batches (the full deduped set is on the driver)
-                // and only when no WAP batch is staged at commit time
+                // requested-key capture (see [[SnapshotTable.CapturedDelKeys]]),
+                // stamped by the marker's ts: only small batches (the full
+                // deduped set is on the driver) and only when no WAP batch
+                // is staged at commit time
                 if (small && stagedIds().isEmpty)
-                  SnapshotTable.captureDelKeys(root, id, ts, keys,
-                    selected.schema, sample)
+                  StampedCache.shared.put(qualifiedRoot, SnapshotTable.delKeysName(id),
+                    ts, SnapshotTable.CapturedDelKeys(keys, selected.schema, sample))
                 out = Some((rows, plan))
               }
             } else cleanup() // head moved: matched set is stale, retry
@@ -3975,11 +3955,12 @@ final class SnapshotTable(
               case None =>
                 val ts = writeMarker(id, kind, parts, rows, sort, n)
                 fs.delete(stagedFile(id), false)
-                // requested-key capture (see [[SnapshotTable.captureDelKeys]]):
-                // small batch with a real delete side, no WAP batch staged
+                // requested-key capture (see [[SnapshotTable.CapturedDelKeys]]),
+                // stamped by the marker's ts: small batch with a real
+                // delete side, no WAP batch staged
                 if (small && replaced > 0L && stagedIds().isEmpty)
-                  SnapshotTable.captureDelKeys(root, id, ts, keys,
-                    selected.schema, sample)
+                  StampedCache.shared.put(qualifiedRoot, SnapshotTable.delKeysName(id),
+                    ts, SnapshotTable.CapturedDelKeys(keys, selected.schema, sample))
             }
           withCommitLock {
             if (currentSnapshotId.get == head) {
@@ -4351,22 +4332,11 @@ final class SnapshotTable(
   /** DROP TABLE (D8). */
   def drop(): Unit = {
     writeGuard()
-    SnapshotTable.delKeyCapture.remove(root)
-    // purge every stamped metadata cache line under this root (r18,
-    // VERDICT r17 #4): the (len, mtime) stamps are exact for write-once
-    // files, but a drop + recreate landing a same-length marker at the
-    // same path within one mtime tick would validate a stale line on
-    // filesystems with coarse timestamps. An in-process drop can simply
-    // evict, closing that edge for the only writer topology the engine
-    // supports (single-process; a cross-process recreate is already
-    // outside the claim protocol's guarantees).
-    val rootPrefix = fs.makeQualified(new Path(root)).toString
-    def purge[V](m: scala.collection.concurrent.TrieMap[String, V]): Unit =
-      m.keysIterator.filter(_.startsWith(rootPrefix)).toList.foreach(m.remove)
-    purge(SnapshotTable.markerCache)
-    purge(SnapshotTable.statsCache)
-    purge(SnapshotTable.dirSchemaCache)
-    purge(SnapshotTable.retiredCache)
+    // the (len, mtime) stamps are exact for write-once files, but a
+    // drop + recreate landing a same-length marker at the same path
+    // within one mtime tick would validate a stale line on filesystems
+    // with coarse timestamps; an in-process drop simply evicts the root
+    StampedCache.shared.evictRoot(qualifiedRoot)
     val p = new Path(root)
     if (fs.exists(p)) fs.delete(p, true)
   }
@@ -4476,87 +4446,12 @@ object SnapshotTable {
     * window; tests shrink it to exercise the horizon. */
   @volatile var RetiredNotesCap: Int = 10000
 
-  /** [[SnapshotTable.retiredNotes]] read cache: qualified path →
-    * ((length, mtime), decoded lines). Validated per read against the
-    * file status — one cheap metadata probe instead of an O(ledger)
-    * read+parse per applied window. */
-  private[warehouse] val retiredCache =
-    new scala.collection.concurrent.TrieMap[String, ((Long, Long), Seq[String])]()
-
-  /** Marker-line cache: qualified `.meta` path → ((length, mtime), raw
-    * marker line). Markers are write-once (land by rename, never modified
-    * in place; expiry deletes them and [[metas]] only consults entries the
-    * CURRENT listing returns), so the (len, mtime) stamp — the
-    * [[retiredCache]] discipline — makes hits exact. This turns the
-    * per-call cost of [[metas]] from one open+read PER MARKER into the one
-    * listing the call already pays: commit-heavy paths (a MoR trickle, a
-    * replication cycle) call metas() several times per statement, and the
-    * repeated re-read of an ever-growing marker chain was O(chain) file
-    * opens per call. Bounded: the map clears once it passes 65 536
-    * entries — markers are tiny, but a long-lived service should not grow
-    * a map forever. */
-  private[warehouse] val markerCache =
-    new scala.collection.concurrent.TrieMap[String, ((Long, Long), String)]()
-  private[warehouse] val MarkerCacheCap = 65536
-
-  /** Stats-sidecar parse cache, same (path, len, mtime) discipline as
-    * [[markerCache]]: a `.stats` file is written complete before its
-    * marker commits and never modified after, so the stamp makes hits
-    * exact. Scan planning reads one sidecar per live snapshot on EVERY
-    * plan — a DML trickle re-parsed the same multi-KB sidecar hundreds of
-    * times. Values are the parsed per-file stat maps. */
-  private[warehouse] val statsCache =
-    new scala.collection.concurrent.TrieMap[
-      String, ((Long, Long), Map[String, Map[String, FileColStat]])]()
-
-  /** Per-snapshot-dir INFERRED READ SCHEMA cache, stamped by the OWNING
-    * MARKER's (len, mtime): snapshot dirs are immutable once committed
-    * (a drop + recreate at the same path writes a fresh marker, which
-    * changes the stamp), so the schema Spark inferred for a dir once can
-    * be passed explicitly to every later read of it — skipping the
-    * footer-read + DataSource-resolution inference (~70 ms per read
-    * construction measured on the MoR trickle) that dominated small
-    * pruned reads. The cached value IS a previous inference over the same
-    * immutable files, so explicit-schema reads are bit-identical. */
-  private[warehouse] val dirSchemaCache =
-    new scala.collection.concurrent.TrieMap[
-      String, ((Long, Long), org.apache.spark.sql.types.StructType)]()
-
   /** Max ESTIMATED build-side bytes for the delete-fold broadcast hint
     * (rows × schema-derived key width). 32 MB keeps the old 4M-row bound
     * for single narrow keys (4M × 8B) while capping wide/string key sets
     * at a safe build size. */
   val MaxDelBroadcastBytes: Long = 32L * 1024 * 1024
 
-  /** REQUESTED-KEY capture for small delete batches (r18): the committing
-    * JVM already holds the statement's (deduped, ≤64-row) key set, and the
-    * read-side equality-delete anti-join is ROW-IDENTICAL whether its
-    * build side is the sidecar's matched keys or the requested superset —
-    * a requested key that matched nothing has no row in ANY data snapshot
-    * the sidecar applies to (the matched scan's metadata pruning covered
-    * every file at or below the commit head, and later commits claim
-    * HIGHER ids, outside the sidecar's `delSeq > dataId` blast radius).
-    * So a read served by the committing process can anti-join a
-    * driver-local key frame instead of re-listing and re-scanning every
-    * sidecar dir — in a 100-statement MoR trickle that re-scan was the
-    * dominant per-statement cost (measured: 0.16 s of plan construction +
-    * a 50-path sidecar scan per statement at chain 50).
-    *
-    * Correctness guards, all checked at USE time in [[applyEqDeletes]]:
-    * the marker's commit timestamp must equal the captured one (a
-    * drop+recreate landing the same id writes a different ts), the
-    * physical key columns must match, and EVERY batch in the anti-join
-    * group must be captured (else the group falls back to the sidecar
-    * read). Capture is SKIPPED when any WAP-staged marker exists at
-    * commit time: a staged-earlier snapshot publishes with an id BELOW
-    * the delete's, making its rows subject to the sidecar without having
-    * been visible to the matched scan — the one case where requested and
-    * matched key sets could diverge observably. The sidecar itself is
-    * written unchanged (CDC and other processes read it verbatim); this
-    * cache only short-circuits the build side of in-process anti-joins.
-    * NaN/±0.0/NULL key semantics are identical on both paths: the same
-    * join-equality normalization applies, and a NULL requested key
-    * matches nothing in either build side. */
   /** Row cap for [[SnapshotTable.writeSmallSidecar]]: past this the
     * distributed write path runs (the proving take stops early). */
   private[warehouse] val SmallSidecarRowCap = 4096
@@ -4573,22 +4468,40 @@ object SnapshotTable {
       new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport()
   }
 
+  /** REQUESTED-KEY capture for small delete batches (r18): the committing
+    * JVM already holds the statement's (deduped, ≤64-row) key set, and the
+    * read-side equality-delete anti-join is ROW-IDENTICAL whether its
+    * build side is the sidecar's matched keys or the requested superset —
+    * a requested key that matched nothing has no row in ANY data snapshot
+    * the sidecar applies to (the matched scan's metadata pruning covered
+    * every file at or below the commit head, and later commits claim
+    * HIGHER ids, outside the sidecar's `delSeq > dataId` blast radius).
+    * So a read served by the committing process can anti-join a
+    * driver-local key frame instead of re-listing and re-scanning every
+    * sidecar dir — in a 100-statement MoR trickle that re-scan was the
+    * dominant per-statement cost (measured: 0.16 s of plan construction +
+    * a 50-path sidecar scan per statement at chain 50).
+    *
+    * Cached in [[StampedCache]] under [[delKeysName]]. Correctness guards,
+    * all checked at USE time in [[applyEqDeletes]]: the marker's commit
+    * timestamp must equal the entry's stamp (a drop+recreate landing the
+    * same id writes a different ts), the physical key columns must
+    * match, and EVERY batch in the anti-join group must be captured
+    * (else the group falls back to the sidecar read). Capture is SKIPPED when any WAP-staged marker exists at
+    * commit time: a staged-earlier snapshot publishes with an id BELOW
+    * the delete's, making its rows subject to the sidecar without having
+    * been visible to the matched scan — the one case where requested and
+    * matched key sets could diverge observably. The sidecar itself is
+    * written unchanged (CDC and other processes read it verbatim); the
+    * capture only short-circuits the build side of in-process anti-joins.
+    * NaN/±0.0/NULL key semantics are identical on both paths: the same
+    * join-equality normalization applies, and a NULL requested key
+    * matches nothing in either build side. */
   private[graft] final case class CapturedDelKeys(
-      ts: Long, physKeys: Seq[String],
+      physKeys: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.Row])
-  private[graft] val delKeyCapture =
-    new scala.collection.concurrent.TrieMap[
-      String, scala.collection.concurrent.TrieMap[Long, CapturedDelKeys]]()
-  private[warehouse] val DelKeyCaptureRootCap = 4096
-  private[warehouse] def captureDelKeys(root: String, id: Long, ts: Long,
-      physKeys: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row]): Unit = {
-    val m = delKeyCapture.getOrElseUpdate(root,
-      new scala.collection.concurrent.TrieMap[Long, CapturedDelKeys]())
-    if (m.size > DelKeyCaptureRootCap) m.clear()
-    m.put(id, CapturedDelKeys(ts, physKeys, schema, rows))
-  }
+  private[graft] def delKeysName(id: Long): String = f"snap-$id%05d.delkeys"
 
   /** Coerce a filter bound to the numeric axis of a stat kind. None =
     * not comparable on this axis → the caller must keep the file. */

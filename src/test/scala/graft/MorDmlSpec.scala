@@ -654,7 +654,7 @@ class MorDmlSpec extends SparkSpec {
       s"captured folds must not scan sidecar dirs, saw ${delRelsOf(df).size}")
     // a FRESH process (no capture) must fall back to the sidecar read —
     // same survivors — and still build each key-set frame ONCE
-    graft.warehouse.SnapshotTable.delKeyCapture.clear()
+    graft.warehouse.StampedCache.shared.evictRoot(t.qualifiedRoot)
     val (df2, _) = t.readPruned(Seq.empty)
     assert(df2.count() === 800L + 200L - 4L,
       "the sidecar-read fold must keep the same survivors as the capture")

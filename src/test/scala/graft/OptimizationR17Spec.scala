@@ -108,16 +108,28 @@ class OptimizationR17Spec extends SparkSpec {
   test("drop + recreate at the same path reads the NEW schema (marker-stamped cache)") {
     val wh = scratch("schemacache")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val cache = graft.warehouse.StampedCache.shared
     try {
-      val t1 = new SnapshotTable(spark, wh)
+      // t10's root string starts with t1's: eviction must match the root
+      // exactly, never by prefix
+      val t1 = new SnapshotTable(spark, s"$wh/t1")
+      val t10 = new SnapshotTable(spark, s"$wh/t10")
       t1.createOrReplace(Seq((1L, "a")).toDF("k", "v"))
+      t10.createOrReplace(Seq((10L, "b")).toDF("k", "v"))
       assert(t1.read().collect().toSeq == Seq(Row(1L, "a"))) // warms the cache
+      assert(t10.read().collect().toSeq == Seq(Row(10L, "b")))
+      val t10Names = cache.names(t10.qualifiedRoot)
+      assert(cache.names(t1.qualifiedRoot).nonEmpty && t10Names.nonEmpty)
       t1.drop()
-      val t2 = new SnapshotTable(spark, wh)
+      assert(cache.names(t1.qualifiedRoot).isEmpty, "drop evicts the dropped root")
+      assert(cache.names(t10.qualifiedRoot).toSet == t10Names.toSet,
+        "drop must not evict a sibling whose root shares the prefix")
+      val t2 = new SnapshotTable(spark, s"$wh/t1")
       t2.createOrReplace(Seq((2L, 3.5, "w")).toDF("k", "d", "s"))
       val got = t2.read()
       assert(got.columns.toSeq == Seq("k", "d", "s"))
       assert(got.collect().toSeq == Seq(Row(2L, 3.5, "w")))
+      assert(t10.read().collect().toSeq == Seq(Row(10L, "b")))
     } finally fs.delete(new org.apache.hadoop.fs.Path(wh), true)
   }
 }

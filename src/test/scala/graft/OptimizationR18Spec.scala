@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.warehouse.SnapshotTable
+import graft.warehouse.{SnapshotTable, StampedCache}
 
 /** Focused tests for the round-18 optimization-wave internals: the
   * requested-delete-key capture that lets the committing process serve
@@ -30,16 +30,23 @@ class OptimizationR18Spec extends SparkSpec {
     t
   }
 
+  private def captures(t: SnapshotTable): Seq[String] =
+    StampedCache.shared.names(t.qualifiedRoot).filter(_.endsWith(".delkeys"))
+
+  /** A fresh process holds none of the root's cached metadata. */
+  private def freshProcess(t: SnapshotTable): Unit =
+    StampedCache.shared.evictRoot(t.qualifiedRoot)
+
   test("captured fold ≡ sidecar-read fold, including unmatched requested keys") {
     val t = eightFiles("cap-eq")
     // 999999 matches nothing — the requested set is a strict SUPERSET of
     // the sidecar's matched keys, the core of the equivalence argument
     t.deleteByKeys(Seq("id"), Seq(5L, 999999L).toDF("id"))
     t.upsertByKeys(Seq((7L, "UP"), (888888L, "NEW")).toDF("id", "v"), Seq("id"))
-    assert(SnapshotTable.delKeyCapture.contains(t.root),
+    assert(captures(t).nonEmpty,
       "small local-batch commits must capture their requested keys")
     val viaCapture = t.read().orderBy("id").collect()
-    SnapshotTable.delKeyCapture.clear() // simulate a fresh process
+    freshProcess(t)
     val viaSidecars = t.read().orderBy("id").collect()
     assert(viaCapture.toSeq === viaSidecars.toSeq,
       "captured and sidecar-read folds must produce identical rows")
@@ -64,7 +71,7 @@ class OptimizationR18Spec extends SparkSpec {
     val (n, _) = t.deleteByKeys(Seq("d"), keys)
     assert(n === 2L, "NaN and 0.0 rows must match; NULL must not")
     val viaCapture = t.read().orderBy("v").collect()
-    SnapshotTable.delKeyCapture.clear()
+    freshProcess(t)
     val viaSidecars = t.read().orderBy("v").collect()
     assert(viaCapture.toSeq === viaSidecars.toSeq)
     assert(viaSidecars.map(_.getString(1)).toSeq === Seq("x", "y"))
@@ -73,10 +80,9 @@ class OptimizationR18Spec extends SparkSpec {
   test("drop clears the capture; a recreate at the same path reads fresh") {
     val t = eightFiles("cap-drop")
     t.deleteByKeys(Seq("id"), Seq(5L).toDF("id"))
-    assert(SnapshotTable.delKeyCapture.contains(t.root))
+    assert(captures(t).nonEmpty)
     t.drop()
-    assert(!SnapshotTable.delKeyCapture.contains(t.root),
-      "drop must clear the root's captured keys")
+    assert(captures(t).isEmpty, "drop must clear the root's captured keys")
     val t2 = new SnapshotTable(spark, t.root)
     t2.createOrReplace(spark.range(10).toDF("id")
       .withColumn("v", concat(lit("n"), col("id"))))
@@ -89,16 +95,17 @@ class OptimizationR18Spec extends SparkSpec {
   test("a stale capture at a reused id is rejected by the marker timestamp") {
     val t = eightFiles("cap-ts")
     t.deleteByKeys(Seq("id"), Seq(5L).toDF("id"))
-    val ids = SnapshotTable.delKeyCapture(t.root).keySet
-    assert(ids.nonEmpty)
-    // poison the capture with a wrong ts — the read must fall back to the
-    // sidecar (same answer), never join the poisoned frame
-    for (id <- ids) {
-      val c = SnapshotTable.delKeyCapture(t.root)(id)
-      SnapshotTable.delKeyCapture(t.root)(id) =
-        c.copy(ts = c.ts - 1L,
-          rows = Seq(org.apache.spark.sql.Row(6L))) // would delete the WRONG row
-    }
+    val names = captures(t)
+    assert(names.nonEmpty)
+    // poison the capture with a ts no marker carries — the read must fall
+    // back to the sidecar (same answer), never join the poisoned frame
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType)))
+    for (name <- names)
+      StampedCache.shared.put(t.qualifiedRoot, name, -1L,
+        SnapshotTable.CapturedDelKeys(Seq("id"), schema,
+          Seq(org.apache.spark.sql.Row(6L)))) // would delete the WRONG row
     assert(t.read().where("id = 6").count() === 1L,
       "a ts-mismatched capture must not be joined")
     assert(t.read().where("id = 5").count() === 0L)
@@ -114,7 +121,7 @@ class OptimizationR18Spec extends SparkSpec {
     t.stageAppend(Seq((999999L, "staged")).toDF("id", "v"), "audit-1")
     // request exactly that key (it matches nothing live) plus a real one
     t.deleteByKeys(Seq("id"), Seq(5L, 999999L).toDF("id"))
-    assert(!SnapshotTable.delKeyCapture.get(t.root).exists(_.nonEmpty),
+    assert(captures(t).isEmpty,
       "a staged batch at commit time must suppress the capture")
     t.publishStaged("audit-1")
     // the staged row was never visible to the delete — it must survive
@@ -135,7 +142,7 @@ class OptimizationR18Spec extends SparkSpec {
       s"both small sidecars must be driver-written, saw $driverFiles")
     // a fresh-process read (capture cleared) scans the driver-written
     // files — physical types must round-trip through the ordinary reader
-    SnapshotTable.delKeyCapture.clear()
+    freshProcess(t)
     assert(t.read().count() === 798L)
     assert(t.read().where("id = 7").select("v").collect().map(_.getString(0))
       .toSeq === Seq("UP"))
@@ -148,8 +155,20 @@ class OptimizationR18Spec extends SparkSpec {
     val t = eightFiles("cap-big")
     val keys = (0L until 65L).map(_ * 10L)
     t.deleteByKeys(Seq("id"), keys.toDF("id"))
-    assert(!SnapshotTable.delKeyCapture.get(t.root).exists(_.nonEmpty),
+    assert(captures(t).isEmpty,
       "batches past the small bound must not capture")
     assert(t.read().count() === 800L - keys.count(_ < 800L))
+  }
+
+  test("a failed memoised staging is retried by the next caller") {
+    val memo = new graft.operators.Similarity.StageMemo
+    val e = intercept[java.util.concurrent.CompletionException] {
+      memo[String]("train")(throw new IllegalStateException("transient"))
+    }
+    assert(e.getCause.getMessage === "transient")
+    assert(memo[String]("train")("trained") === "trained",
+      "a failure must not stay memoised")
+    assert(memo[String]("train")("retrained") === "trained",
+      "a success stays memoised")
   }
 }
