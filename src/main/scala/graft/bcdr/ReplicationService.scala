@@ -620,10 +620,14 @@ final class ReplicationService(primary: Catalog, secondary: Catalog,
             math.min(members.size, 4))
           implicit val ec: scala.concurrent.ExecutionContext =
             scala.concurrent.ExecutionContext.fromExecutorService(pool)
+          // EVERY member's stage finishes before the finally below makes
+          // the secondary read-only again (a sibling still writing would
+          // otherwise race the flag); the first failure in declared order
+          // is rethrown once all have settled
           try members.map { case (s, t) =>
               scala.concurrent.Future(stageOne(s, t))
-            }.flatMap(f => scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf))
+            }.map(f => scala.util.Try(scala.concurrent.Await.result(
+              f, scala.concurrent.duration.Duration.Inf))).flatMap(_.get)
           finally pool.shutdown()
         }
       StagedCycle(groupName, work)

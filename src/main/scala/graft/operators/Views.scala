@@ -574,8 +574,8 @@ object Views {
     // 8-file table — every read pays 12 anti-join batches until someone
     // compacts, and a FULL rewrite is the wrong tool for 12 deleted rows.
     // `compactDeletes` folds the run into ONE merged sidecar, REQUIREd to
-    // touch ZERO data files; the post-merge read plan is REQUIREd to
-    // anti-join ONLY the merged sidecar (one batch, not twelve); a CDC
+    // touch ZERO data files; the post-merge read is REQUIREd to fold
+    // ONLY the merged sidecar (one batch, not twelve); a CDC
     // window spanning the trickle AND the merge is REQUIREd to read only
     // the original sidecars and emit each delete exactly once (a merge
     // adds no logical change). The DuckDB oracle replays the same
@@ -616,17 +616,14 @@ object Views {
           s"q133 expects 1 pending sidecar after the fold, got ${tbl.pendingDeleteBatches()}")
         require(dataFiles().intersect(filesBefore) == filesBefore,
           "q133: minor compaction must not rewrite or remove ANY data file")
-        // the read plan's only delete anti-join source is the merged sidecar
-        val delDirs = tbl.snapshots().collect { case (id, "del") => f"snap-$id%05d" }
-        val mergeDir = f"snap-${merges.head}%05d"
-        val delPaths = tbl.read().queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation.asInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.rootPaths.map(_.toString).filter(p => delDirs.exists(p.endsWith))
-        }.flatten.distinct
-        require(delPaths.nonEmpty && delPaths.forall(_.endsWith(mergeDir)),
-          s"q133 post-merge reads must anti-join ONLY the merged sidecar, saw $delPaths")
+        // the read's only delete source is the merged sidecar: a cold read
+        // loads that one sidecar's key set (the originals are superseded)
+        graft.warehouse.StampedCache.shared.evictRoot(tbl.qualifiedRoot)
+        tbl.read()
+        val folded = graft.warehouse.StampedCache.shared.names(tbl.qualifiedRoot)
+          .filter(_.endsWith(".delkeys"))
+        require(folded == Seq(graft.warehouse.SnapshotTable.delKeysName(merges.head)),
+          s"q133 post-merge reads must fold ONLY the merged sidecar, saw $folded")
         // CDC across trickle + merge: originals only, each delete once
         val cs = tbl.rowChangesBetween(s0, tbl.currentSnapshotId.get).get
         require(cs.filesRead <= 12,

@@ -325,14 +325,17 @@ final class SnapshotTable(
   /** Anti-join `df` (carrying __file/__pos) against the given positional
     * sidecars: ONE multi-path read of the tiny sidecar dirs, ONE join per
     * read — never a join per data dir (position identity is global).
-    * Broadcast-hinted from marker-recorded counts, the eq-fold stance. */
+    * The read names its two columns' fixed types (as [[withPosCols]]
+    * attaches them), so sidecars of different row schemas resolve without
+    * a schema-merge job; no distinct (its exchange is a job, and a
+    * left_anti probe ignores build-side duplicates). Broadcast-hinted from
+    * marker-recorded counts, the eq-fold stance. */
   private def applyPosDeletes(df: DataFrame, pdels: Seq[SnapMeta]): DataFrame = {
-    import org.apache.spark.sql.functions.col
     if (pdels.isEmpty) return df
     val pos = withDriverListing {
-      spark.read.option("mergeSchema", "true")
+      spark.read.schema("__file STRING, __pos BIGINT")
         .parquet(pdels.map(m => delRowsPath(m).toString): _*)
-    }.select(col("__file"), col("__pos")).distinct()
+    }
     val rows = pdels.map(posDelRowCount)
     val hinted = // ~64 B/row: one path string + one ordinal
       if (rows.forall(_.isDefined) &&
@@ -342,13 +345,6 @@ final class SnapshotTable(
     df.join(hinted, Seq("__file", "__pos"), "left_anti")
   }
 
-  /** SEQUENCE-AWARE application of equality deletes: anti-join `df` (rows
-    * whose data snapshot is `dataId`) against every `del` batch committed
-    * AFTER it — a delete never touches rows appended later (a re-inserted
-    * key survives), the Iceberg v2 sequence-number rule. Batches sharing a
-    * key-column set union into ONE anti-join; each key frame is a tiny
-    * projection of its delete sidecar, so at scale this plans as a
-    * broadcast anti-join per key set — scan cost unchanged. */
   /** Run `f` with Spark's parallel-listing threshold raised: resolving a
     * many-path read (one dir per delete sidecar) must not launch a
     * DISTRIBUTED listing job per plan — the sidecars are one tiny file
@@ -362,14 +358,14 @@ final class SnapshotTable(
     try f finally conf.setConfString(key, prev)
   }
 
-  /** Per-read cache of built delete-key frames, keyed by (key columns,
+  /** Per-read cache of built delete folds, keyed by (key columns,
     * applicable batch ids): [[readPlanned]] applies the delete fold once
     * per surviving data dir, and without reuse each application re-lists
     * and re-plans the SAME key-set subtree — analysis cost growing with
     * append-dirs × delete-groups (VERDICT r10 #2). Scoped to ONE read
     * operation, never shared across reads (the live del set moves). */
   private type DelKeyCache =
-    scala.collection.mutable.Map[(Seq[String], Seq[Long]), DataFrame]
+    scala.collection.mutable.Map[(Seq[String], Seq[Long]), DataFrame => DataFrame]
   private def newDelKeyCache: DelKeyCache = scala.collection.mutable.Map.empty
 
   /** Conservative broadcast-build bytes per key ROW, from the key frame's
@@ -399,11 +395,24 @@ final class SnapshotTable(
         s"delete sidecar ${m.id} at $root keys on '$k', which a later " +
           "column op dropped — the sidecar can no longer apply by name")))
 
+  /** Delete rows a batch's metadata records (del: the marker; mor: the
+    * .excl sidecar). */
+  private def delRowCount(b: SnapMeta): Option[Long] =
+    if (b.kind == "mor") readExclusion(b.id).map(_.rows) else b.rows
+
+  /** SEQUENCE-AWARE application of equality deletes: remove from `df`
+    * (rows whose data snapshot is `dataId`) every row keyed by a `del`
+    * batch committed AFTER it — a delete never touches rows appended later
+    * (a re-inserted key survives), the Iceberg v2 sequence-number rule.
+    * Batches sharing a key-column set fold together, once per read (the
+    * `cache`): a SMALL set (≤ [[SnapshotTable.SmallSidecarRowCap]] keys,
+    * see [[smallDelKeys]]) folds as a predicate or a driver-local
+    * broadcast ([[keySetFold]]); a large one anti-joins a read of the
+    * sidecars ([[sidecarFold]]). */
   private def applyEqDeletes(df: DataFrame, dataId: Long,
                              dels: Seq[SnapMeta],
                              cache: DelKeyCache = newDelKeyCache,
                              ops: Seq[ColOp] = Seq.empty): DataFrame = {
-    import org.apache.spark.sql.functions.col
     // a mor upsert that matched nothing (pure insert) writes no delrows
     // dir — it has no delete side to apply. Applicability and ordering go
     // by EFFECTIVE sequence (delSeq): a merged sidecar applies where its
@@ -419,67 +428,156 @@ final class SnapshotTable(
     // sidecar's files carry the narrow physical type, a post-widen one
     // the wide, and one multi-path read without a type-unifying schema
     // would read one of them under the wrong width (the split costs one
-    // extra anti-join only when widens exist; the join itself coerces)
+    // extra fold only when widens exist; the join itself coerces)
     else applicable.groupBy(m => (delKeyCols(m), logicalDelKeys(m, ops),
         ops.count(o => o.op == "widen" && o.id < m.id)))
       .toSeq.sortBy(_._2.map(delSeq).min)
       .foldLeft(df) { case (d, ((physKeys, keys, _), batches)) =>
-        val hinted = cache.getOrElseUpdate((keys, batches.map(_.id)), {
-          // requested-key capture fast path (r18): when EVERY batch in
-          // this group was committed by THIS process as a small batch
-          // (see [[SnapshotTable.CapturedDelKeys]] for the equivalence
-          // argument and guards), the anti-join's build side is a
-          // driver-local frame of the captured requested keys — no
-          // sidecar dir listing, no scan stage, a straight broadcast.
-          // The stamp is the live marker's commit ts, so a drop+recreate
-          // (different ts) or a foreign process's sidecar (never
-          // captured) falls back to the sidecar read below.
-          val qroot = qualifiedRoot
-          val hits = batches.flatMap(b => b.ts.flatMap(ts =>
-            StampedCache.shared.get[SnapshotTable.CapturedDelKeys](
-              qroot, SnapshotTable.delKeysName(b.id), ts))
-            .filter(_.physKeys == physKeys))
-          val captured = if (hits.size == batches.size) Some(hits) else None
-          captured.filter(cs => cs.map(_.rows.size).sum <= 4096 &&
-              cs.map(_.schema).distinct.size == 1) match {
-            case Some(cs) =>
-              val all = cs.flatMap(_.rows).distinct
-              val local = spark.createDataFrame(
-                java.util.Arrays.asList(all: _*), cs.head.schema)
-              org.apache.spark.sql.functions.broadcast(
-                if (physKeys == keys) local else local.toDF(keys: _*))
-            case None =>
-          // ONE multi-path read per key-set group, not a per-batch union: a
-          // 100-statement delete trickle otherwise costs O(batches) scan
-          // plans on EVERY read — the O(n²) planning tax that made the
-          // trickle gate 100× slower than its I/O (every sidecar carries
-          // the group's key columns, so the one-schema read is safe)
-          // no distinct: a left_anti probe is insensitive to build-side
-          // duplicates, and sidecar rows are disjoint by construction (a
-          // re-delete of an already-deleted key matches nothing), so the
-          // exchange a distinct would add to EVERY read of a table with
-          // live sidecars bought nothing
-          val keyDf0 = withDriverListing {
-            spark.read.parquet(batches.map(b => delRowsPath(b).toString): _*)
-          }.select(physKeys.map(col): _*)
-          val keyDf = if (physKeys == keys) keyDf0 else keyDf0.toDF(keys: _*)
-          // metadata records every batch's delete-row count (del: the
-          // marker; mor: the .excl sidecar): when the combined delete
-          // set's estimated BUILD BYTES (rows × schema-derived key width)
-          // are provably small, hint the broadcast instead of letting AQE
-          // discover it through an extra sizing stage — the CostJoin
-          // stance (decide from table-owned metadata); unknown or large
-          // sets keep the planner's choice
-          val rows = batches.flatMap(b =>
-            if (b.kind == "mor") readExclusion(b.id).map(_.rows) else b.rows)
-          if (rows.length == batches.length &&
-              rows.sum * keyRowWidth(keyDf, keys) <= SnapshotTable.MaxDelBroadcastBytes)
-            org.apache.spark.sql.functions.broadcast(keyDf)
-          else keyDf
-          }
-        })
-        d.join(hinted, keys, "left_anti")
+        cache.getOrElseUpdate((keys, batches.map(_.id)),
+          smallDelKeys(batches, physKeys)
+            .filter(_.map(_.schema.map(_.dataType)).distinct.size == 1)
+            .fold(sidecarFold(batches, physKeys, keys))(keySetFold(_, keys)))(d)
       }
+  }
+
+  /** The group's key sets when the group is SMALL, else None. Each batch's
+    * set is the [[StampedCache]] entry [[SnapshotTable.delKeysName]],
+    * stamped by its marker's commit ts: written through at commit by the
+    * committing process's requested-key capture (see
+    * [[SnapshotTable.CapturedDelKeys]]), loaded on a miss by reading the
+    * sidecar's key columns on the driver ([[readDelKeys]]) — so another
+    * process's commits (a replicated secondary's every sidecar) cost no
+    * Spark job either. Small = every batch's size is known (its entry, or
+    * its metadata row count) and the group sums to ≤ SmallSidecarRowCap. */
+  private def smallDelKeys(batches: Seq[SnapMeta],
+                           physKeys: Seq[String]): Option[Seq[SnapshotTable.CapturedDelKeys]] = {
+    val qroot = qualifiedRoot
+    def entry(b: SnapMeta, ts: Long) = StampedCache.shared
+      .get[SnapshotTable.CapturedDelKeys](qroot, SnapshotTable.delKeysName(b.id), ts)
+      .filter(_.physKeys == physKeys)
+    val sizes = batches.map(b => b.ts.flatMap(ts =>
+      entry(b, ts).map(_.rows.size.toLong).orElse(delRowCount(b))))
+    if (sizes.exists(_.isEmpty) ||
+        sizes.flatten.sum > SnapshotTable.SmallSidecarRowCap) None
+    else {
+      val sets = batches.map(b => b.ts.flatMap(ts => entry(b, ts).orElse(
+        readDelKeys(b, physKeys).map { k =>
+          StampedCache.shared.put(qroot, SnapshotTable.delKeysName(b.id), ts, k)
+          k
+        })))
+      if (sets.forall(_.isDefined)) Some(sets.flatten) else None
+    }
+  }
+
+  /** A small sidecar's key columns, read on the driver by Spark's
+    * vectorized parquet reader: no Spark job. None when a key's type is
+    * outside [[SnapshotTable.plainKeyType]] or is a date/time (the
+    * path-opened reader reads no INT96 timestamps and does no datetime
+    * rebase) — that batch's group keeps the sidecar anti-join. */
+  private def readDelKeys(b: SnapMeta,
+                          physKeys: Seq[String]): Option[SnapshotTable.CapturedDelKeys] = {
+    import org.apache.spark.sql.types.{DateType, StructType, TimestampNTZType, TimestampType}
+    import scala.jdk.CollectionConverters._
+    val files = parquetFiles(delRowsPath(b)).toSeq
+    files.headOption.map(keyFields(_, physKeys)).flatMap { schema =>
+      if (!schema.forall(f => SnapshotTable.plainKeyType(f.dataType) &&
+          !Seq(DateType, TimestampType, TimestampNTZType).contains(f.dataType))) None
+      else {
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(schema)
+        val rows = files.flatMap { f =>
+          val r = new org.apache.spark.sql.execution.datasources.parquet
+            .VectorizedParquetRecordReader(false, SnapshotTable.SmallSidecarRowCap)
+          try {
+            r.initialize(f.toString, physKeys.asJava)
+            r.initBatch(new StructType(), null)
+            val out = Seq.newBuilder[org.apache.spark.sql.Row]
+            while (r.nextBatch())
+              r.resultBatch().rowIterator().asScala
+                .foreach(ir => out += toRow(ir).asInstanceOf[org.apache.spark.sql.Row])
+            out.result()
+          } finally r.close()
+        }
+        Some(SnapshotTable.CapturedDelKeys(physKeys, schema, rows.distinct))
+      }
+    }
+  }
+
+  /** `keys`' fields of `file`'s footer schema ([[SnapshotTable.footerSchema]]). */
+  private def keyFields(file: Path, keys: Seq[String]): org.apache.spark.sql.types.StructType = {
+    val full = SnapshotTable.footerSchema(spark, file)
+    org.apache.spark.sql.types.StructType(keys.map(full(_)))
+  }
+
+  /** The parquet data files under `dir`, in listing order, recursing into
+    * hive partition dirs and skipping `_`/`.`-prefixed entries as Spark's
+    * file index does. Lazy: a caller wanting one file lists no further. */
+  private def parquetFiles(dir: Path): Iterator[Path] = {
+    val base = fs.makeQualified(dir).toString
+    val it = fs.listFiles(dir, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !fs.makeQualified(p).toString.stripPrefix(base).split('/')
+          .exists(c => c.startsWith("_") || c.startsWith(".")))
+  }
+
+  /** The fold of a SMALL key set. A single non-floating key whose type
+    * equals the data column's folds as the predicate `k IS NULL OR NOT k
+    * IN (…)` — exactly the anti-join's survivors (a NULL data key matches
+    * nothing; NULL set members match nothing, so they are left out) with
+    * no join and no broadcast job. Anything else anti-joins a
+    * driver-local frame of the set: no sidecar listing, no scan stage. */
+  private def keySetFold(sets: Seq[SnapshotTable.CapturedDelKeys],
+                         keys: Seq[String]): DataFrame => DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val schema = org.apache.spark.sql.types.StructType(
+      sets.head.schema.map(_.copy(nullable = true)))
+    val all = sets.flatMap(_.rows).distinct
+    lazy val local = {
+      val l = spark.createDataFrame(java.util.Arrays.asList(all: _*), schema)
+      broadcast(if (schema.fieldNames.toSeq == keys) l else l.toDF(keys: _*))
+    }
+    d => keys match {
+      case Seq(k) if SnapshotTable.plainKeyType(schema.head.dataType) &&
+          d.schema.find(_.name == k).exists(_.dataType == schema.head.dataType) =>
+        val values = all.map(_.get(0)).filter(_ != null)
+          .map(v => lit(v).cast(schema.head.dataType))
+        if (values.isEmpty) d else d.filter(col(k).isNull || !col(k).isin(values: _*))
+      case _ => d.join(local, keys, "left_anti")
+    }
+  }
+
+  /** The fold of a LARGE (or unsized) key set: ONE multi-path read of the
+    * group's sidecars, not a per-batch union — a 100-statement delete
+    * trickle otherwise costs O(batches) scan plans on EVERY read. The read
+    * takes its key schema from one footer (every sidecar of the group
+    * carries the same key columns at the same widen epoch), so it runs no
+    * inference job. No distinct: a left_anti probe is insensitive to
+    * build-side duplicates, and sidecar rows are disjoint by construction
+    * (a re-delete of an already-deleted key matches nothing). */
+  private def sidecarFold(batches: Seq[SnapMeta], physKeys: Seq[String],
+                          keys: Seq[String]): DataFrame => DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val paths = batches.map(b => delRowsPath(b).toString)
+    val keySchema = batches.iterator.flatMap(b => parquetFiles(delRowsPath(b)))
+      .nextOption().map(keyFields(_, physKeys))
+    val keyDf0 = withDriverListing {
+      keySchema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
+    }.select(physKeys.map(col): _*)
+    val keyDf = if (physKeys == keys) keyDf0 else keyDf0.toDF(keys: _*)
+    // metadata records every batch's delete-row count: when the combined
+    // delete set's estimated BUILD BYTES (rows × schema-derived key width)
+    // are provably small, hint the broadcast instead of letting AQE
+    // discover it through an extra sizing stage — the CostJoin stance
+    // (decide from table-owned metadata); unknown or large sets keep the
+    // planner's choice
+    val rows = batches.flatMap(delRowCount)
+    val hinted =
+      if (rows.length == batches.length &&
+          rows.sum * keyRowWidth(keyDf, keys) <= SnapshotTable.MaxDelBroadcastBytes)
+        org.apache.spark.sql.functions.broadcast(keyDf)
+      else keyDf
+    d => d.join(hinted, keys, "left_anti")
   }
 
   /** Union `members`' DataFrames with the chain's equality deletes
@@ -2981,10 +3079,13 @@ final class SnapshotTable(
 
   /** Read a COMMITTED snapshot dir — whole (`files` empty), or an
     * explicit surviving-file subset under hive `basePath` — passing the
-    * dir's cached inferred schema when available: skipping re-inference
+    * dir's cached read schema when available: skipping re-inference
     * removes the footer-read + DataSource-resolution cost (~70 ms per
     * read construction on the MoR trickle) every read construction paid.
-    * Staged/markerless dirs fall back to plain inference, uncached. */
+    * A miss reads one footer on the driver ([[SnapshotTable.footerSchema]])
+    * instead of Spark's inference job; partition columns are still inferred
+    * from the paths. Staged/markerless dirs fall back to plain inference,
+    * uncached. */
   private def snapDirRead(ownerId: Long, files: Seq[String] = Seq.empty): DataFrame = {
     val dir = fs.makeQualified(snapDir(ownerId)).toString
     val (reader, paths) =
@@ -3005,7 +3106,10 @@ final class SnapshotTable(
             qualifiedRoot, name, s) match {
           case Some(sch) => reader.schema(sch).parquet(paths: _*)
           case None =>
-            val df = reader.parquet(paths: _*)
+            val file = files.headOption.map(new Path(_))
+              .orElse(parquetFiles(snapDir(ownerId)).nextOption())
+            val df = file.fold(reader)(f => reader.schema(SnapshotTable.footerSchema(spark, f)))
+              .parquet(paths: _*)
             StampedCache.shared.put(qualifiedRoot, name, s, df.schema)
             df
         }
@@ -3338,8 +3442,7 @@ final class SnapshotTable(
     // distributed frame with limit+collect would EXECUTE its plan once
     // just to look — for a CDC window that is a whole change-scan thrown
     // away (the very regression measured on q132/q141 mid-round)
-    val isLocal = selected.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val isLocal = isLocalFrame(selected)
     val raw =
       if (isLocal) selected.limit(bound + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
@@ -3601,6 +3704,12 @@ final class SnapshotTable(
     out.get
   }
 
+  /** Is `df` a driver-local frame (its optimized plan one LocalRelation)?
+    * Collecting it runs no Spark job. */
+  private def isLocalFrame(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
   /** MERGE-ON-READ UPSERT — one ATOMIC `mor` commit (the Iceberg MoR
     * MERGE shape): every target row whose `keys` match a `source` row is
     * replaced by it, unmatched source rows insert — and NO data file is
@@ -3614,13 +3723,19 @@ final class SnapshotTable(
     * are non-unique (ALL old rows with a matched key are replaced). */
   def upsertByKeys(source: DataFrame, keys: Seq[String]): (Long, Long) = {
     val srcKeys = source.select(keys.map(source.col): _*)
-    // one grouped aggregate answers the dup check (the old
-    // distinct.count == count pair ran two full count jobs per upsert)
-    require(srcKeys.groupBy(keys.map(srcKeys.col): _*)
+    // a LOCAL source ([[isLocalFrame]]) with plain key types
+    // answers the dup check on its collected rows — no job; anything else
+    // runs one grouped aggregate (the old distinct.count == count pair ran
+    // two full count jobs per upsert)
+    val driverCheck = isLocalFrame(srcKeys) &&
+      srcKeys.schema.forall(f => SnapshotTable.plainKeyType(f.dataType))
+    val unique =
+      if (driverCheck) { val ks = srcKeys.collect(); ks.distinct.length == ks.length }
+      else srcKeys.groupBy(keys.map(srcKeys.col): _*)
         .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)).as("__n"))
-        .filter(org.apache.spark.sql.functions.col("__n") > 1L).isEmpty,
-      s"MoR upsert source has duplicate keys on (${keys.mkString(", ")})")
+        .filter(org.apache.spark.sql.functions.col("__n") > 1L).isEmpty
+    require(unique, s"MoR upsert source has duplicate keys on (${keys.mkString(", ")})")
     val (replaced, inserted, _) = morCommit(source, srcKeys, keys)
     (replaced, inserted)
   }
@@ -3857,8 +3972,7 @@ final class SnapshotTable(
     // LOCAL-frame guard exactly as in deleteByKeys: never probe a
     // distributed key frame (a CDC window) with limit+collect — that
     // executes its plan once extra; those take the distinct path below
-    val isLocal = selected.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val isLocal = isLocalFrame(selected)
     val raw =
       if (isLocal) selected.limit(bound + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
@@ -4482,7 +4596,10 @@ object SnapshotTable {
     * dominant per-statement cost (measured: 0.16 s of plan construction +
     * a 50-path sidecar scan per statement at chain 50).
     *
-    * Cached in [[StampedCache]] under [[delKeysName]]. Correctness guards,
+    * Cached in [[StampedCache]] under [[delKeysName]] — the write-through
+    * of the entry a read otherwise loads on a miss by reading the
+    * sidecar's own key columns on the driver (the MATCHED keys, exact for
+    * any process). Correctness guards for the capture,
     * all checked at USE time in [[applyEqDeletes]]: the marker's commit
     * timestamp must equal the entry's stamp (a drop+recreate landing the
     * same id writes a different ts), the physical key columns must
@@ -4502,6 +4619,35 @@ object SnapshotTable {
       schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.Row])
   private[graft] def delKeysName(id: Long): String = f"snap-$id%05d.delkeys"
+
+  /** The Spark read schema of one parquet file, from its footer read on
+    * the driver with the session's parquet conversion settings — what
+    * Spark's inference computes from the same footer, without its job. */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  file: Path): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Key types whose driver-side handling is Spark's exactly: Scala
+    * equality on their external values is Spark's grouping equality, and
+    * `IN` on them is join equality. Floating point (NaN, ±0.0), binary
+    * (array identity), collated strings and nested types are out. */
+  private[warehouse] def plainKeyType(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType |
+           DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+      case s: StringType => s == StringType
+      case _ => false
+    }
+  }
 
   /** Coerce a filter bound to the numeric axis of a stat kind. None =
     * not comparable on this axis → the caller must keep the file. */

@@ -10,10 +10,11 @@ package graft.warehouse
   *    retired-notes ledger are stamped by their (length, mtime);
   *  - a snapshot dir's inferred read schema by its OWNING marker's
   *    (length, mtime) — committed dirs are immutable;
-  *  - a requested-delete-key capture by its marker's commit ts
+  *  - a delete batch's key set (captured at commit, or read from its
+  *    sidecar on a miss) by its marker's commit ts
   *    ([[SnapshotTable.CapturedDelKeys]]).
   *
-  * Entry names are the file names (plus `.delkeys` for captures), so one
+  * Entry names are the file names (plus `.delkeys` for key sets), so one
   * name always holds one value type. The bound is LRU — an access-ordered
   * map behind one lock — so a long trickle drops its least recently read
   * entries (stale markers, captures of compacted batches) instead of

@@ -1579,4 +1579,32 @@ class BcdrSpec extends SparkSpec {
     assert(oc.read().exceptAll(sClean.read()).isEmpty &&
       sClean.read().exceptAll(oc.read()).isEmpty)
   }
+
+  test("a failing member's cycle waits for its siblings' staging before " +
+    "the secondary turns read-only again, then fails with that error") {
+    val primary = new Catalog(spark, freshDir("wait-pri"), "pri")
+    val secondary = new Catalog(spark, freshDir("wait-sec"), "sec")
+    secondary.readOnly = true
+    primary.createSchema("adv")
+    val a = primary.table("adv", "fails")
+    val b = primary.table("adv", "slow")
+    a.createOrReplace(Seq((1L, "a")).toDF("id", "v"))
+    b.createOrReplace(spark.range(300000).toDF("id")
+      .withColumn("v", concat(lit("v"), col("id"))))
+    val repl = new ReplicationService(primary, secondary)
+    repl.createGroup("core", Seq(("adv", "fails"), ("adv", "slow")),
+      includeViews = false)
+    // member "fails" is cut at snapshot 0, which no table has: its
+    // bootstrap copy throws at once, while "slow" is still copying
+    val heads = repl.recordHeads("core") + (("adv", "fails") -> 0L)
+    val e = intercept[IllegalArgumentException](
+      repl.stageIncrementalCycle("core", heads, Map.empty))
+    assert(e.getMessage.contains("no snapshot ≤ 0"), e.getMessage)
+    assert(secondary.readOnly, "the flag is restored after the failure")
+    // by the time the cycle failed, the slow member had finished its copy
+    // under the unlocked flag — none of its writes raced the restore
+    val sb = secondary.table("adv", "slow")
+    assert(sb.exists && sb.count() === 300000L,
+      "the sibling's staging finished before the cycle returned")
+  }
 }

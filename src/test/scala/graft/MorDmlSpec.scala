@@ -599,13 +599,22 @@ class MorDmlSpec extends SparkSpec {
     // the scale shape: the delete side is metadata-proven small (marker /
     // .excl row counts), so the read must plan BroadcastHashJoin LeftAnti
     // — a sort-merge anti-join would shuffle the full table per sidecar
+    // — a sort-merge anti-join would shuffle the full table per sidecar.
+    // A small single-key set goes further: it folds as a predicate, no
+    // join at all; a composite key keeps the broadcast anti-join
     val t = eightFiles("mor-plan")
     t.deleteByKeys(Seq("id"), Seq(10L, 20L).toDF("id"))
     t.upsertByKeys(Seq((30L, "U")).toDF("id", "v"), Seq("id"))
     val plan = t.read().queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"small MoR batches must apply as broadcast anti-joins:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
+    assert(!plan.contains("Join") && !plan.contains("Exchange") &&
+        plan.contains("NOT id#"),
+      s"a small single-key set must fold as a predicate:\n$plan")
+    val c = eightFiles("mor-plan2")
+    c.deleteByKeys(Seq("id", "v"), Seq((10L, "v10"), (20L, "v20")).toDF("id", "v"))
+    val cPlan = c.read().queryExecution.executedPlan.toString
+    assert(cPlan.contains("BroadcastHashJoin") && cPlan.contains("LeftAnti"),
+      s"small composite-key batches must apply as broadcast anti-joins:\n$cPlan")
+    assert(!plan.contains("SortMergeJoin") && !cPlan.contains("SortMergeJoin"),
       "no shuffle anti-join for a metadata-proven-small delete side")
   }
 
@@ -652,13 +661,33 @@ class MorDmlSpec extends SparkSpec {
     assert(df.count() === 800L + 200L - 4L)
     assert(delRelsOf(df).isEmpty,
       s"captured folds must not scan sidecar dirs, saw ${delRelsOf(df).size}")
-    // a FRESH process (no capture) must fall back to the sidecar read —
-    // same survivors — and still build each key-set frame ONCE
+    // a FRESH process (no capture) reads the small sidecars' keys on the
+    // driver — same survivors, still zero sidecar-dir scans
     graft.warehouse.StampedCache.shared.evictRoot(t.qualifiedRoot)
-    val (df2, _) = t.readPruned(Seq.empty)
-    assert(df2.count() === 800L + 200L - 4L,
-      "the sidecar-read fold must keep the same survivors as the capture")
-    val delRels = delRelsOf(df2)
+    val (df1, _) = t.readPruned(Seq.empty)
+    assert(df1.count() === 800L + 200L - 4L,
+      "the driver-read fold must keep the same survivors as the capture")
+    assert(delRelsOf(df1).isEmpty,
+      s"small driver-read folds must not scan sidecar dirs, saw ${delRelsOf(df1).size}")
+    // a LARGE group (past SmallSidecarRowCap) falls back to the sidecar
+    // read — same survivors — and still builds each key-set frame ONCE
+    val b = new SnapshotTable(spark, freshRoot("mor-reuse-big"))
+    b.createOrReplace(spark.range(6000).toDF("id").withColumn("v", lit("v")))
+    b.append(spark.range(6000, 6100).toDF("id").withColumn("v", lit("a")))
+    b.append(spark.range(6100, 6200).toDF("id").withColumn("v", lit("b")))
+    b.deleteByKeys(Seq("id"), spark.range(0, 6200, 2).toDF("id")) // 3100 rows
+    b.deleteByKeys(Seq("id"), spark.range(1, 3000, 2).toDF("id")) // 1500 rows
+    val bigDelDirs = b.snapshots().collect { case (id, "del") => f"snap-$id%05d" }
+    val (df2, plan2) = b.readPruned(Seq.empty)
+    assert(plan2.files.size === 3, "base + two appends survive planning")
+    assert(df2.count() === 6200L - 3100L - 1500L,
+      "the sidecar-read fold must keep the same survivors")
+    val delRels = df2.queryExecution.logical.collect {
+      case l: LogicalRelation
+        if l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources
+          .HadoopFsRelation].location.rootPaths
+          .exists(p => bigDelDirs.exists(p.toString.contains)) => l
+    }
     assert(delRels.size >= 3,
       s"the delete fold must apply once per data dir, saw ${delRels.size}")
     // the analyzer re-aliases repeated occurrences (fresh exprIds per
@@ -728,18 +757,16 @@ class MorDmlSpec extends SparkSpec {
     assert(t.read().orderBy("id").collect() === preRead, "current state unchanged")
     assert(t.asOf(midId).orderBy("id").collect() === preMid,
       "time travel to mid-trickle unchanged (originals still apply there)")
-    // the read plan folds ONE anti-join group referencing ONE sidecar dir
-    val mergeDir = f"snap-${merges.head}%05d"
+    // the read folds ONE group from ONE sidecar: a fresh process loads
+    // the merged sidecar's key set alone (the originals are superseded)
     val delDirs = t.snapshots().collect { case (id, "del") => f"snap-$id%05d" }
     assert(delDirs.size === 11, "ten originals plus the merge stay in history")
-    val delPaths = t.read().queryExecution.logical.collect {
-      case l: LogicalRelation =>
-        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources
-          .HadoopFsRelation].location.rootPaths.map(_.toString)
-          .filter(p => delDirs.exists(p.endsWith))
-    }.flatten.distinct
-    assert(delPaths.nonEmpty && delPaths.forall(_.endsWith(mergeDir)),
-      s"post-merge reads must anti-join ONLY the merged sidecar, saw $delPaths")
+    graft.warehouse.StampedCache.shared.evictRoot(t.qualifiedRoot)
+    assert(t.read().orderBy("id").collect() === preRead)
+    val loaded = graft.warehouse.StampedCache.shared.names(t.qualifiedRoot)
+      .filter(_.endsWith(".delkeys"))
+    assert(loaded === Seq(SnapshotTable.delKeysName(merges.head)),
+      s"post-merge reads must fold ONLY the merged sidecar, saw $loaded")
     // CDC across the merge stays single-counted: the window spanning the
     // trickle AND the merge emits exactly the 10 original deletes
     val cs = t.rowChangesBetween(s0, t.currentSnapshotId.get).get
