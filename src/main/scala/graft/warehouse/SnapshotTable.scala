@@ -982,33 +982,44 @@ final class SnapshotTable(
       .foreach(f => try fs.delete(f, false) catch { case _: Exception => () })
   }
 
-  /** Maintenance sweep for claims abandoned by CRASHED writers: reap every
-    * claim file older than `ttlMs` along with its markerless data dir.
-    * Explicit (an operator/maintenance call, like [[expireSnapshots]]),
-    * never automatic: reaping a LIVE writer's claim would let two
-    * processes write one snapshot dir, so `ttlMs` must exceed the longest
-    * possible commit — default one hour. */
+  /** Maintenance sweep for ids abandoned by CRASHED writers: reap every
+    * claim file older than `ttlMs` along with its markerless artifacts,
+    * and every stale optimistic-writer placeholder — a `.staged` marker
+    * with no `.meta` and no `wap=` token, which took over its id from the
+    * claim ([[optimisticCommit]]) — along with its artifacts. WAP stages
+    * are never touched ([[discardStaged]] owns them). Explicit (an
+    * operator/maintenance call, like [[expireSnapshots]]), never
+    * automatic: reaping a LIVE writer's claim or placeholder would let
+    * two processes write one snapshot dir, so `ttlMs` must exceed the
+    * longest possible commit — default one hour. Returns the number of
+    * claims and placeholders reaped. */
   def sweepStaleClaims(ttlMs: Long = 60L * 60 * 1000): Int = {
     val p = new Path(root)
     if (!fs.exists(p)) return 0
     val cutoff = System.currentTimeMillis() - ttlMs
-    val stale = fs.listStatus(p).toSeq
-      .filter(s => s.getPath.getName.contains(".claim.") &&
-        s.getModificationTime < cutoff)
-    stale.foreach { s =>
-      val id = s.getPath.getName.stripPrefix("snap-").takeWhile(_.isDigit).toLong
+    val old = fs.listStatus(p).toSeq.filter(_.getModificationTime < cutoff)
+      .map(s => (s.getPath, s.getPath.getName.stripPrefix("snap-").takeWhile(_.isDigit)))
+      .collect { case (f, n) if n.nonEmpty => (f, n.toLong) }
+    val claims = old.filter(_._1.getName.contains(".claim."))
+    // an unparseable placeholder is a torn create: reap it too
+    val placeholders = old.filter { case (f, id) =>
+      f.getName.endsWith(".staged") && !fs.exists(metaFile(id)) &&
+        scala.util.Try(wapOf(parseMarker(id, f))).toOption.flatten.isEmpty
+    }
+    claims.foreach { case (f, id) =>
       try {
-        fs.delete(s.getPath, false)
-        // the crashed writer's half-written dir(s) are orphans no reader
-        // ever saw — reclaim them unless the id (re)committed meanwhile
+        fs.delete(f, false)
+        // the crashed writer's half-written artifacts are orphans no
+        // reader ever saw — reclaim them unless the id (re)committed or
+        // staged meanwhile
         if (fs.exists(snapDir(id)) && !fs.exists(metaFile(id)) &&
-            !fs.exists(stagedFile(id))) {
-          fs.delete(snapDir(id), true)
-          fs.delete(delRowsDir(id), true)
-        }
+            !fs.exists(stagedFile(id))) discardArtifacts(id)
       } catch { case _: Exception => () }
     }
-    stale.size
+    placeholders.foreach { case (_, id) =>
+      try discardArtifacts(id) catch { case _: Exception => () }
+    }
+    claims.size + placeholders.size
   }
 
   /** Iceberg `remove_orphan_files`: reclaim snapshot artifacts NO marker,
@@ -1181,8 +1192,7 @@ final class SnapshotTable(
   private def writeMarker(id: Long, kind: String, parts: Seq[String], rows: Long,
                           sort: Seq[String], note: Option[String]): Long = {
     val ts = System.currentTimeMillis()
-    val line = s"$kind|${parts.mkString(",")}|$rows|${sort.mkString(",")}|" +
-      s"${note.map(esc).getOrElse("")}|$ts"
+    val line = markerLine(kind, parts, rows, sort, note, ts)
     // write-then-rename so the commit point is ATOMIC: a live tail lists
     // markers without the commit lock, and a create-then-write marker is
     // briefly visible EMPTY — the tail would parse a kindless snapshot,
@@ -1208,8 +1218,7 @@ final class SnapshotTable(
                                 rows: Long, sort: Seq[String],
                                 note: Option[String]): Long = {
     val ts = System.currentTimeMillis()
-    val line = s"$kind|${parts.mkString(",")}|$rows|${sort.mkString(",")}|" +
-      s"${note.map(esc).getOrElse("")}|$ts"
+    val line = markerLine(kind, parts, rows, sort, note, ts)
     val tmp = new Path(root, f"snap-$id%05d.staged.stg")
     val out = fs.create(tmp, true)
     try out.write(line.getBytes("UTF-8")) finally out.close()
@@ -1218,6 +1227,123 @@ final class SnapshotTable(
       throw new IllegalStateException(
         s"staged marker write failed for snapshot $id at $root")
     ts
+  }
+
+  /** One marker line in the [[SnapMeta]] format — the single writer of
+    * that format for `.meta` markers, WAP stages and placeholders. */
+  private def markerLine(kind: String, parts: Seq[String], rows: Long,
+                         sort: Seq[String], note: Option[String],
+                         ts: Long = System.currentTimeMillis()): String =
+    s"$kind|${parts.mkString(",")}|$rows|${sort.mkString(",")}|" +
+      s"${note.map(esc).getOrElse("")}|$ts"
+
+  /** A writer's commit point — or, under `wap`, its STAGING point: the
+    * same final line lands in the `.staged` file instead (replacing the
+    * placeholder), and [[publishStaged]] later swaps it to `.meta`
+    * verbatim. Returns the marker's commit-wall-time millis. */
+  private def finalizeMarker(id: Long, kind: String, parts: Seq[String],
+                             rows: Long, sort: Seq[String], note: Option[String],
+                             wap: Option[String] = None): Long = wap match {
+    case Some(w) =>
+      writeStagedMarker(id, kind, parts, rows, sort,
+        Some((note.toSeq :+ s"wap=$w").mkString(" ")))
+    case None =>
+      val ts = writeMarker(id, kind, parts, rows, sort, note)
+      fs.delete(stagedFile(id), false)
+      ts
+  }
+
+  /** Every artifact snapshot `id` can own except its `.meta`: data dir,
+    * delete sidecar, stats, exclusion and staged marker. Discarding an
+    * uncommitted id (a lost race, a failed write, a failed audit, a
+    * crashed writer's placeholder) or an expired one deletes exactly
+    * this list. */
+  private def discardArtifacts(id: Long): Unit = {
+    fs.delete(snapDir(id), true)
+    fs.delete(delRowsDir(id), true)
+    fs.delete(statsFile(id), false)
+    fs.delete(exclFile(id), false)
+    fs.delete(stagedFile(id), false)
+  }
+
+  /** A delete-only `mor` attempt commits as a plain `kind` (`del` or
+    * `pdel`) snapshot: the delete sidecar becomes the data dir — an empty
+    * `mor` data dir would be unreadable and carries nothing. */
+  private def promoteDelRows(id: Long, kind: String): Unit = {
+    fs.delete(snapDir(id), true)
+    fs.delete(statsFile(id), false) // described the empty insert dir
+    require(fs.rename(delRowsDir(id), snapDir(id)),
+      s"mor→$kind conversion rename failed for snapshot $id at $root")
+    fs.delete(exclFile(id), false)
+  }
+
+  /** What one optimistic attempt commits: its placeholder marker's kind
+    * and note, and `write`, which lands the data under the claimed id
+    * and returns the publish step. */
+  private final class Attempt[+T](val kind: String, val note: String,
+                                 val write: Long => (() => T))
+
+  private def stage[T](kind: String, note: String)(
+      write: Long => (() => T)): Either[T, Attempt[T]] =
+    Right(new Attempt(kind, note, write))
+
+  /** THE optimistic commit protocol (Iceberg's write → validate → swap),
+    * shared by every DML writer and both compactions. Each attempt
+    * captures the head and calls `attempt(head)`, which either finishes
+    * without committing (`Left` — a no-op claims nothing) or [[stage]]s a
+    * write. The heavy write runs OUTSIDE the commit lock — an hours-long
+    * 100 TB rewrite must not block ingest — under a claimed id that a
+    * placeholder `.staged` marker holds (visible to [[nextId]] in every
+    * process, invisible to readers and to the WAP surface). The publish
+    * step then runs under the lock iff the head has not moved: a commit
+    * landing mid-write may hold rows the write never saw (a rewritten
+    * base would swallow an append; a matched set would be mis-sequenced),
+    * so the id's artifacts are discarded and the attempt retries on the
+    * new head. A write or publish that throws before the commit point
+    * discards them too. */
+  private def optimisticCommit[T](what: String)(
+      attempt: Long => Either[T, Attempt[T]]): T = {
+    var result: Option[T] = None
+    var attempts = 0
+    while (result.isEmpty) {
+      attempts += 1
+      if (attempts > 50) throw new IllegalStateException(
+        s"$what of $root lost the commit race $attempts times — writer storm?")
+      val head = currentSnapshotId.get
+      attempt(head) match {
+        case Left(done) => result = Some(done)
+        case Right(a) =>
+          val id = withCommitLock {
+            val i = claimId()
+            try {
+              // claim-time orphan sweep: a crashed commit may have left an
+              // unmarked data dir at this id; clear it NOW, because
+              // writeSnapshotData's own sweep (correctly) skips ids
+              // carrying a staged marker — which this one is about to
+              if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i))) discardArtifacts(i)
+              // the placeholder takes over holding the id from the claim
+              val out = fs.create(stagedFile(i))
+              try out.write(markerLine(a.kind, Seq.empty, 0L, Seq.empty,
+                Some(a.note)).getBytes("UTF-8"))
+              finally out.close()
+            } finally releaseClaim(i)
+            i
+          }
+          try {
+            val publish = a.write(id)
+            withCommitLock {
+              if (currentSnapshotId.get == head) result = Some(publish())
+              else discardArtifacts(id) // head moved: the write is stale, retry
+            }
+          } catch { case e: Throwable =>
+            // a throw past the marker rename (the commit point) keeps the
+            // commit; stagedIds() reaps its leftover placeholder
+            if (!fs.exists(metaFile(id))) discardArtifacts(id)
+            throw e
+          }
+      }
+    }
+    result.get
   }
 
   /** A wap id rides the note as a `wap=<id>` token — the same character
@@ -1892,8 +2018,7 @@ final class SnapshotTable(
     val id = claimId()
     try {
       val rows = writeSnapshotData(df, id, partitionSpec(), sortSpec())
-      val line = s"append|${partitionSpec().mkString(",")}|$rows|" +
-        s"${sortSpec().mkString(",")}|${esc(s"wap=$wapId")}|${System.currentTimeMillis()}"
+      val line = markerLine("append", partitionSpec(), rows, sortSpec(), Some(s"wap=$wapId"))
       val out = fs.create(stagedFile(id)) // staged marker last = staging point
       try out.write(line.getBytes("UTF-8")) finally out.close()
     } finally releaseClaim(id)
@@ -1910,11 +2035,12 @@ final class SnapshotTable(
       .map(_.stripPrefix("wap=")))
 
   /** (provisionalId, wapId) for every staged-but-unpublished snapshot.
-    * Only true WAP stages (a `wap=<id>` note token) surface here:
-    * compact()'s claimed-id placeholder also lives as a `.staged` marker
-    * (note "compacting") to stay visible to `nextId`, but it is not
+    * Only true WAP stages (a `wap=<id>` note token) surface here: every
+    * optimistic writer's claimed-id placeholder ([[optimisticCommit]])
+    * also lives as a `.staged` marker (note "compacting", "deleting",
+    * "upserting", …) to stay visible to `nextId`, but it is not
     * auditable / publishable / discardable, so the WAP enumeration must
-    * not offer it. */
+    * not offer it ([[sweepStaleClaims]] reaps a crashed writer's). */
   def stagedSnapshots(): Seq[(Long, String)] =
     stagedMetas().flatMap(m => wapOf(m).map(w => (m.id, w)))
 
@@ -1990,13 +2116,7 @@ final class SnapshotTable(
     * never saw them. */
   def discardStaged(wapId: String): Unit = {
     writeGuard()
-    stagedMetas().filter(wapOf(_).contains(wapId)).foreach { m =>
-      fs.delete(snapDir(m.id), true)
-      fs.delete(delRowsDir(m.id), true)
-      fs.delete(statsFile(m.id), false)
-      fs.delete(exclFile(m.id), false)
-      fs.delete(stagedFile(m.id), false)
-    }
+    stagedMetas().filter(wapOf(_).contains(wapId)).foreach(m => discardArtifacts(m.id))
   }
 
   // ---- named refs: TAGS and BRANCHES (the Iceberg branching model) ----
@@ -2086,11 +2206,7 @@ final class SnapshotTable(
     aged.foreach { r =>
       if (r.kind == "branch")
         stagedMetas().filter(_.note.contains(s"wap=${branchWap(r.name)}"))
-          .foreach { m =>
-            fs.delete(snapDir(m.id), true)
-            fs.delete(statsFile(m.id), false)
-            fs.delete(stagedFile(m.id), false)
-          }
+          .foreach(m => discardArtifacts(m.id))
       fs.delete(refFile(r.name), false)
     }
     aged.map(_.name)
@@ -2339,44 +2455,16 @@ final class SnapshotTable(
   def compact(targetFileBytes: Long = SnapshotTable.DefaultTargetFileBytes): Long = {
     writeGuard()
     require(exists, s"compact of non-existent table at $root")
-    // Optimistic concurrency (Iceberg's RewriteFiles validation): the
-    // heavy rewrite runs OUTSIDE the commit lock — an hours-long 100 TB
-    // compaction must not block ingest — under a claimed id + placeholder
-    // staged marker (invisible to every reader, un-claimable by every
-    // writer). The commit step then validates under the lock that the
-    // head hasn't moved: an append that landed mid-rewrite is NOT in the
-    // rewritten base, so committing anyway would silently swallow it —
-    // instead the rewrite is discarded and retried on the longer chain.
-    // The note distinguishes this base from a REPLACE rewrite: compaction
-    // adds no logical rows, so a streaming tail ([[appendsBetween]]) can
-    // skip it where a true rewrite must fail the stream.
-    var result = -1L
-    var attempts = 0
-    while (result < 0) {
-      attempts += 1
-      if (attempts > 50) throw new IllegalStateException(
-        s"compact of $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
+    // Optimistic ([[optimisticCommit]], Iceberg's RewriteFiles
+    // validation): an append that lands mid-rewrite is NOT in the
+    // rewritten base, so the rewrite is discarded and retried on the
+    // longer chain. The note distinguishes this base from a REPLACE
+    // rewrite: compaction adds no logical rows, so a streaming tail
+    // ([[appendsBetween]]) can skip it where a true rewrite must fail the
+    // stream.
+    optimisticCommit("compact") { head =>
       val chain = asOf(head) // exactly head's chain, even if writers race
-      val id = withCommitLock {
-        val i = claimId()
-        try {
-          // claim-time orphan sweep: a crashed commit may have left an
-          // unmarked data dir at this id; clear it NOW, because
-          // writeSnapshotData's own sweep (correctly) skips ids carrying a
-          // staged marker — which this one is about to
-          if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i)))
-            fs.delete(snapDir(i), true)
-          // the placeholder staged marker takes over holding the id (it is
-          // visible to nextId in every process); the claim releases after
-          val line = s"base|${partitionSpec().mkString(",")}|0|" +
-            s"${sortSpec().mkString(",")}|${esc("compacting")}|${System.currentTimeMillis()}"
-          val out = fs.create(stagedFile(i))
-          try out.write(line.getBytes("UTF-8")) finally out.close()
-        } finally releaseClaim(i)
-        i
-      }
-      try {
+      stage("base", "compacting") { id =>
         // Bin-pack the rewrite (Iceberg rewrite_data_files `target-file-
         // size-bytes`): without an explicit shape, the output inherits one
         // file per input task — a 50-deep chain of micro-batches compacts
@@ -2398,28 +2486,12 @@ final class SnapshotTable(
             chain.repartition(nParts, partCols.map(chain.col): _*)
           else chain.repartition(nParts)
         val rows = writeSnapshotData(sized, id, partitionSpec(), sortSpec())
-        withCommitLock {
-          if (currentSnapshotId.get == head) {
-            writeMarker(id, "base", partitionSpec(), rows, sortSpec(), Some("compact"))
-            fs.delete(stagedFile(id), false)
-            result = id
-          } else {
-            // validation failed: a commit landed during the rewrite and
-            // its rows are missing from this base — discard, retry
-            fs.delete(snapDir(id), true)
-            fs.delete(statsFile(id), false)
-            fs.delete(stagedFile(id), false)
-          }
+        () => {
+          finalizeMarker(id, "base", partitionSpec(), rows, sortSpec(), Some("compact"))
+          id
         }
-      } catch {
-        case e: Throwable =>
-          fs.delete(snapDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(stagedFile(id), false)
-          throw e
       }
     }
-    result
   }
 
   /** MINOR (delete-sidecar-only) COMPACTION — the Iceberg
@@ -2456,14 +2528,9 @@ final class SnapshotTable(
     writeGuard()
     require(exists, s"compactDeletes of non-existent table at $root")
     require(minRun >= 2, s"minRun must be ≥ 2, got $minRun")
-    val committed = Seq.newBuilder[Long]
-    var done = false
-    var attempts = 0
-    while (!done) {
-      attempts += 1
-      if (attempts > 50) throw new IllegalStateException(
-        s"compactDeletes of $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
+    // one merge per helper call: the commit itself moves the head, so the
+    // next call recomputes runs on the fresh chain
+    def mergeOne(): Option[Long] = optimisticCommit("compactDeletes") { head =>
       val chain = dataChainAt(head)
       val sup = supersededIds(chain)
       val live = chain.filter(_.kind == "del").filterNot(m => sup(m.id))
@@ -2497,10 +2564,8 @@ final class SnapshotTable(
       // positional sidecars: ALL live ones share a frontier (absolute
       // file identity) — one candidate run of the whole set
       val pruns = chain.filter(_.kind == "pdel").filterNot(m => sup(m.id))
-      if (runs.isEmpty && pruns.size < minRun) done = true
+      if (runs.isEmpty && pruns.size < minRun) Left(None)
       else {
-        // one merge per loop turn: the commit itself moves the head, so
-        // the next turn recomputes runs on the fresh chain
         val (kind, note, members) =
           if (runs.nonEmpty) {
             val (keys, ms) = runs.minBy(_._2.map(delSeq).min)
@@ -2509,23 +2574,7 @@ final class SnapshotTable(
           } else
             ("pdel", s"seq=${pruns.map(delSeq).min} " +
               s"merged=${pruns.map(_.id).mkString(",")}", pruns)
-        val id = withCommitLock {
-          val i = claimId()
-          try {
-            if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i)))
-              fs.delete(snapDir(i), true)
-            val line = s"$kind||0||${esc("merging deletes")}|${System.currentTimeMillis()}"
-            val o = fs.create(stagedFile(i))
-            try o.write(line.getBytes("UTF-8")) finally o.close()
-          } finally releaseClaim(i)
-          i
-        }
-        def cleanup(): Unit = {
-          fs.delete(snapDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(stagedFile(id), false)
-        }
-        try {
+        stage(kind, "merging deletes") { id =>
           // the union is a few tiny sidecar dirs — rows within a run are
           // DISJOINT (a re-delete of an already-deleted key or position
           // matches nothing, so no sidecar ever repeats another's rows)
@@ -2535,17 +2584,14 @@ final class SnapshotTable(
             .reduce(_.unionByName(_, allowMissingColumns = true))
             .coalesce(1)
           val rows = writeSnapshotData(union, id, Seq.empty, Seq.empty)
-          withCommitLock {
-            if (currentSnapshotId.get == head) {
-              writeMarker(id, kind, Seq.empty, rows, Seq.empty, Some(note))
-              fs.delete(stagedFile(id), false)
-              committed += id
-            } else cleanup() // chain moved mid-merge: recompute runs
+          () => {
+            finalizeMarker(id, kind, Seq.empty, rows, Seq.empty, Some(note))
+            Some(id)
           }
-        } catch { case e: Throwable => cleanup(); throw e }
+        }
       }
     }
-    committed.result()
+    Iterator.continually(mergeOne()).takeWhile(_.isDefined).flatten.toSeq
   }
 
   /** Live delete-sidecar batches every current read must anti-join —
@@ -3278,11 +3324,9 @@ final class SnapshotTable(
     * at 100 TB, almost all of them — are carried by reference: a DELETE
     * of one key rewrites one file, not the table.
     *
-    * Concurrency follows [[compact]]'s optimistic loop: the heavy rewrite
-    * runs OUTSIDE the commit lock under a claimed id + placeholder staged
-    * marker, then validates at commit that the head hasn't moved (an
-    * append landing mid-rewrite may hold matching rows this rewrite never
-    * saw — the plan is stale, discard and retry on the longer chain).
+    * Optimistic ([[optimisticCommit]]): an append landing mid-rewrite
+    * may hold matching rows this rewrite never saw — the plan is stale,
+    * discard and retry on the longer chain.
     *
     * Returns (snapshotId, plan, replacedRows, rewrittenRows);
     * snapshotId = -1 for the metadata-only no-op (no file can match and
@@ -3292,80 +3336,46 @@ final class SnapshotTable(
                         (transform: DataFrame => DataFrame): (Long, ScanPlan, Long, Long) = {
     writeGuard()
     require(exists, s"DML on non-existent table at $root")
-    var out: Option[(Long, ScanPlan, Long, Long)] = None
-    var attempts = 0
-    while (out.isEmpty) {
-      attempts += 1
-      if (attempts > 50) throw new IllegalStateException(
-        s"cow rewrite of $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
+    optimisticCommit("cow rewrite") { _ =>
       val plan = planFilesAny(alternatives)
-      if (plan.filesKept == 0 && emptyPlanIsNoop) return (-1L, plan, 0L, 0L)
-      // pending equality deletes fold into the rewrite (readPlanned
-      // anti-joins them): the rewritten files physically materialize those
-      // deletes — without this a cow landing after a MoR delete would
-      // resurrect its rows (the rewrite's id orders after the del, so the
-      // read-path anti-join no longer covers them)
-      val hasDels =
-        (liveDels().nonEmpty || livePosDels().nonEmpty) && plan.filesKept > 0
-      val touched =
-        if (plan.filesKept == 0) read().limit(0) // MERGE into no matching file: pure insert
-        else readPlanned(plan)
-      // replaced-rows accounting must be LOGICAL: with folded MoR deletes
-      // the replaced files physically hold rows that were already deleted,
-      // so callers' "rows removed" math needs the LIVE count of the
-      // touched set (one extra pass over only the touched files; skipped
-      // entirely on the no-del fast path)
-      val touchedLive = if (hasDels) touched.count() else -1L
-      val rewritten = transform(touched)
-      val id = withCommitLock {
-        val i = claimId()
-        try {
-          if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i)))
-            fs.delete(snapDir(i), true)
-          // placeholder staged marker holds the id across the rewrite
-          // (invisible to readers AND to the WAP surface — only wap= notes
-          // list in stagedSnapshots)
-          val line = s"cow|${partitionSpec().mkString(",")}|0|" +
-            s"${sortSpec().mkString(",")}|${esc("rewriting")}|${System.currentTimeMillis()}"
-          val o = fs.create(stagedFile(i))
-          try o.write(line.getBytes("UTF-8")) finally o.close()
-        } finally releaseClaim(i)
-        i
-      }
-      try {
-        val rows = writeSnapshotData(rewritten, id, partitionSpec(), sortSpec())
-        val replaced = plan.files.flatMap(_._2)
-        val exclRows = replaced.map(footerRowCount).sum
-        val exclBytes = replaced.map(f => fs.getFileStatus(new Path(f)).getLen).sum
-        withCommitLock {
-          if (currentSnapshotId.get == head) {
+      if (plan.filesKept == 0 && emptyPlanIsNoop) Left((-1L, plan, 0L, 0L))
+      else {
+        // pending equality deletes fold into the rewrite (readPlanned
+        // anti-joins them): the rewritten files physically materialize
+        // those deletes — without this a cow landing after a MoR delete
+        // would resurrect its rows (the rewrite's id orders after the
+        // del, so the read-path anti-join no longer covers them)
+        val hasDels =
+          (liveDels().nonEmpty || livePosDels().nonEmpty) && plan.filesKept > 0
+        val touched =
+          if (plan.filesKept == 0) read().limit(0) // MERGE into no matching file: pure insert
+          else readPlanned(plan)
+        // replaced-rows accounting must be LOGICAL: with folded MoR
+        // deletes the replaced files physically hold rows that were
+        // already deleted, so callers' "rows removed" math needs the LIVE
+        // count of the touched set (one extra pass over only the touched
+        // files; skipped entirely on the no-del fast path)
+        val touchedLive = if (hasDels) touched.count() else -1L
+        val rewritten = transform(touched)
+        stage("cow", "rewriting") { id =>
+          val rows = writeSnapshotData(rewritten, id, partitionSpec(), sortSpec())
+          val replaced = plan.files.flatMap(_._2)
+          val exclRows = replaced.map(footerRowCount).sum
+          val exclBytes = replaced.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+          () => {
             // excl sidecar BEFORE the marker: the marker rename is the
             // commit point, so no reader ever sees a cow without its
-            // replaced-file manifest
-            // the sidecar records PHYSICAL file contents (what a reader of
-            // those files would see); the returned replaced count is the
-            // LIVE rows when MoR deletes were folded into this rewrite
+            // replaced-file manifest. The sidecar records PHYSICAL file
+            // contents (what a reader of those files would see); the
+            // returned replaced count is the LIVE rows when MoR deletes
+            // were folded into this rewrite
             writeExclusion(id, replaced.map(relToRoot), exclRows, exclBytes)
-            writeMarker(id, "cow", partitionSpec(), rows, sortSpec(), Some(note))
-            fs.delete(stagedFile(id), false)
-            out = Some((id, plan, if (hasDels) touchedLive else exclRows, rows))
-          } else {
-            fs.delete(snapDir(id), true)
-            fs.delete(statsFile(id), false)
-            fs.delete(stagedFile(id), false)
+            finalizeMarker(id, "cow", partitionSpec(), rows, sortSpec(), Some(note))
+            (id, plan, if (hasDels) touchedLive else exclRows, rows)
           }
         }
-      } catch {
-        case e: Throwable =>
-          fs.delete(snapDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(stagedFile(id), false)
-          fs.delete(exclFile(id), false)
-          throw e
       }
     }
-    out.get
   }
 
   /** DELETE FROM ... WHERE cond (D5) — file-pruned copy-on-write, returns
@@ -3425,111 +3435,31 @@ final class SnapshotTable(
     require(exists, s"DML on non-existent table at $root")
     require(keys.nonEmpty, "deleteByKeys needs at least one key column")
     requireNoteSafeKeys(keys)
-    // SMALL-BATCH fast path: a trickle of single-key (or few-key)
-    // deletes must not pay a distinct job + count job + hull job +
-    // quantile job per statement. One bounded RAW collect (no exchange)
-    // answers distinctness on the driver when the whole batch fits, and
-    // gives EXACT per-key point alternatives (better pruning than a hull
-    // when the keys are scattered); batches past the bound take the
-    // distributed distinct + hull path — the key set itself never
-    // collects at scale. The driver dedup may keep rows Spark's distinct
-    // would merge (NaN, ±0.0) — harmless: duplicates only widen the
-    // alternative list and a left-semi build side, never the match.
-    val selected = keyRows.select(keys.map(keyRows.col): _*)
-    val bound = 64
-    // the driver-side path fires only for LOCAL key frames (a trickle's
-    // Seq(k).toDF, a router's collected batch): probing an arbitrary
-    // distributed frame with limit+collect would EXECUTE its plan once
-    // just to look — for a CDC window that is a whole change-scan thrown
-    // away (the very regression measured on q132/q141 mid-round)
-    val isLocal = isLocalFrame(selected)
-    val raw =
-      if (isLocal) selected.limit(bound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val (src, persisted, sample, small, total) =
-      if (isLocal && raw.length <= bound) {
-        val dedup = raw.toSeq.distinct
-        (spark.createDataFrame(java.util.Arrays.asList(dedup: _*),
-          selected.schema), false, dedup, true, dedup.length.toLong)
-      } else {
-        val d = selected.distinct().persist()
-        val s = d.limit(bound + 1).collect().toSeq
-        val sm = s.length <= bound
-        (d, true, s, sm, if (sm) s.length.toLong else d.count())
-      }
+    val kb = new KeyBatch(keyRows, keys)
     try {
-      if (total == 0) return (0L, ScanPlan(Seq.empty, 0, 0))
-      val alternatives: Seq[Seq[ColRange]] =
-        if (small) sample.map(r => keys.zipWithIndex.map { case (k, i) =>
-          ColRange(k, Option(r.get(i)), Option(r.get(i)))
-        })
-        else keyHullAlternatives(src, keys, total)
-      var out: Option[(Long, ScanPlan)] = None
-      var attempts = 0
-      while (out.isEmpty) {
-        attempts += 1
-        if (attempts > 50) throw new IllegalStateException(
-          s"MoR delete on $root lost the commit race $attempts times — writer storm?")
-        val head = currentSnapshotId.get
-        val (pre, plan) = readPrunedAny(alternatives)
-        // on the small path the auto-applied residual is already the OR of
-        // exact per-key point predicates — the semi-join would re-derive
-        // the same rows through an extra broadcast exchange. Only safe
-        // when every key column is present and non-floating (NaN equality
-        // differs between range predicates and join equality) and no
-        // sampled key is NULL (a NULL bound degrades to keep-everything).
-        val residualExact = small &&
-          keys.forall(pre.columns.contains) &&
-          sample.forall(r => keys.indices.forall(i => r.get(i) != null)) &&
-          !pre.schema.exists(f => keys.contains(f.name) &&
-            (f.dataType == org.apache.spark.sql.types.DoubleType ||
-              f.dataType == org.apache.spark.sql.types.FloatType))
-        val matched = if (residualExact) pre else pre.join(src, keys, "left_semi")
-        val id = withCommitLock {
-          val i = claimId()
-          try {
-            if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i)))
-              fs.delete(snapDir(i), true)
-            val line = s"del||0||${esc("deleting")}|${System.currentTimeMillis()}"
-            val o = fs.create(stagedFile(i))
-            try o.write(line.getBytes("UTF-8")) finally o.close()
-          } finally releaseClaim(i)
-          i
-        }
-        def cleanup(): Unit = {
-          fs.delete(snapDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(stagedFile(id), false)
-        }
-        try {
+      if (kb.total == 0) return (0L, ScanPlan(Seq.empty, 0, 0))
+      optimisticCommit("MoR delete") { _ =>
+        val (pre, plan) = readPrunedAny(kb.alternatives)
+        val matched = kb.matched(pre)
+        stage("del", "deleting") { id =>
           // the delete sidecar carries no partition layout of its own:
           // its rows are consumed via key-column anti-joins, never merged
           // into the table's hive dirs. Small proven batches write from
           // the driver (no Spark write job — see [[writeSmallSidecar]])
           val rows = writeSnapshotData(matched, id, Seq.empty, Seq.empty,
-            trySmall = small)
-          withCommitLock {
-            if (currentSnapshotId.get == head) {
-              if (rows == 0L) { cleanup(); out = Some((0L, plan)) } // nothing matched: no-op
-              else {
-                val ts = writeMarker(id, "del", Seq.empty, rows, Seq.empty,
-                  Some(s"eqdel=${keys.mkString(",")}"))
-                fs.delete(stagedFile(id), false)
-                // requested-key capture (see [[SnapshotTable.CapturedDelKeys]]),
-                // stamped by the marker's ts: only small batches (the full
-                // deduped set is on the driver) and only when no WAP batch
-                // is staged at commit time
-                if (small && stagedIds().isEmpty)
-                  StampedCache.shared.put(qualifiedRoot, SnapshotTable.delKeysName(id),
-                    ts, SnapshotTable.CapturedDelKeys(keys, selected.schema, sample))
-                out = Some((rows, plan))
-              }
-            } else cleanup() // head moved: matched set is stale, retry
-          }
-        } catch { case e: Throwable => cleanup(); throw e }
+            trySmall = kb.small)
+          () =>
+            if (rows == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched: no-op
+            else {
+              val ts = finalizeMarker(id, "del", Seq.empty, rows, Seq.empty,
+                Some(s"eqdel=${keys.mkString(",")}"))
+              // only when no WAP batch is staged at commit time
+              if (kb.small && stagedIds().isEmpty) kb.capture(id, ts)
+              (rows, plan)
+            }
+        }
       }
-      out.get
-    } finally if (persisted) src.unpersist(blocking = false)
+    } finally kb.release()
   }
 
   /** MERGE-ON-READ POSITIONAL DELETE (VERDICT r10 #4) — the Iceberg v2
@@ -3554,56 +3484,32 @@ final class SnapshotTable(
     writeGuard()
     require(exists, s"DML on non-existent table at $root")
     val alternatives = FilterRanges.extractAlternatives(cond)
-    var out: Option[(Long, ScanPlan)] = None
-    var attempts = 0
-    while (out.isEmpty) {
-      attempts += 1
-      if (attempts > 50) throw new IllegalStateException(
-        s"positional delete on $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
+    optimisticCommit("positional delete") { head =>
       val plan = planFilesAny(alternatives)
-      if (plan.filesKept == 0) return (0L, plan) // hull matches nothing
-      // a router's probe already materialized the matched rows+positions
-      // at `h` — reuse them iff the head hasn't moved since (ids are
-      // monotonic, so a stale frame can never re-qualify); re-scan on any
-      // retry (r12 verdict: the probe and the route must share ONE scan)
-      val matched = preMatched match {
-        case Some((h, df)) if h == head => df
-        case _ => readPlanned(plan, keepPos = true).filter(cond)
-      }
-      val id = withCommitLock {
-        val i = claimId()
-        try {
-          if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i)))
-            fs.delete(snapDir(i), true)
-          val line = s"pdel||0||${esc("pos-deleting")}|${System.currentTimeMillis()}"
-          val o = fs.create(stagedFile(i))
-          try o.write(line.getBytes("UTF-8")) finally o.close()
-        } finally releaseClaim(i)
-        i
-      }
-      def cleanup(): Unit = {
-        fs.delete(snapDir(id), true)
-        fs.delete(statsFile(id), false)
-        fs.delete(stagedFile(id), false)
-      }
-      try {
-        // like eq sidecars, no partition layout of its own: consumed via
-        // the (file, pos) anti-join, never merged into hive dirs
-        val rows = writeSnapshotData(matched, id, Seq.empty, Seq.empty)
-        withCommitLock {
-          if (currentSnapshotId.get == head) {
-            if (rows == 0L) { cleanup(); out = Some((0L, plan)) } // nothing matched
-            else {
-              writeMarker(id, "pdel", Seq.empty, rows, Seq.empty, None)
-              fs.delete(stagedFile(id), false)
-              out = Some((rows, plan))
-            }
-          } else cleanup() // head moved: matched positions are stale, retry
+      if (plan.filesKept == 0) Left((0L, plan)) // hull matches nothing
+      else {
+        // a router's probe already materialized the matched rows+positions
+        // at `h` — reuse them iff the head hasn't moved since (ids are
+        // monotonic, so a stale frame can never re-qualify); re-scan on
+        // any retry (r12 verdict: the probe and the route must share ONE
+        // scan)
+        val matched = preMatched match {
+          case Some((h, df)) if h == head => df
+          case _ => readPlanned(plan, keepPos = true).filter(cond)
         }
-      } catch { case e: Throwable => cleanup(); throw e }
+        stage("pdel", "pos-deleting") { id =>
+          // like eq sidecars, no partition layout of its own: consumed via
+          // the (file, pos) anti-join, never merged into hive dirs
+          val rows = writeSnapshotData(matched, id, Seq.empty, Seq.empty)
+          () =>
+            if (rows == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched
+            else {
+              finalizeMarker(id, "pdel", Seq.empty, rows, Seq.empty, None)
+              (rows, plan)
+            }
+        }
+      }
     }
-    out.get
   }
 
   /** MERGE-ON-READ POSITIONAL UPDATE — completes the zero-rewrite DML
@@ -3635,73 +3541,49 @@ final class SnapshotTable(
     require(!sets.keys.exists(Seq("__file", "__pos").contains),
       "positional update cannot assign the position-identity columns")
     val alternatives = FilterRanges.extractAlternatives(cond)
-    var out: Option[(Long, ScanPlan)] = None
-    var attempts = 0
-    while (out.isEmpty) {
-      attempts += 1
-      if (attempts > 50) throw new IllegalStateException(
-        s"positional update on $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
+    var own: Option[DataFrame] = None // this call's own pinned scan
+    def unpin(): Unit = { own.foreach(_.unpersist(blocking = false)); own = None }
+    try optimisticCommit("positional update") { head =>
+      unpin() // a retry re-scans
       val plan = planFilesAny(alternatives)
-      if (plan.filesKept == 0) return (0L, plan) // hull matches nothing
-      // reuse a router probe's matched frame iff the head hasn't moved
-      // (see deleteWherePositional); a reused frame is the CALLER's cache
-      val (matched, ownCache) = preMatched match {
-        case Some((h, df)) if h == head => (df, false)
-        case _ => (readPlanned(plan, keepPos = true).filter(cond).persist(), true)
-      }
-      val id = withCommitLock {
-        val i = claimId()
-        try {
-          if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i))) {
-            fs.delete(snapDir(i), true); fs.delete(delRowsDir(i), true)
-          }
-          val line = s"mor||0||${esc("pos-updating")}|${System.currentTimeMillis()}"
-          val o = fs.create(stagedFile(i))
-          try o.write(line.getBytes("UTF-8")) finally o.close()
-        } finally releaseClaim(i)
-        i
-      }
-      def cleanup(): Unit = {
-        fs.delete(snapDir(id), true)
-        fs.delete(delRowsDir(id), true)
-        fs.delete(statsFile(id), false)
-        fs.delete(exclFile(id), false)
-        fs.delete(stagedFile(id), false)
-      }
-      try {
-        // every matched row IS updated (the predicate already filtered),
-        // so sets apply unconditionally; identity columns never land in
-        // table data
-        val updated = sets.foldLeft(matched.drop("__file", "__pos")) {
-          case (d, (c, v)) => d.withColumn(c, v)
+      if (plan.filesKept == 0) Left((0L, plan)) // hull matches nothing
+      else {
+        // reuse a router probe's matched frame iff the head hasn't moved
+        // (see deleteWherePositional); a reused frame is the CALLER's cache
+        val matched = preMatched match {
+          case Some((h, df)) if h == head => df
+          case _ =>
+            own = Some(readPlanned(plan, keepPos = true).filter(cond).persist())
+            own.get
         }
-        val inserted = writeSnapshotData(updated, id, partitionSpec(), sortSpec())
-        val replaced =
-          if (inserted == 0L) 0L
-          else {
-            matched.write.mode(SaveMode.Overwrite).parquet(delRowsDir(id).toString)
-            footerWalk(delRowsDir(id))._1
+        stage("mor", "pos-updating") { id =>
+          // every matched row IS updated (the predicate already filtered),
+          // so sets apply unconditionally; identity columns never land in
+          // table data
+          val updated = sets.foldLeft(matched.drop("__file", "__pos")) {
+            case (d, (c, v)) => d.withColumn(c, v)
           }
-        withCommitLock {
-          if (currentSnapshotId.get == head) {
-            if (inserted == 0L) { cleanup(); out = Some((0L, plan)) } // nothing matched
+          val inserted = writeSnapshotData(updated, id, partitionSpec(), sortSpec())
+          val replaced =
+            if (inserted == 0L) 0L
+            else {
+              matched.write.mode(SaveMode.Overwrite).parquet(delRowsDir(id).toString)
+              footerWalk(delRowsDir(id))._1
+            }
+          () =>
+            if (inserted == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched
             else {
               require(replaced == inserted,
                 s"positional update wrote $inserted rows but matched $replaced")
               val delBytes = fs.getContentSummary(delRowsDir(id)).getLength
               writeExclusion(id, Seq.empty, replaced, delBytes)
-              writeMarker(id, "mor", partitionSpec(), inserted, sortSpec(),
+              finalizeMarker(id, "mor", partitionSpec(), inserted, sortSpec(),
                 Some("posdel=1"))
-              fs.delete(stagedFile(id), false)
-              out = Some((inserted, plan))
+              (inserted, plan)
             }
-          } else cleanup() // head moved: matched positions are stale, retry
         }
-      } catch { case e: Throwable => cleanup(); throw e }
-      finally if (ownCache) matched.unpersist(blocking = false)
-    }
-    out.get
+      }
+    } finally unpin()
   }
 
   /** Is `df` a driver-local frame (its optimized plan one LocalRelation)?
@@ -3709,6 +3591,74 @@ final class SnapshotTable(
   private def isLocalFrame(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** The key-set planner [[deleteByKeys]] and [[morCommit]] share. A
+    * trickle of single-key (or few-key) statements must not pay a
+    * distinct job + count job + hull job + quantile job each: one bounded
+    * RAW collect answers distinctness on the driver when the whole batch
+    * fits, and gives EXACT per-key point alternatives (better pruning
+    * than a hull when the keys are scattered); batches past the bound
+    * take the distributed distinct + hull path — the key set itself never
+    * collects at scale. The driver dedup may keep rows Spark's distinct
+    * would merge (NaN, ±0.0) — harmless: duplicates only widen the
+    * alternative list and a left-semi build side, never the match. The
+    * driver path fires only for LOCAL key frames ([[isLocalFrame]]: a
+    * trickle's `Seq(k).toDF`, a router's collected batch): probing a
+    * distributed frame with limit+collect would EXECUTE its plan once
+    * just to look — for a CDC window a whole change-scan thrown away. */
+  private final class KeyBatch(keyRows: DataFrame, keys: Seq[String]) {
+    private val selected = keyRows.select(keys.map(keyRows.col): _*)
+    private val bound = 64
+    private val isLocal = isLocalFrame(selected)
+    private val raw =
+      if (isLocal) selected.limit(bound + 1).collect()
+      else Array.empty[org.apache.spark.sql.Row]
+    val (src, persisted, sample, small, total) =
+      if (isLocal && raw.length <= bound) {
+        val dedup = raw.toSeq.distinct
+        (spark.createDataFrame(java.util.Arrays.asList(dedup: _*),
+          selected.schema), false, dedup, true, dedup.length.toLong)
+      } else {
+        val d = selected.distinct().persist()
+        val s = d.limit(bound + 1).collect().toSeq
+        val sm = s.length <= bound
+        (d, true, s, sm, if (sm) s.length.toLong else d.count())
+      }
+
+    /** Exact per-key points when small, else distributed hulls (lazy: the
+      * hull jobs run inside the caller's `try`, which unpersists). */
+    lazy val alternatives: Seq[Seq[ColRange]] =
+      if (total == 0) Seq.empty
+      else if (small) sample.map(r => keys.zipWithIndex.map { case (k, i) =>
+        ColRange(k, Option(r.get(i)), Option(r.get(i)))
+      })
+      else keyHullAlternatives(src, keys, total)
+
+    /** The rows of a pruned pre-read these keys match. On the small path
+      * the auto-applied residual is already the OR of exact per-key point
+      * predicates — the semi-join would re-derive the same rows through
+      * an extra broadcast exchange. Only safe when every key column is
+      * present and non-floating (NaN equality differs between range
+      * predicates and join equality) and no sampled key is NULL (a NULL
+      * bound degrades to keep-everything). */
+    def matched(pre: DataFrame): DataFrame = {
+      val residualExact = small &&
+        keys.forall(pre.columns.contains) &&
+        sample.forall(r => keys.indices.forall(i => r.get(i) != null)) &&
+        !pre.schema.exists(f => keys.contains(f.name) &&
+          (f.dataType == org.apache.spark.sql.types.DoubleType ||
+            f.dataType == org.apache.spark.sql.types.FloatType))
+      if (residualExact) pre else pre.join(src, keys, "left_semi")
+    }
+
+    /** Requested-key capture (see [[SnapshotTable.CapturedDelKeys]]) for
+      * the committed `id`, stamped by its marker's ts. */
+    def capture(id: Long, ts: Long): Unit =
+      StampedCache.shared.put(qualifiedRoot, SnapshotTable.delKeysName(id),
+        ts, SnapshotTable.CapturedDelKeys(keys, selected.schema, sample))
+
+    def release(): Unit = if (persisted) src.unpersist(blocking = false)
+  }
 
   /** MERGE-ON-READ UPSERT — one ATOMIC `mor` commit (the Iceberg MoR
     * MERGE shape): every target row whose `keys` match a `source` row is
@@ -3830,13 +3780,7 @@ final class SnapshotTable(
       val alternatives =
         if (delTotal == 0) Seq.empty
         else keyHullAlternatives(deletes, cols, delTotal)
-      var out: Option[(Long, Long)] = None
-      var attempts = 0
-      while (out.isEmpty) {
-        attempts += 1
-        if (attempts > 50) throw new IllegalStateException(
-          s"keyless CDC apply on $root lost the commit race $attempts times — writer storm?")
-        val head = currentSnapshotId.get
+      optimisticCommit("keyless CDC apply") { _ =>
         val doomed: Option[DataFrame] =
           if (delTotal == 0) None
           else {
@@ -3867,26 +3811,7 @@ final class SnapshotTable(
                   Seq(col("__file"), col("__pos")): _*))
             }
           }
-        val id = withCommitLock {
-          val i = claimId()
-          try {
-            if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i))) {
-              fs.delete(snapDir(i), true); fs.delete(delRowsDir(i), true)
-            }
-            val line = s"mor||0||${esc("cdc-applying")}|${System.currentTimeMillis()}"
-            val o = fs.create(stagedFile(i))
-            try o.write(line.getBytes("UTF-8")) finally o.close()
-          } finally releaseClaim(i)
-          i
-        }
-        def cleanup(): Unit = {
-          fs.delete(snapDir(id), true)
-          fs.delete(delRowsDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(exclFile(id), false)
-          fs.delete(stagedFile(id), false)
-        }
-        try {
+        stage("mor", "cdc-applying") { id =>
           val inserted = writeSnapshotData(inserts, id, partitionSpec(), sortSpec())
           val replaced = doomed match {
             case None => 0L
@@ -3895,54 +3820,33 @@ final class SnapshotTable(
               footerWalk(delRowsDir(id))._1
           }
           if (replaced == 0L) fs.delete(delRowsDir(id), true)
-          // commit point — or, under `wap`, the STAGING point: the same
-          // final marker line lands in the `.staged` file instead, and
-          // publishStaged later swaps it to `.meta` verbatim
-          def finalizeMarker(kind: String, parts: Seq[String], rows: Long,
-                             sort: Seq[String], n: Option[String]): Unit =
-            wap match {
-              case Some(w) =>
-                writeStagedMarker(id, kind, parts, rows, sort,
-                  Some((n.toSeq :+ s"wap=$w").mkString(" ")))
-              case None =>
-                writeMarker(id, kind, parts, rows, sort, n)
-                fs.delete(stagedFile(id), false)
+          () =>
+            if (inserted == 0L && replaced == 0L) {
+              discardArtifacts(id); (0L, 0L) // nothing to do
+            } else if (inserted == 0L) {
+              // delete-only window: one `pdel` commit, the sidecar IS the
+              // data dir (the deleteWherePositional shape)
+              promoteDelRows(id, "pdel")
+              finalizeMarker(id, "pdel", Seq.empty, replaced, Seq.empty, note, wap)
+              (replaced, 0L)
+            } else if (replaced == 0L) {
+              // insert-only window: a plain APPEND commit — a `mor` marker
+              // CONTRACTUALLY carries a sidecar (readers resolve `.delrows`
+              // for eq-kind, the dir itself for posdel-kind), so tagging
+              // one without a sidecar breaks every reader
+              fs.delete(exclFile(id), false)
+              finalizeMarker(id, "append", partitionSpec(), inserted, sortSpec(),
+                note, wap)
+              (0L, inserted)
+            } else {
+              writeExclusion(id, Seq.empty, replaced,
+                fs.getContentSummary(delRowsDir(id)).getLength)
+              finalizeMarker(id, "mor", partitionSpec(), inserted, sortSpec(),
+                Some(("posdel=1" +: note.toSeq).mkString(" ")), wap)
+              (replaced, inserted)
             }
-          withCommitLock {
-            if (currentSnapshotId.get == head) {
-              if (inserted == 0L && replaced == 0L) {
-                cleanup(); out = Some((0L, 0L)) // nothing to do
-              } else if (inserted == 0L) {
-                // delete-only window: one `pdel` commit, the sidecar IS
-                // the data dir (the deleteWherePositional shape)
-                fs.delete(snapDir(id), true)
-                fs.delete(statsFile(id), false)
-                require(fs.rename(delRowsDir(id), snapDir(id)),
-                  s"mor→pdel conversion rename failed for snapshot $id at $root")
-                fs.delete(exclFile(id), false)
-                finalizeMarker("pdel", Seq.empty, replaced, Seq.empty, note)
-                out = Some((replaced, 0L))
-              } else if (replaced == 0L) {
-                // insert-only window: a plain APPEND commit — a `mor`
-                // marker CONTRACTUALLY carries a sidecar (readers resolve
-                // `.delrows` for eq-kind, the dir itself for posdel-kind),
-                // so tagging one without a sidecar breaks every reader
-                fs.delete(exclFile(id), false)
-                finalizeMarker("append", partitionSpec(), inserted,
-                  sortSpec(), note)
-                out = Some((0L, inserted))
-              } else {
-                writeExclusion(id, Seq.empty, replaced,
-                  fs.getContentSummary(delRowsDir(id)).getLength)
-                finalizeMarker("mor", partitionSpec(), inserted, sortSpec(),
-                  Some(("posdel=1" +: note.toSeq).mkString(" ")))
-                out = Some((replaced, inserted))
-              }
-            } else cleanup() // head moved: matched positions stale, retry
-          }
-        } catch { case e: Throwable => cleanup(); throw e }
+        }
       }
-      out.get
     } finally pinned.unpersist(blocking = false)
   }
 
@@ -3963,157 +3867,66 @@ final class SnapshotTable(
     requireNoteSafeKeys(keys)
     requireNoteSafe(note)
     requireWapSafe(wap)
-    // same small-batch planning as deleteByKeys: one bounded RAW collect
-    // dedups on the driver (no distinct exchange per applied window), with
-    // exact per-key point alternatives; distributed distinct + hulls past
-    // the bound
-    val selected = delKeys.select(keys.map(delKeys.col): _*)
-    val bound = 64
-    // LOCAL-frame guard exactly as in deleteByKeys: never probe a
-    // distributed key frame (a CDC window) with limit+collect — that
-    // executes its plan once extra; those take the distinct path below
-    val isLocal = isLocalFrame(selected)
-    val raw =
-      if (isLocal) selected.limit(bound + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val (src, persisted, sample, small, total) =
-      if (isLocal && raw.length <= bound) {
-        val dedup = raw.toSeq.distinct
-        (spark.createDataFrame(java.util.Arrays.asList(dedup: _*),
-          selected.schema), false, dedup, true, dedup.length.toLong)
-      } else {
-        val d = selected.distinct().persist()
-        val s = d.limit(bound + 1).collect().toSeq
-        val sm = s.length <= bound
-        (d, true, s, sm, if (sm) s.length.toLong else d.count())
-      }
-    try {
-      val alternatives: Seq[Seq[ColRange]] =
-        if (total == 0) Seq.empty
-        else if (small) sample.map(r => keys.zipWithIndex.map { case (k, i) =>
-          ColRange(k, Option(r.get(i)), Option(r.get(i)))
-        })
-        else keyHullAlternatives(src, keys, total)
-      var out: Option[(Long, Long, Long)] = None
-      var attempts = 0
-      while (out.isEmpty) {
-        attempts += 1
-        if (attempts > 50) throw new IllegalStateException(
-          s"MoR upsert on $root lost the commit race $attempts times — writer storm?")
-        val head = currentSnapshotId.get
-        // a router probe's matched frame stands in for the key semi-join
-        // iff the head hasn't moved (the router guarantees its frame IS
-        // the rows these keys identify — unique-key contract)
-        val matched =
-          if (total == 0) read().limit(0)
-          else preMatched match {
-            case Some((h, df)) if h == head => df
-            case _ =>
-              val (pre, _) = readPrunedAny(alternatives)
-              // the deleteByKeys exact-residual shortcut: on the small
-              // path the auto-applied residual is already the OR of exact
-              // per-key point predicates — the semi-join would re-derive
-              // the same rows through an extra broadcast exchange per
-              // applied window. Same safety guards (all key columns
-              // present, non-floating, no NULL sampled key).
-              val residualExact = small &&
-                keys.forall(pre.columns.contains) &&
-                sample.forall(r => keys.indices.forall(i => r.get(i) != null)) &&
-                !pre.schema.exists(f => keys.contains(f.name) &&
-                  (f.dataType == org.apache.spark.sql.types.DoubleType ||
-                    f.dataType == org.apache.spark.sql.types.FloatType))
-              if (residualExact) pre else pre.join(src, keys, "left_semi")
-          }
-        val id = withCommitLock {
-          val i = claimId()
-          try {
-            if (fs.exists(snapDir(i)) && !fs.exists(metaFile(i))) {
-              fs.delete(snapDir(i), true); fs.delete(delRowsDir(i), true)
-            }
-            val line = s"mor||0||${esc("upserting")}|${System.currentTimeMillis()}"
-            val o = fs.create(stagedFile(i))
-            try o.write(line.getBytes("UTF-8")) finally o.close()
-          } finally releaseClaim(i)
-          i
+    val kb = new KeyBatch(delKeys, keys)
+    try optimisticCommit("MoR upsert") { head =>
+      // a router probe's matched frame stands in for the key semi-join
+      // iff the head hasn't moved (the router guarantees its frame IS the
+      // rows these keys identify — unique-key contract)
+      val matched =
+        if (kb.total == 0) read().limit(0)
+        else preMatched match {
+          case Some((h, df)) if h == head => df
+          case _ => kb.matched(readPrunedAny(kb.alternatives)._1)
         }
-        def cleanup(): Unit = {
-          fs.delete(snapDir(id), true)
-          fs.delete(delRowsDir(id), true)
-          fs.delete(statsFile(id), false)
-          fs.delete(exclFile(id), false)
-          fs.delete(stagedFile(id), false)
-        }
-        try {
-          // inserts land in the TABLE's layout (they are data, exactly an
-          // append); the delete sidecar carries none
-          val inserted = writeSnapshotData(insertRows, id, partitionSpec(), sortSpec())
-          val replaced =
-            if (total == 0) 0L
-            else {
-              // small proven batches: driver-written sidecar, no write job
-              if (!(small && writeSmallSidecar(matched, delRowsDir(id))))
-                matched.write.mode(SaveMode.Overwrite).parquet(delRowsDir(id).toString)
-              footerWalk(delRowsDir(id))._1
-            }
-          if (replaced == 0L) fs.delete(delRowsDir(id), true)
-          val noteStr = s"eqdel=${keys.mkString(",")}" + note.map(n => s" $n").getOrElse("")
-          // commit point — or, under `wap`, the STAGING point (see
-          // applyChangesPositional: same final line, `.staged` placement)
-          def finalizeMarker(kind: String, parts: Seq[String], rows: Long,
-                             sort: Seq[String], n: Option[String]): Unit =
-            wap match {
-              case Some(w) =>
-                writeStagedMarker(id, kind, parts, rows, sort,
-                  Some((n.toSeq :+ s"wap=$w").mkString(" ")))
-                ()
-              case None =>
-                val ts = writeMarker(id, kind, parts, rows, sort, n)
-                fs.delete(stagedFile(id), false)
-                // requested-key capture (see [[SnapshotTable.CapturedDelKeys]]),
-                // stamped by the marker's ts: small batch with a real
-                // delete side, no WAP batch staged
-                if (small && replaced > 0L && stagedIds().isEmpty)
-                  StampedCache.shared.put(qualifiedRoot, SnapshotTable.delKeysName(id),
-                    ts, SnapshotTable.CapturedDelKeys(keys, selected.schema, sample))
-            }
-          withCommitLock {
-            if (currentSnapshotId.get == head) {
-              if (inserted == 0L && replaced == 0L) {
-                cleanup(); out = Some((0L, 0L, -1L)) // nothing to do: no-op
-              } else if (inserted == 0L) {
-                // a delete-only batch: commit as a plain `del` snapshot
-                // (its dir IS the delete sidecar) — an empty `mor` data
-                // dir would be unreadable and carries nothing
-                fs.delete(snapDir(id), true)
-                fs.delete(statsFile(id), false) // described the empty insert dir
-                require(fs.rename(delRowsDir(id), snapDir(id)),
-                  s"mor→del conversion rename failed for snapshot $id at $root")
-                fs.delete(exclFile(id), false)
-                finalizeMarker("del", Seq.empty, replaced, Seq.empty, Some(noteStr))
-                out = Some((replaced, 0L, id))
-              } else {
-                // excl sidecar (the matched-delete count metadata readers
-                // subtract) BEFORE the marker — the single commit point.
-                // Bytes = the .delrows dir's on-disk size: the CDC byte-cap
-                // accounting (boundedTailEnd) charges a mor its delete-side
-                // payload through this field — recording 0 would let a
-                // byte-capped change feed admit batches over the cap
-                // (sizeInBytesFromMetadata only subtracts `cow` bytes, so
-                // this stays out of table-size estimates)
-                val delBytes =
-                  if (replaced == 0L) 0L
-                  else fs.getContentSummary(delRowsDir(id)).getLength
-                writeExclusion(id, Seq.empty, replaced, delBytes)
-                finalizeMarker("mor", partitionSpec(), inserted, sortSpec(),
-                  Some(noteStr))
-                out = Some((replaced, inserted, id))
-              }
-            } else cleanup() // head moved: matched set is stale, retry
+      stage("mor", "upserting") { id =>
+        // inserts land in the TABLE's layout (they are data, exactly an
+        // append); the delete sidecar carries none
+        val inserted = writeSnapshotData(insertRows, id, partitionSpec(), sortSpec())
+        val replaced =
+          if (kb.total == 0) 0L
+          else {
+            // small proven batches: driver-written sidecar, no write job
+            if (!(kb.small && writeSmallSidecar(matched, delRowsDir(id))))
+              matched.write.mode(SaveMode.Overwrite).parquet(delRowsDir(id).toString)
+            footerWalk(delRowsDir(id))._1
           }
-        } catch { case e: Throwable => cleanup(); throw e }
+        if (replaced == 0L) fs.delete(delRowsDir(id), true)
+        val noteStr = s"eqdel=${keys.mkString(",")}" + note.map(n => s" $n").getOrElse("")
+        def commitAs(kind: String, parts: Seq[String], rows: Long, sort: Seq[String]): Unit = {
+          val ts = finalizeMarker(id, kind, parts, rows, sort, Some(noteStr), wap)
+          // live commit of a small batch with a real delete side, no WAP
+          // batch staged
+          if (wap.isEmpty && kb.small && replaced > 0L && stagedIds().isEmpty)
+            kb.capture(id, ts)
+        }
+        () =>
+          if (inserted == 0L && replaced == 0L) {
+            discardArtifacts(id); (0L, 0L, -1L) // nothing to do: no-op
+          } else if (inserted == 0L) {
+            // a delete-only batch: commit as a plain `del` snapshot (its
+            // dir IS the delete sidecar) — an empty `mor` data dir would
+            // be unreadable and carries nothing
+            promoteDelRows(id, "del")
+            commitAs("del", Seq.empty, replaced, Seq.empty)
+            (replaced, 0L, id)
+          } else {
+            // excl sidecar (the matched-delete count metadata readers
+            // subtract) BEFORE the marker — the single commit point.
+            // Bytes = the .delrows dir's on-disk size: the CDC byte-cap
+            // accounting (boundedTailEnd) charges a mor its delete-side
+            // payload through this field — recording 0 would let a
+            // byte-capped change feed admit batches over the cap
+            // (sizeInBytesFromMetadata only subtracts `cow` bytes, so
+            // this stays out of table-size estimates)
+            val delBytes =
+              if (replaced == 0L) 0L
+              else fs.getContentSummary(delRowsDir(id)).getLength
+            writeExclusion(id, Seq.empty, replaced, delBytes)
+            commitAs("mor", partitionSpec(), inserted, sortSpec())
+            (replaced, inserted, id)
+          }
       }
-      out.get
-    } finally if (persisted) src.unpersist(blocking = false)
+    } finally kb.release()
   }
 
   /** UPDATE ... SET col = value WHERE cond (D6) — file-pruned
@@ -4431,14 +4244,11 @@ final class SnapshotTable(
     // the two steps leaves the note in both places, which dedups fine
     retireNotes(expired.flatMap(_.note))
     expired.foreach { m =>
-      fs.delete(snapDir(m.id), true)
-      fs.delete(delRowsDir(m.id), true)
+      // the staged marker goes too: a crashed publish can leave .meta +
+      // .staged both present, and dropping only the .meta would re-enter
+      // the id into stagedIds() permanently
+      discardArtifacts(m.id)
       fs.delete(metaFile(m.id), false)
-      fs.delete(statsFile(m.id), false)
-      fs.delete(exclFile(m.id), false)
-      // a crashed publish can leave .meta + .staged both present; dropping
-      // only the .meta would re-enter the id into stagedIds() permanently
-      fs.delete(stagedFile(m.id), false)
     }
     expired.map(_.id)
   }
