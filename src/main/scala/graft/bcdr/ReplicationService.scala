@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.catalog.Catalog
 import graft.rbac.GrantService
-import graft.warehouse.SnapshotTable
+import graft.warehouse.{LocalFs, SnapshotTable}
 
 /** Failover groups + replication + promotion (D11,
   * `scripts/20_failover_groups_primary.sql:109-205`,
@@ -178,7 +178,7 @@ final class ReplicationService(primary: Catalog, secondary: Catalog,
     new Path(s"$wh/_replication/$group/$schema.$t.offset")
 
   private def hfs(p: Path) =
-    p.getFileSystem(primary.spark.sparkContext.hadoopConfiguration)
+    LocalFs.of(p, primary.spark.sparkContext.hadoopConfiguration)
 
   /** The offset file carries "consumedPrimaryHead[ consumerHeadAfter]":
     * the first token is the replication offset proper; the optional
@@ -775,8 +775,8 @@ final class ReplicationService(primary: Catalog, secondary: Catalog,
     val conf = primary.spark.sparkContext.hadoopConfiguration
     val sp = new Path(srcRoot)
     val dp = new Path(dstRoot)
-    val sfs = sp.getFileSystem(conf)
-    val dfs = dp.getFileSystem(conf)
+    val sfs = LocalFs.of(sp, conf)
+    val dfs = LocalFs.of(dp, conf)
     if (!sfs.exists(sp)) return 0
     dfs.mkdirs(dp)
     def names(fs: org.apache.hadoop.fs.FileSystem, p: Path): Set[String] =
@@ -904,7 +904,7 @@ final class ReplicationService(primary: Catalog, secondary: Catalog,
     import org.apache.hadoop.fs.{FileUtil, Path}
     val sp = new Path(srcRoot)
     val dp = new Path(dstRoot)
-    val dfs = dp.getFileSystem(conf)
+    val dfs = LocalFs.of(dp, conf)
     def filesUnder(p: Path, rel: String): Seq[String] =
       sfs.listStatus(p).toSeq.flatMap { st =>
         val r = s"$rel/${st.getPath.getName}"
@@ -1333,7 +1333,7 @@ object ReplicationService {
       .mapPartitions { it =>
         val c = conf.value
         val sP = new Path(srcRoot); val dP = new Path(dstRoot)
-        val fsS = sP.getFileSystem(c); val fsD = dP.getFileSystem(c)
+        val fsS = LocalFs.of(sP, c); val fsD = LocalFs.of(dP, c)
         it.filter { rel =>
           try FileUtil.copy(fsS, new Path(sP, rel), fsD, new Path(dP, rel),
             false, true, c)

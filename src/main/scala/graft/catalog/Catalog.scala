@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.warehouse.SnapshotTable
+import graft.warehouse.{LocalFs, SnapshotTable}
 
 /** A named view: definition is SQL TEXT, not a plan — the reference's sync
   * machinery rewrites and hashes view definitions as strings
@@ -49,7 +49,7 @@ final class Catalog(val spark: SparkSession, val warehouse: String, val name: St
     * grants ride on (`GRANT ... ON FUTURE TABLES IN SCHEMA`, D9). */
   @volatile var onObjectCreated: (String, String) => Unit = (_, _) => ()
 
-  private def fs = new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs = LocalFs.of(new Path(warehouse), spark.sparkContext.hadoopConfiguration)
 
   def qualified(schema: String, table: String): String = s"${name}__${schema}__$table"
 

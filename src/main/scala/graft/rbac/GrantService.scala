@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.warehouse.LogTable
+import graft.warehouse.{LocalFs, LogTable}
 
 /** RBAC as a metadata layer (D9): Spark has no GRANT surface, but the
   * reference's grant-audit logic (re-grant anything missing, log every
@@ -281,7 +281,7 @@ final class GrantService(spark: SparkSession, auditRoot: String) {
   var replayedEvents: Int = 0
 
   private def checkpointFile = new org.apache.hadoop.fs.Path(auditRoot, "state.ckpt")
-  private def cfs = checkpointFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def cfs = LocalFs.of(checkpointFile, spark.sparkContext.hadoopConfiguration)
   private def encC(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   private def decC(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 

@@ -48,8 +48,9 @@ final class LogTable(spark: SparkSession, root: String, valueSchema: StructType)
     val full = rows.zipWithIndex.map { case (r, i) =>
       Row.fromSeq((base + i) +: now +: r.toSeq)
     }
-    table.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(full, 1), fullSchema))
+    // a driver-local frame: a small batch is written by the driver, with
+    // no Spark job
+    table.append(spark.createDataFrame(java.util.Arrays.asList(full: _*), fullSchema))
   }
 
   def read(): DataFrame = { ensureExists(); table.read() }

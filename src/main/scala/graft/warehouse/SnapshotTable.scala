@@ -32,7 +32,7 @@ final class SnapshotTable(
     // in one test JVM. Production callers never pass it.
     private[graft] val processLock: Option[Object] = None) {
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs = LocalFs.of(new Path(root), spark.sparkContext.hadoopConfiguration)
 
   private def snapDir(id: Long): Path = new Path(root, f"snap-$id%05d")
   private def delRowsDir(id: Long): Path = new Path(root, f"snap-$id%05d.delrows")
@@ -478,7 +478,7 @@ final class SnapshotTable(
                           physKeys: Seq[String]): Option[SnapshotTable.CapturedDelKeys] = {
     import org.apache.spark.sql.types.{DateType, StructType, TimestampNTZType, TimestampType}
     import scala.jdk.CollectionConverters._
-    val files = parquetFiles(delRowsPath(b)).toSeq
+    val files = dataFiles(delRowsPath(b)).toSeq
     files.headOption.map(keyFields(_, physKeys)).flatMap { schema =>
       if (!schema.forall(f => SnapshotTable.plainKeyType(f.dataType) &&
           !Seq(DateType, TimestampType, TimestampNTZType).contains(f.dataType))) None
@@ -509,27 +509,40 @@ final class SnapshotTable(
     org.apache.spark.sql.types.StructType(keys.map(full(_)))
   }
 
-  /** The parquet data files under `dir`, in listing order, recursing into
-    * hive partition dirs and skipping `_`/`.`-prefixed entries as Spark's
-    * file index does. Lazy: a caller wanting one file lists no further. */
-  private def parquetFiles(dir: Path): Iterator[Path] = {
-    val base = fs.makeQualified(dir).toString
-    val it = fs.listFiles(dir, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !fs.makeQualified(p).toString.stripPrefix(base).split('/')
-          .exists(c => c.startsWith("_") || c.startsWith(".")))
-  }
+  /** The parquet data files under `dir`, qualified, in listing order:
+    * hive partition dirs are walked, and entries are skipped by Spark's
+    * file-index rule (a `.` prefix, or a `_` prefix on a name without
+    * `=`: `_SUCCESS`, a leftover `_temporary/` tree, `.crc` files), so a
+    * pruned plan lists exactly the files a full-dir read scans. Built on
+    * `listStatus`, whose statuses load no permissions. Lazy: a caller
+    * wanting one file lists no further. */
+  private def dataFiles(dir: Path): Iterator[Path] =
+    fs.listStatus(dir).iterator.flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("=")))
+        Iterator.empty
+      else if (st.isDirectory) dataFiles(st.getPath)
+      else if (name.endsWith(".parquet")) Iterator.single(fs.makeQualified(st.getPath))
+      else Iterator.empty
+    }
 
   /** The fold of a SMALL key set. A single non-floating key whose type
     * equals the data column's folds as the predicate `k IS NULL OR NOT k
     * IN (…)` — exactly the anti-join's survivors (a NULL data key matches
     * nothing; NULL set members match nothing, so they are left out) with
     * no join and no broadcast job. Anything else anti-joins a
-    * driver-local frame of the set: no sidecar listing, no scan stage. */
+    * driver-local frame of the set: no sidecar listing, no scan stage.
+    *
+    * Up to the optimizer's InSet conversion threshold the membership test
+    * is `array_contains` over one array literal, not an `IN` list: an
+    * `IN` list compiles to one branch per value with the values inlined,
+    * so every new set size (a delete trickle grows it by one key a
+    * statement) compiled a new scan class; the array literal is passed to
+    * the generated code by reference, so one class serves every set. Past
+    * the threshold `isin` becomes a hashed `INSET` anyway. */
   private def keySetFold(sets: Seq[SnapshotTable.CapturedDelKeys],
                          keys: Seq[String]): DataFrame => DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{array, array_contains, broadcast, col, lit}
     val schema = org.apache.spark.sql.types.StructType(
       sets.head.schema.map(_.copy(nullable = true)))
     val all = sets.flatMap(_.rows).distinct
@@ -542,7 +555,11 @@ final class SnapshotTable(
           d.schema.find(_.name == k).exists(_.dataType == schema.head.dataType) =>
         val values = all.map(_.get(0)).filter(_ != null)
           .map(v => lit(v).cast(schema.head.dataType))
-        if (values.isEmpty) d else d.filter(col(k).isNull || !col(k).isin(values: _*))
+        val member =
+          if (values.size > spark.sessionState.conf.optimizerInSetConversionThreshold)
+            col(k).isin(values: _*)
+          else array_contains(array(values: _*), col(k))
+        if (values.isEmpty) d else d.filter(col(k).isNull || !member)
       case _ => d.join(local, keys, "left_anti")
     }
   }
@@ -559,7 +576,7 @@ final class SnapshotTable(
                           keys: Seq[String]): DataFrame => DataFrame = {
     import org.apache.spark.sql.functions.col
     val paths = batches.map(b => delRowsPath(b).toString)
-    val keySchema = batches.iterator.flatMap(b => parquetFiles(delRowsPath(b)))
+    val keySchema = batches.iterator.flatMap(b => dataFiles(delRowsPath(b)))
       .nextOption().map(keyFields(_, physKeys))
     val keyDf0 = withDriverListing {
       keySchema.fold(spark.read)(spark.read.schema(_)).parquet(paths: _*)
@@ -731,127 +748,128 @@ final class SnapshotTable(
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val dirStr = fs.makeQualified(dir).toString
-    val it = fs.listFiles(dir, true)
     var n = 0L
     val lines = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          n += r.getRecordCount
-          val rel = fs.makeQualified(f.getPath).toString.stripPrefix(dirStr).stripPrefix("/")
-          // merge chunk stats across row groups, top-level primitive columns only
-          val perCol = scala.collection.mutable.Map.empty[String, (String, Any, Any, Boolean)]
-          var bad = Set.empty[String] // columns with an unusable chunk → no stats
-          // value/null/NDV accounting, independent of min/max usability:
-          // a NaN-poisoned double column loses its bounds but keeps counts
-          val vals = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-          val nulls = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-          var nullsUnknown = Set.empty[String]
-          val ndv = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-          var ndvUnknown = Set.empty[String]
-          r.getFooter.getBlocks.asScala.foreach { b =>
-            // dictionary pages load lazily; chunks that never need one
-            // (all-null or non-dictionary) don't open the store at all
-            lazy val dicts: org.apache.parquet.column.page.DictionaryPageReadStore =
-              r.getDictionaryReader(b)
-            b.getColumns.asScala.foreach { c =>
-              val pathArr = c.getPath.toArray
-              if (pathArr.length == 1) {
-                val col = pathArr(0)
-                val st = c.getStatistics
-                val pt = c.getPrimitiveType
-                vals(col) += c.getValueCount
-                val chunkNulls: Option[Long] =
-                  if (st != null && st.isNumNullsSet && st.getNumNulls >= 0)
-                    Some(st.getNumNulls)
-                  else None
-                chunkNulls match {
-                  case Some(nn) => nulls(col) += nn
-                  case None => nullsUnknown += col
-                }
-                // NDV upper bound per chunk: all-null chunks add 0; a chunk
-                // whose every data page is dictionary-encoded is bounded by
-                // its dictionary size; a plain-encoded fallback page means
-                // the writer saw too many distinct values to keep the
-                // dictionary → the bound is unknowable from metadata
-                val es = c.getEncodingStats
-                if (chunkNulls.contains(c.getValueCount)) { /* all-null: +0 */ }
-                else if (es != null && es.hasDictionaryEncodedPages() &&
-                  !es.hasNonDictionaryEncodedPages()) {
-                  val desc = r.getFooter.getFileMetaData.getSchema.getColumnDescription(pathArr)
-                  val dp = dicts.readDictionaryPage(desc)
-                  if (dp != null) ndv(col) += dp.getDictionarySize.toLong
-                  else ndvUnknown += col
-                } else ndvUnknown += col
-                // stat kind: l=long d=double s=string t=epoch-day date
-                // u=epoch-micros timestamp c:<scale>=unscaled-long decimal
-                val kind: Option[String] = (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
-                  case (INT32, _: DateLogicalTypeAnnotation) => Some("t")
-                  case (INT32, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
-                  case (INT32, _) => Some("l")
-                  case (INT64, ts: TimestampLogicalTypeAnnotation)
-                      if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => Some("u")
-                  case (INT64, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
-                  case (INT64, _: TimestampLogicalTypeAnnotation) => None
-                  case (INT64, _) => Some("l")
-                  case (FLOAT, _) | (DOUBLE, _) => Some("d")
-                  case (BINARY, _: StringLogicalTypeAnnotation) => Some("s")
-                  // high-precision decimals (e.g. Spark's default 38,18)
-                  // are unscaled big-endian bytes in a fixed/binary field
-                  case (FIXED_LEN_BYTE_ARRAY, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
-                  case (BINARY, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
-                  case _ => None
-                }
-                kind match {
-                  case Some(k) if st != null && !st.isEmpty && !bad(col) =>
-                    if (!st.hasNonNullValue) {
-                      // all-null chunk: contributes no values; note presence
-                      if (!perCol.contains(col)) perCol(col) = (k, null, null, true)
-                    } else {
-                      val (mn, mx) = (st.genericGetMin, st.genericGetMax)
-                      // parquet float/double stats around NaN are unreliable
-                      val nan = (mn, mx) match {
-                        case (a: java.lang.Double, b: java.lang.Double) => a.isNaN || b.isNaN
-                        case (a: java.lang.Float, b: java.lang.Float) => a.isNaN || b.isNaN
-                        case _ => false
-                      }
-                      if (nan) { bad += col; perCol.remove(col) }
-                      else perCol.get(col) match {
-                        case Some((k0, m0, x0, _)) if m0 != null =>
-                          perCol(col) = (k0, minOf(k0, m0, mn), maxOf(k0, x0, mx), false)
-                        case _ => perCol(col) = (k, mn, mx, false)
-                      }
+    dataFiles(dir).foreach { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try {
+        n += r.getRecordCount
+        val rel = f.toString.stripPrefix(dirStr).stripPrefix("/")
+        // merge chunk stats across row groups, top-level primitive columns only
+        val perCol = scala.collection.mutable.Map.empty[String, (String, Any, Any, Boolean)]
+        var bad = Set.empty[String] // columns with an unusable chunk → no stats
+        // value/null/NDV accounting, independent of min/max usability:
+        // a NaN-poisoned double column loses its bounds but keeps counts
+        val vals = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+        val nulls = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+        var nullsUnknown = Set.empty[String]
+        val ndv = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+        var ndvUnknown = Set.empty[String]
+        r.getFooter.getBlocks.asScala.foreach { b =>
+          // dictionary pages load lazily; chunks that never need one
+          // (all-null or non-dictionary) don't open the store at all
+          lazy val dicts: org.apache.parquet.column.page.DictionaryPageReadStore =
+            r.getDictionaryReader(b)
+          b.getColumns.asScala.foreach { c =>
+            val pathArr = c.getPath.toArray
+            if (pathArr.length == 1) {
+              val col = pathArr(0)
+              val st = c.getStatistics
+              val pt = c.getPrimitiveType
+              vals(col) += c.getValueCount
+              val chunkNulls: Option[Long] =
+                if (st != null && st.isNumNullsSet && st.getNumNulls >= 0)
+                  Some(st.getNumNulls)
+                else None
+              chunkNulls match {
+                case Some(nn) => nulls(col) += nn
+                case None => nullsUnknown += col
+              }
+              // NDV upper bound per chunk: all-null chunks add 0; a chunk
+              // whose every data page is dictionary-encoded is bounded by
+              // its dictionary size; a plain-encoded fallback page means
+              // the writer saw too many distinct values to keep the
+              // dictionary → the bound is unknowable from metadata
+              val es = c.getEncodingStats
+              if (chunkNulls.contains(c.getValueCount)) { /* all-null: +0 */ }
+              else if (es != null && es.hasDictionaryEncodedPages() &&
+                !es.hasNonDictionaryEncodedPages()) {
+                val desc = r.getFooter.getFileMetaData.getSchema.getColumnDescription(pathArr)
+                val dp = dicts.readDictionaryPage(desc)
+                if (dp != null) ndv(col) += dp.getDictionarySize.toLong
+                else ndvUnknown += col
+              } else ndvUnknown += col
+              // stat kind: l=long d=double s=string t=epoch-day date
+              // u=epoch-micros timestamp c:<scale>=unscaled-long decimal
+              val kind: Option[String] = (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
+                case (INT32, _: DateLogicalTypeAnnotation) => Some("t")
+                case (INT32, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
+                case (INT32, _) => Some("l")
+                case (INT64, ts: TimestampLogicalTypeAnnotation)
+                    if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => Some("u")
+                case (INT64, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
+                case (INT64, _: TimestampLogicalTypeAnnotation) => None
+                case (INT64, _) => Some("l")
+                case (FLOAT, _) | (DOUBLE, _) => Some("d")
+                case (BINARY, _: StringLogicalTypeAnnotation) => Some("s")
+                // high-precision decimals (e.g. Spark's default 38,18)
+                // are unscaled big-endian bytes in a fixed/binary field
+                case (FIXED_LEN_BYTE_ARRAY, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
+                case (BINARY, d: DecimalLogicalTypeAnnotation) => Some(s"c:${d.getScale}")
+                case _ => None
+              }
+              kind match {
+                case Some(k) if st != null && !st.isEmpty && !bad(col) =>
+                  if (!st.hasNonNullValue && !chunkNulls.contains(c.getValueCount)) {
+                    // values but no bounds: the writer dropped them (a NaN
+                    // in a float/double chunk, an over-long binary value) —
+                    // unusable, never "all NULL", or pruning drops its rows
+                    bad += col; perCol.remove(col)
+                  } else if (!st.hasNonNullValue) {
+                    // all-null chunk: contributes no values; note presence
+                    if (!perCol.contains(col)) perCol(col) = (k, null, null, true)
+                  } else {
+                    val (mn, mx) = (st.genericGetMin, st.genericGetMax)
+                    // parquet float/double stats around NaN are unreliable
+                    val nan = (mn, mx) match {
+                      case (a: java.lang.Double, b: java.lang.Double) => a.isNaN || b.isNaN
+                      case (a: java.lang.Float, b: java.lang.Float) => a.isNaN || b.isNaN
+                      case _ => false
                     }
-                  case _ => bad += col; perCol.remove(col)
-                }
+                    if (nan) { bad += col; perCol.remove(col) }
+                    else perCol.get(col) match {
+                      case Some((k0, m0, x0, _)) if m0 != null =>
+                        perCol(col) = (k0, minOf(k0, m0, mn), maxOf(k0, x0, mx), false)
+                      case _ => perCol(col) = (k, mn, mx, false)
+                    }
+                  }
+                case _ => bad += col; perCol.remove(col)
               }
             }
           }
-          // one line per top-level primitive column, even when min/max were
-          // unusable (kind "x"): counts still prune IS NOT NULL scans.
-          // Line: rel|col|kind|min|max|valueCount|nullCount|ndvUpper
-          // (trailing fields empty = unknown; old 5-field sidecars parse).
-          vals.keys.toSeq.sorted.foreach { col =>
-            val (kindStr, mnS, mxS) = perCol.get(col) match {
-              case Some((k, mn, mx, _)) if mn != null =>
-                (k, esc(render(k, mn)), esc(render(k, mx)))
-              case Some(_) => ("n", "", "")
-              case None => ("x", "", "")
-            }
-            val cnt = vals(col)
-            val nnS = if (nullsUnknown(col)) "" else nulls(col).toString
-            val ndvS =
-              if (ndvUnknown(col)) ""
-              else {
-                val nonNull = if (nullsUnknown(col)) cnt else cnt - nulls(col)
-                math.min(ndv(col), nonNull).toString
-              }
-            lines += s"${esc(rel)}|${esc(col)}|$kindStr|$mnS|$mxS|$cnt|$nnS|$ndvS"
+        }
+        // one line per top-level primitive column, even when min/max were
+        // unusable (kind "x"): counts still prune IS NOT NULL scans.
+        // Line: rel|col|kind|min|max|valueCount|nullCount|ndvUpper
+        // (trailing fields empty = unknown; old 5-field sidecars parse).
+        vals.keys.toSeq.sorted.foreach { col =>
+          val (kindStr, mnS, mxS) = perCol.get(col) match {
+            case Some((k, mn, mx, _)) if mn != null =>
+              (k, esc(render(k, mn)), esc(render(k, mx)))
+            case Some(_) => ("n", "", "")
+            case None => ("x", "", "")
           }
-        } finally r.close()
-      }
+          val cnt = vals(col)
+          val nnS = if (nullsUnknown(col)) "" else nulls(col).toString
+          val ndvS =
+            if (ndvUnknown(col)) ""
+            else {
+              val nonNull = if (nullsUnknown(col)) cnt else cnt - nulls(col)
+              math.min(ndv(col), nonNull).toString
+            }
+          lines += s"${esc(rel)}|${esc(col)}|$kindStr|$mnS|$mxS|$cnt|$nnS|$ndvS"
+        }
+      } finally r.close()
     }
     (n, lines.result())
   }
@@ -1070,13 +1088,18 @@ final class SnapshotTable(
     * the caller already proved the batch small (the ≤64-key driver-dedup
     * path, whose matched frame is a pruned scan with no shuffle), a
     * bounded take collects the matched rows and ONE ParquetWriter call
-    * writes them from the driver. The file is produced by Spark's own
-    * `ParquetWriteSupport` under the session's parquet settings, so its
-    * physical types are byte-compatible with a write task's output —
-    * multi-path sidecar reads merge driver- and task-written files
-    * freely, and footerWalk reads the same footer stats. Falls back to
-    * the distributed write past the row cap (the take stops early) or on
-    * any error. Returns true when the file landed. */
+    * writes them from the driver. A driver-local data batch (an append,
+    * an upsert's inserts) takes the same path, and its take runs no job.
+    * The file is produced by Spark's own `ParquetWriteSupport` under the
+    * session's parquet settings, so its physical types are
+    * byte-compatible with a write task's output — multi-path sidecar
+    * reads merge driver- and task-written files freely, and footerWalk
+    * reads the same footer stats. The file's
+    * schema is `df.schema` made nullable throughout, as Spark's file
+    * writer writes it. It is created through [[fs]], so a local root
+    * starts no process. Falls back to the distributed write past the row
+    * cap (the take stops early) or on any error. Returns true when the
+    * file landed. */
   private def writeSmallSidecar(df: DataFrame, dir: Path): Boolean = {
     import org.apache.spark.sql.internal.SQLConf
     val cap = SnapshotTable.SmallSidecarRowCap
@@ -1088,7 +1111,7 @@ final class SnapshotTable(
       val conf = spark.sessionState.newHadoopConf()
       val sqlc = spark.sessionState.conf
       org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-        .setSchema(df.schema, conf)
+        .setSchema(SnapshotTable.nullable(df.schema), conf)
       conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
         sqlc.writeLegacyParquetFormat.toString)
       conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
@@ -1108,7 +1131,8 @@ final class SnapshotTable(
           org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY }
       fs.mkdirs(dir)
       val file = new Path(dir, "part-00000-driver.parquet")
-      val writer = new SnapshotTable.DriverParquetBuilder(file)
+      val writer = new SnapshotTable.DriverParquetBuilder(
+          new SnapshotTable.FsOutputFile(fs, file))
         .withConf(conf)
         .withCompressionCodec(codec)
         .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
@@ -1127,7 +1151,8 @@ final class SnapshotTable(
     * heavy half of a commit — shared by the normal commit path and WAP
     * staging, which differ only in which marker makes the data visible).
     * `trySmall` (sidecar writes from callers that PROVED the batch
-    * small) routes through [[writeSmallSidecar]] first. */
+    * small, and [[localBatch]]es) routes through [[writeSmallSidecar]]
+    * first; partitioned or sorted layouts keep the Spark write. */
   private def writeSnapshotData(df: DataFrame, id: Long, parts: Seq[String],
                                 sort: Seq[String],
                                 trySmall: Boolean = false): Long = {
@@ -1180,7 +1205,7 @@ final class SnapshotTable(
     val isNew = currentSnapshotId.isEmpty
     val id = claimId()
     try {
-      val rows = writeSnapshotData(df, id, parts, sort)
+      val rows = writeSnapshotData(df, id, parts, sort, trySmall = localBatch(df))
       writeMarker(id, kind, parts, rows, sort, note)
     } finally releaseClaim(id)
     if (isNew) onCreate() // object springs into existence → future grants fire
@@ -2017,7 +2042,8 @@ final class SnapshotTable(
       s"invalid wap id '$wapId'")
     val id = claimId()
     try {
-      val rows = writeSnapshotData(df, id, partitionSpec(), sortSpec())
+      val rows = writeSnapshotData(df, id, partitionSpec(), sortSpec(),
+        trySmall = localBatch(df))
       val line = markerLine("append", partitionSpec(), rows, sortSpec(), Some(s"wap=$wapId"))
       val out = fs.create(stagedFile(id)) // staged marker last = staging point
       try out.write(line.getBytes("UTF-8")) finally out.close()
@@ -2418,17 +2444,8 @@ final class SnapshotTable(
   }
 
   /** Fully-qualified paths of every data file under a snapshot dir. */
-  private def listParquet(dir: Path): Seq[String] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        out += fs.makeQualified(f.getPath).toString
-    }
-    out.result()
-  }
+  private def listParquet(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty else dataFiles(dir).map(_.toString).toSeq
 
   /** Time travel by WALL CLOCK (Iceberg `TIMESTAMP AS OF`): the table
     * state at the newest snapshot committed at-or-before `ts`. Commit
@@ -3034,14 +3051,10 @@ final class SnapshotTable(
       val synthCols: Map[String, SynthCol] =
         colmapPlan(Seq.empty, id, ops)
           .collect { case (n, s: SynthCol) => n -> s }.toMap
-      val it = fs.listFiles(snapDir(id), true)
       val files = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet") &&
-            !excluded(relToRoot(fs.makeQualified(f.getPath).toString))) {
+      dataFiles(snapDir(id)).map(_.toString).filterNot(f => excluded(relToRoot(f)))
+        .foreach { full =>
           nTotal += 1
-          val full = fs.makeQualified(f.getPath).toString
           val rel = full.stripPrefix(dir).stripPrefix("/")
           // hive partition-dir values double as exact single-value "stats"
           val partVals: Map[String, String] = rel.split('/').dropRight(1).toSeq
@@ -3098,7 +3111,6 @@ final class SnapshotTable(
           })
           if (keep) { files += full; nKept += 1 }
         }
-      }
       val fl = files.result()
       if (fl.nonEmpty) kept += dir -> fl
     }
@@ -3153,7 +3165,7 @@ final class SnapshotTable(
           case Some(sch) => reader.schema(sch).parquet(paths: _*)
           case None =>
             val file = files.headOption.map(new Path(_))
-              .orElse(parquetFiles(snapDir(ownerId)).nextOption())
+              .orElse(dataFiles(snapDir(ownerId)).nextOption())
             val df = file.fold(reader)(f => reader.schema(SnapshotTable.footerSchema(spark, f)))
               .parquet(paths: _*)
             StampedCache.shared.put(qualifiedRoot, name, s, df.schema)
@@ -3592,6 +3604,15 @@ final class SnapshotTable(
     df.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
+  /** A non-empty driver-local frame: a data batch the driver writer may
+    * take (an empty one keeps Spark's write). Reads the frame's own rows:
+    * no job, and no second query to plan. */
+  private def localBatch(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.nonEmpty
+      case _ => false
+    }
+
   /** The key-set planner [[deleteByKeys]] and [[morCommit]] share. A
     * trickle of single-key (or few-key) statements must not pay a
     * distinct job + count job + hull job + quantile job each: one bounded
@@ -3812,7 +3833,8 @@ final class SnapshotTable(
             }
           }
         stage("mor", "cdc-applying") { id =>
-          val inserted = writeSnapshotData(inserts, id, partitionSpec(), sortSpec())
+          val inserted = writeSnapshotData(inserts, id, partitionSpec(), sortSpec(),
+            trySmall = localBatch(inserts))
           val replaced = doomed match {
             case None => 0L
             case Some(d) =>
@@ -3881,7 +3903,8 @@ final class SnapshotTable(
       stage("mor", "upserting") { id =>
         // inserts land in the TABLE's layout (they are data, exactly an
         // append); the delete sidecar carries none
-        val inserted = writeSnapshotData(insertRows, id, partitionSpec(), sortSpec())
+        val inserted = writeSnapshotData(insertRows, id, partitionSpec(), sortSpec(),
+          trySmall = localBatch(insertRows))
         val replaced =
           if (kb.total == 0) 0L
           else {
@@ -4382,14 +4405,45 @@ object SnapshotTable {
 
   /** parquet-hadoop builder writing Spark InternalRows through Spark's
     * own ParquetWriteSupport — the driver-side sidecar writer's core. */
-  private[warehouse] final class DriverParquetBuilder(path: Path)
+  private[warehouse] final class DriverParquetBuilder(file: org.apache.parquet.io.OutputFile)
     extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-      org.apache.spark.sql.catalyst.InternalRow, DriverParquetBuilder](path) {
+      org.apache.spark.sql.catalyst.InternalRow, DriverParquetBuilder](file) {
     override def self(): DriverParquetBuilder = this
     override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
       : org.apache.parquet.hadoop.api.WriteSupport[
           org.apache.spark.sql.catalyst.InternalRow] =
       new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport()
+  }
+
+  /** A parquet output file created through the given file system handle
+    * (parquet's `HadoopOutputFile` resolves its own through the path),
+    * with `HadoopOutputFile`'s buffer, replication and block sizes. */
+  private[warehouse] final class FsOutputFile(fs: org.apache.hadoop.fs.FileSystem, path: Path)
+    extends org.apache.parquet.io.OutputFile {
+    private def open(overwrite: Boolean, blockSizeHint: Long) =
+      org.apache.parquet.hadoop.util.HadoopStreams.wrap(fs.create(path, overwrite, 4096,
+        fs.getDefaultReplication(path), math.max(fs.getDefaultBlockSize(path), blockSizeHint)))
+    override def create(blockSizeHint: Long) = open(overwrite = false, blockSizeHint)
+    override def createOrOverwrite(blockSizeHint: Long) = open(overwrite = true, blockSizeHint)
+    override def supportsBlockSize: Boolean =
+      org.apache.parquet.hadoop.util.HadoopOutputFile.getBlockFileSystems
+        .contains(fs.getUri.getScheme)
+    override def defaultBlockSize: Long = fs.getDefaultBlockSize(path)
+    override def getPath: String = path.toString
+  }
+
+  /** `t` with every field, array element and map value nullable: the
+    * schema Spark's file writer gives the parquet files it writes. */
+  private[warehouse] def nullable[T <: org.apache.spark.sql.types.DataType](t: T): T = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    (t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }).asInstanceOf[T]
   }
 
   /** REQUESTED-KEY capture for small delete batches (r18): the committing

@@ -142,6 +142,29 @@ class ReadJobsSpec extends SparkSpec {
     assert(t.read().count() === 4L)
   }
 
+  test("a growing folded key set compiles no new scan code and folds the same rows, " +
+    "on both sides of the InSet conversion threshold") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val t = new SnapshotTable(spark, freshRoot("fold-codegen"))
+    val base = spark.range(400).toDF("id").withColumn("v", concat(lit("v"), col("id")))
+    t.createOrReplace(base)
+    val threshold = spark.sessionState.conf.optimizerInSetConversionThreshold
+    // one delete statement per key: the fold's set grows by one each time
+    val compiles = (0L to threshold + 3L).map { k =>
+      t.deleteByKeys(Seq("id"), Seq(k).toDF("id"))
+      val before = METRIC_COMPILATION_TIME.getCount
+      val df = t.read()
+      assert(antiJoins(df) === 0, s"set of ${k + 1} keys folds as a predicate")
+      assert(df.as[(Long, String)].collect().toSet ===
+        (k + 1 until 400L).map(i => (i, s"v$i")).toSet, s"set of ${k + 1} keys")
+      METRIC_COMPILATION_TIME.getCount - before
+    }
+    // the first read compiles the scan; every larger set up to the
+    // threshold reuses it (an IN list compiled one class per set size)
+    assert(compiles.slice(1, threshold).forall(_ == 0L),
+      s"compiles per read, by set size: ${compiles.mkString(", ")}")
+  }
+
   test("a widened key, a floating-point key and a large group keep the anti-join") {
     // widen int → long after the delete: the set's type no longer equals
     // the data column's
