@@ -24,7 +24,8 @@ final class MaterializedViewManager(cat: Catalog) {
 
   /** COST-BASED refresh policy (VERDICT r9 #4): below this metadata row
     * count, a full rebuild of the base is CHEAPER than the CDC retraction
-    * fold — RetractionBench measured rebuild at 0.28×–0.62× of retraction
+    * fold — BENCH_NOTES.md ("Round-9: retraction fold vs full rebuild")
+    * measured rebuild at 0.28×–0.62× of retraction
     * up to ~40M rows with the crossover near 120M (the fold's fixed cost
     * is its EXCEPT-ALL shuffles over changed files; the rebuild's cost is
     * linear in the base). `refreshIncremental`/`refreshMultiAggMv`
@@ -36,12 +37,16 @@ final class MaterializedViewManager(cat: Catalog) {
   @volatile var retractionCrossoverRows: Long =
     MaterializedViewManager.DefaultRetractionCrossoverRows
 
-  /** Second policy variable (ADVICE r10): a sub-crossover base rebuilds
-    * only when the CDC window's file count × this factor reaches the live
-    * file count — i.e. the change touched ≥ 1/N of the files, the regime
-    * the crossover was measured in. Smaller deltas keep the ∝-change
-    * retraction fold regardless of base size. */
-  @volatile var rebuildDeltaFraction: Long = 4L
+  import MaterializedViewManager.RebuildDeltaFraction
+
+  /** The two-variable cost policy: rebuild instead of folding change set
+    * `cs` when the base sits below the row crossover (count known) AND
+    * the change touched at least 1/[[RebuildDeltaFraction]] of its live
+    * files. */
+  private def rebuildCheaper(t: graft.warehouse.SnapshotTable,
+                             cs: graft.warehouse.ChangeScan): Boolean =
+    t.rowCountFromMetadata.exists(_ < retractionCrossoverRows) &&
+      cs.filesRead * RebuildDeltaFraction >= cs.liveFilesTotal
 
   /** mv name → (definition SQL, base tables as (schema, table)). */
   private val defs = mutable.LinkedHashMap.empty[String, (String, Seq[(String, String)])]
@@ -355,7 +360,8 @@ final class MaterializedViewManager(cat: Catalog) {
         // min; no subtraction recovers the runner-up), so those MVs — and
         // true REPLACEs (CDC = None) — still rebuild. COST POLICY: rebuild
         // only when the base's metadata row count sits below the
-        // RetractionBench crossover AND the change set spans a substantial
+        // measured crossover (BENCH_NOTES.md, "Round-9: retraction fold vs
+        // full rebuild") AND the change set spans a substantial
         // fraction of the live files (the crossover was measured under the
         // bench's delta mix; a one-file change on a mid-size base keeps
         // the ∝-change fold — ADVICE r10). The CDC plan itself is
@@ -363,11 +369,7 @@ final class MaterializedViewManager(cat: Catalog) {
         // ∝ the change, never a scan.
         val cdc0 = if (d.minMaxCols.isEmpty)
           t.rowChangesBetween(aggBuiltAt(name), cur) else None
-        val rebuildCheaper = cdc0.exists { cs =>
-          t.rowCountFromMetadata.exists(_ < retractionCrossoverRows) &&
-            cs.filesRead * rebuildDeltaFraction >= cs.liveFilesTotal
-        }
-        val cdc = if (rebuildCheaper) None else cdc0
+        val cdc = cdc0.filterNot(rebuildCheaper(t, _))
         cdc match {
           case Some(cs) =>
             val signed = aggregateChanges(cs.df, d.keyCols, "n_rows",
@@ -520,11 +522,7 @@ final class MaterializedViewManager(cat: Catalog) {
               // fraction rebuilds DELIBERATELY (same two-variable policy
               // as refreshIncremental)
               val cdc0 = t.rowChangesBetween(built(b.base), cur)
-              val rebuildCheaperM = cdc0.exists { cs =>
-                t.rowCountFromMetadata.exists(_ < retractionCrossoverRows) &&
-                  cs.filesRead * rebuildDeltaFraction >= cs.liveFilesTotal
-              }
-              val cdcM = if (rebuildCheaperM) None else cdc0
+              val cdcM = cdc0.filterNot(rebuildCheaper(t, _))
               cdcM match {
                 case Some(cs) =>
                   val signed = aggregateChanges(cs.df, b.keyCols,
@@ -555,8 +553,16 @@ final class MaterializedViewManager(cat: Catalog) {
 }
 
 object MaterializedViewManager {
-  /** RetractionBench's measured crossover (~120M rows): below it the full
-    * rebuild beat the retraction fold on every tested size (0.28×–0.62×),
-    * above it the fold's flat cost wins against the rebuild's linear one. */
+  /** The measured crossover (~120M rows; BENCH_NOTES.md, "Round-9:
+    * retraction fold vs full rebuild"): below it the full rebuild beat the
+    * retraction fold on every tested size (0.28×–0.62×), above it the
+    * fold's flat cost wins against the rebuild's linear one. */
   val DefaultRetractionCrossoverRows: Long = 120L * 1000 * 1000
+
+  /** Second policy variable (ADVICE r10): a sub-crossover base rebuilds
+    * only when the CDC window's file count × this factor reaches the live
+    * file count — i.e. the change touched ≥ 1/N of the files, the regime
+    * the crossover was measured in. Smaller deltas keep the ∝-change
+    * retraction fold regardless of base size. */
+  private val RebuildDeltaFraction = 4L
 }

@@ -1443,7 +1443,7 @@ final class SnapshotTable(
     noteField(m, "colop").toSeq.flatMap { note =>
       if (note.startsWith("batch:"))
         note.stripPrefix("batch:").split(',').toSeq
-          .flatMap(enc => parseColOpSeg(m.id, unesc2(enc)))
+          .flatMap(enc => parseColOpSeg(m.id, urlDec(enc)))
       else parseColOpSeg(m.id, note)
     }
 
@@ -1452,16 +1452,17 @@ final class SnapshotTable(
       case Array("rename", f, t) => Some(ColOp(id, "rename", f, t))
       case Array("drop", f) => Some(ColOp(id, "drop", f, ""))
       case Array("widen", f, t) => Some(ColOp(id, "widen", f, t))
-      case Array("add", f, t) => Some(ColOp(id, "add", f, unesc2(t)))
+      case Array("add", f, t) => Some(ColOp(id, "add", f, urlDec(t)))
       case Array("add", f, t, d) =>
-        Some(ColOp(id, "add", f, unesc2(t), Some(unesc2(d))))
+        Some(ColOp(id, "add", f, urlDec(t), Some(urlDec(d))))
       case _ => None
     }
 
-  // the add op's type/default segments URL-encode (':', '|', spaces all
-  // escape), so the colon-split token stays unambiguous
-  private def esc2(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  private def unesc2(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
+  // the add op's type/default segments and dependent ids URL-encode
+  // (':', '|', '/', spaces all escape), so colon-split tokens and file
+  // names stay unambiguous
+  private def urlEnc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
+  private def urlDec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 
   /** Logical name (at the ops' horizon) of physical column `name` written
     * at snapshot `ownerId`; None when a later drop removed it. Widens
@@ -1666,8 +1667,8 @@ final class SnapshotTable(
       require(!v.isNullAt(0),
         s"default '$d' does not parse as ${target.simpleString}")
     }
-    commitColOp(s"colop=add:$name:${esc2(toType)}" +
-      defaultValue.fold("")(d => s":${esc2(d)}"))
+    commitColOp(s"colop=add:$name:${urlEnc(toType)}" +
+      defaultValue.fold("")(d => s":${urlEnc(d)}"))
   }
 
   /** ALTER TABLE as ONE atomic marker commit (r17; Iceberg's
@@ -1768,13 +1769,13 @@ final class SnapshotTable(
               s"default '$d' does not parse as ${target.simpleString} (batch)")
           }
           schema = schema :+ StructField(a.from, target)
-          segs += s"add:${a.from}:${esc2(a.to)}" +
-            a.dflt.fold("")(d => s":${esc2(d)}")
+          segs += s"add:${a.from}:${urlEnc(a.to)}" +
+            a.dflt.fold("")(d => s":${urlEnc(d)}")
         case other =>
           throw new IllegalArgumentException(s"unknown alter op '$other'")
       }
     }
-    commitColOp("colop=batch:" + segs.result().map(esc2).mkString(",") +
+    commitColOp("colop=batch:" + segs.result().map(urlEnc).mkString(",") +
       srcOp.fold("")(id => s" srcop=$id"))
   }
 
@@ -1856,9 +1857,7 @@ final class SnapshotTable(
   // definitions. Deregistration is the dependent's own drop path.
 
   private def depsDir = new Path(root, "deps")
-  private def encDep(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def decDep(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-  private def depFile(id: String) = new Path(depsDir, s"${encDep(id)}.dep")
+  private def depFile(id: String) = new Path(depsDir, s"${urlEnc(id)}.dep")
 
   /** Durably record that dependent `id` (an MV name, an index root — any
     * stable identity) references `columns` of this table. Idempotent: an
@@ -1870,9 +1869,9 @@ final class SnapshotTable(
       s"dependent registration needs an id, a kind, and >= 1 column")
     if (readDependent(id).contains((kind, columns.toList))) return
     fs.mkdirs(depsDir)
-    val body = (s"v1 ${encDep(kind)}" +: columns.map(encDep))
+    val body = (s"v1 ${urlEnc(kind)}" +: columns.map(urlEnc))
       .mkString("", "\n", "\nEND\n")
-    val stg = new Path(depsDir, s"${encDep(id)}.dep.stg")
+    val stg = new Path(depsDir, s"${urlEnc(id)}.dep.stg")
     val out = fs.create(stg, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     // rename OVER the target first (POSIX rename replaces atomically —
@@ -1901,8 +1900,8 @@ final class SnapshotTable(
     // (no END / bad header) is ignored rather than trusted
     if (lines.lastOption.forall(_ != "END") ||
         !lines.headOption.exists(_.startsWith("v1 "))) None
-    else Some((decDep(lines.head.stripPrefix("v1 ")),
-      lines.tail.dropRight(1).map(decDep)))
+    else Some((urlDec(lines.head.stripPrefix("v1 ")),
+      lines.tail.dropRight(1).map(urlDec)))
   }
 
   /** Every live registration as (id, kind, columns). */
@@ -1911,7 +1910,7 @@ final class SnapshotTable(
     else fs.listStatus(depsDir).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".dep")).sorted
       .flatMap { n =>
-        val id = decDep(n.stripSuffix(".dep"))
+        val id = urlDec(n.stripSuffix(".dep"))
         readDependent(id).map { case (kind, cols) => (id, kind, cols) }
       }
 
@@ -3972,6 +3971,20 @@ final class SnapshotTable(
     (if (id >= 0) id else currentSnapshotId.get, plan)
   }
 
+  /** The routed DML trio's one cost rule: MoR exactly when the files
+    * `plan` keeps carry more than `amplification`× the bytes of
+    * `changedRows` rows (kept bytes = table bytes × kept/total files; row
+    * width = the metadata average, 64 B without a row count). Unknown
+    * table stats route COW, the established safe default. */
+  private def morCheaper(plan: ScanPlan, changedRows: Long,
+                         amplification: Double): Boolean =
+    sizeInBytesFromMetadata.exists { tblBytes =>
+      val keptBytes = tblBytes.toDouble * plan.filesKept / math.max(1, plan.filesTotal)
+      val avgRowBytes = rowCountFromMetadata.filter(_ > 0)
+        .map(tblBytes.toDouble / _).getOrElse(64.0)
+      keptBytes > amplification * changedRows * avgRowBytes
+    }
+
   /** UPDATE with COST-ROUTED write mode (VERDICT r10 #3) — picks
     * copy-on-write vs merge-on-read PER STATEMENT, the
     * [[graft.warehouse.CostJoin]] stance: decide from table-owned
@@ -4005,13 +4018,7 @@ final class SnapshotTable(
     // check below must catch it
     val plan = planFilesAny(alternatives)
     if (plan.filesKept == 0) return ("noop", 0L) // hull matches nothing
-    val decide: Long => Boolean = matched => sizeInBytesFromMetadata.exists { tblBytes =>
-      val keptBytes = tblBytes.toDouble * plan.filesKept / math.max(1, plan.filesTotal)
-      val avgRowBytes = rowCountFromMetadata.filter(_ > 0)
-        .map(tblBytes.toDouble / _).getOrElse(64.0)
-      keptBytes > amplification * matched * avgRowBytes
-    } // unknown table stats: COW, the established safe default
-    if (!decide(1L)) {
+    if (!morCheaper(plan, 1L, amplification)) {
       // metadata alone already rules MoR out (even ONE matched row would
       // route COW): keep the cheap narrow probe — count only, column-
       // pruned to the predicate's columns
@@ -4031,7 +4038,7 @@ final class SnapshotTable(
     try {
       val matched = probe.count()
       if (matched == 0L) return ("noop", 0L) // files overlap, no row matches
-      if (decide(matched)) {
+      if (morCheaper(plan, matched, amplification)) {
         if (keys.isEmpty) { // no usable key: the positional sidecar route
           val (updated, _) =
             updateWherePositional(cond, sets, Some((headAtProbe, probe)))
@@ -4078,13 +4085,8 @@ final class SnapshotTable(
     val headAtProbe = currentSnapshotId.get // before planning (see updateRouted)
     val plan = planFilesAny(alternatives)
     if (plan.filesKept == 0) return ("noop", 0L) // hull matches nothing
-    val decide: Long => Boolean = matched => sizeInBytesFromMetadata.exists { tblBytes =>
-      val keptBytes = tblBytes.toDouble * plan.filesKept / math.max(1, plan.filesTotal)
-      val avgRowBytes = rowCountFromMetadata.filter(_ > 0)
-        .map(tblBytes.toDouble / _).getOrElse(64.0)
-      keptBytes > amplification * matched * avgRowBytes
-    } // unknown table stats: COW, the established safe default
-    if (!decide(1L)) { // even one matched row routes COW: narrow count probe
+    if (!morCheaper(plan, 1L, amplification)) {
+      // even one matched row routes COW: narrow count probe
       val (pre, _) = readPrunedAny(alternatives)
       val matched = pre.filter(cond).count()
       if (matched == 0L) return ("noop", 0L)
@@ -4096,7 +4098,7 @@ final class SnapshotTable(
     try {
       val matched = probe.count()
       if (matched == 0L) return ("noop", 0L) // files overlap, no row matches
-      if (decide(matched)) {
+      if (morCheaper(plan, matched, amplification)) {
         val (n, _) = deleteWherePositional(cond, Some((headAtProbe, probe)))
         ("pdel", n)
       } else { val (n, _) = deletePruned(cond); ("cow", n) }
@@ -4223,13 +4225,7 @@ final class SnapshotTable(
       if (srcTotal == 0) return ("noop", (0L, 0L))
       val alternatives = keyHullAlternatives(srcKeys, keys, srcTotal)
       val plan = planFilesAny(alternatives)
-      val mor = sizeInBytesFromMetadata.exists { tblBytes =>
-        val keptBytes = tblBytes.toDouble * plan.filesKept / math.max(1, plan.filesTotal)
-        val avgRowBytes = rowCountFromMetadata.filter(_ > 0)
-          .map(tblBytes.toDouble / _).getOrElse(64.0)
-        keptBytes > amplification * srcTotal * avgRowBytes
-      } // unknown table stats: COW, the established safe default
-      if (mor) {
+      if (morCheaper(plan, srcTotal, amplification)) {
         // normalize to MERGE's (updated, NET-inserted) convention —
         // upsertByKeys reports ALL landed source rows as its insert side
         val prev = count()

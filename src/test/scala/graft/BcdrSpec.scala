@@ -289,7 +289,7 @@ class BcdrSpec extends SparkSpec {
   test("physical replication moves a large delta as a DISTRIBUTED copy job; " +
     "tiny deltas stay on the driver") {
     // r12 verdict's one weak mark: the delta bytes must NOT serialize
-    // through one driver thread — past copyJobThreshold files the copy
+    // through one driver thread — past CopyJobThreshold files the copy
     // runs as a Spark job over the file manifest (per-file parallelism),
     // while the order-sensitive markers stay a driver step
     val primary = new Catalog(spark, freshDir("par-pri"), "pri")

@@ -756,9 +756,10 @@ class ServicesSpec extends SparkSpec {
   }
 
   test("cost-based refresh policy: a small base REBUILDS, a threshold-forced large one RETRACTS") {
-    // VERDICT r9 #4: RetractionBench measured the full rebuild at
-    // 0.28×–0.62× of the retraction fold below ~120M rows — the refresh
-    // must take the cheaper path from metadata alone, not always retract.
+    // VERDICT r9 #4: BENCH_NOTES.md ("Round-9: retraction fold vs full
+    // rebuild") measured the full rebuild at 0.28×–0.62× of the
+    // retraction fold below ~120M rows — the refresh must take the
+    // cheaper path from metadata alone, not always retract.
     val cat = newCatalog("mvcost")
     cat.createSchema("adv")
     val sales = cat.table("adv", "sales")
@@ -792,6 +793,39 @@ class ServicesSpec extends SparkSpec {
     assert(mvm2.refreshMultiAggMv("fnl")("imp") == "full",
       "multi-agg per-base policy: small base rebuilds")
     assert(mvm2.read("fnl").select($"campaign").as[String].collect().toSeq == Seq("c1"))
+  }
+
+  test("cost-based refresh policy: a small base whose DML window touches under 1/4 of its files RETRACTS") {
+    // the policy's second variable: below the row crossover a refresh
+    // rebuilds only when the window touched ≥ 1/4 of the live files; a
+    // narrower change keeps the ∝-change fold even on a small base
+    val cat = newCatalog("mvfrac")
+    cat.createSchema("adv")
+    val sales = cat.table("adv", "sales")
+    sales.createOrReplace(Seq(("a", 1.0, 0L)).toDF("k", "amt", "id"))
+    (1L until 16L).foreach { i =>
+      sales.append(Seq((if (i % 2 == 0) "a" else "b", i.toDouble, i)).toDF("k", "amt", "id"))
+    }
+    val mvm = new MaterializedViewManager(cat)
+    mvm.createAggMv("mv_f", ("adv", "sales"), Seq("k"), Seq("amt"))
+    def state() = mvm.read("mv_f")
+      .select($"k", $"n_rows", $"sum_amt".cast("double"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    val built = sales.currentSnapshotId.get
+    sales.delete($"id" === 3L) // file-pruned COW: rewrites one of 16 files
+    val cs = sales.rowChangesBetween(built, sales.currentSnapshotId.get).get
+    assert(cs.filesRead * 4 < cs.liveFilesTotal,
+      s"window must touch under 1/4 of the files: ${cs.filesRead} of ${cs.liveFilesTotal}")
+    assert(sales.rowCountFromMetadata.exists(
+      _ < MaterializedViewManager.DefaultRetractionCrossoverRows),
+      "the base must sit below the row crossover with a known count")
+    assert(mvm.refreshIncremental("mv_f") == "retraction",
+      "a narrow change on a small base must fold, not rebuild")
+    val want = sales.read().groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"amt".cast("decimal(18,2)")).cast("double").as("s"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(want == Set(("a", 8L, 57.0), ("b", 7L, 61.0)))
+    assert(state() == want)
   }
 
   test("retraction fold: UPDATE nets the metric diff; partial deletes keep survivors; REPLACE and min/max MVs rebuild") {
