@@ -1280,11 +1280,11 @@ final class ReplicationService(primary: Catalog, secondary: Catalog) {
     import primary.spark.implicits._
     val g = groups(groupName)
     val rows = g.tables.map { case (schema, t) =>
-      def state(c: Catalog): (Long, Int) = {
-        val tb = c.table(schema, t)
-        if (!tb.exists) (-1L, -1)
-        else (tb.currentSnapshotId.getOrElse(-1L), tb.snapshots().size)
-      }
+      def state(c: Catalog): (Long, Int) = // one marker listing per side
+        c.table(schema, t).snapshots() match {
+          case Seq() => (-1L, -1)
+          case snaps => (snaps.last._1, snaps.size)
+        }
       val (ph, pn) = state(primary)
       val (sh, sn) = state(secondary)
       (s"$schema.$t", ph, pn, sh, sn)

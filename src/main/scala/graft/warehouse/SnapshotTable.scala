@@ -1,6 +1,6 @@
 package graft.warehouse
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** A parquet-backed table with Iceberg-style snapshot history.
@@ -83,11 +83,76 @@ final class SnapshotTable(
       if (f.length > 5 && f(5).nonEmpty) Some(f(5).toLong) else None)
   }
 
-  private def metas(): Seq[SnapMeta] = {
-    val p = new Path(root)
-    if (!fs.exists(p)) return Seq.empty
+  /** One listing of the table root: its markers, parsed, and the status
+    * of every entry by name. A public call takes one and derives the head,
+    * chain, specs, column ops and live delete sets from it, so all it
+    * resolves describes one cut of the table, for one listing. Only the
+    * commit protocol's correctness steps (the claim's rival check, the
+    * validation under the commit lock) list afresh. */
+  private final class Listing(val metas: Seq[SnapMeta], entries: Seq[FileStatus]) {
+    private val byName = entries.map(st => st.getPath.getName -> st).toMap
+    def head: Option[Long] = metas.lastOption.map(_.id)
+    def exists: Boolean = metas.nonEmpty
+    def statuses: Seq[FileStatus] = entries
+    def has(name: String): Boolean = byName.contains(name)
+    /** A listed entry's (len, mtime) — the [[StampedCache]] stamp. */
+    def stamp(name: String): Option[(Long, Long)] =
+      byName.get(name).map(st => (st.getLen, st.getModificationTime))
+
+    /** The data-bearing members a read at the head resolves to. */
+    lazy val chain: Seq[SnapMeta] = head.toSeq.flatMap(dataChainFrom(metas, _))
+
+    /** The live chain's equality-delete batches — what every read of
+      * current state anti-joins. Superseded originals are carried by
+      * their merge and skipped. */
+    lazy val liveDels: Seq[SnapMeta] = {
+      val dels = chain.filter(carriesEqDeletes)
+      val sup = supersededIds(dels)
+      dels.filterNot(m => sup(m.id))
+    }
+
+    /** The live chain's positional-delete batches (superseded originals
+      * are carried by their [[compactDeletes]] merge, skipped). */
+    lazy val livePosDels: Seq[SnapMeta] = {
+      val sup = supersededIds(chain)
+      chain.filter(carriesPosDeletes).filterNot(m => sup(m.id))
+    }
+
+    /** Every column op (all are at or below the head). */
+    lazy val ops: Seq[ColOp] = colOpsFrom(metas, Long.MaxValue)
+
+    /** The current partition and sort specs: the newest `base` rewrite or
+      * `spec` evolution marker wins (empty = unpartitioned, unsorted). */
+    private lazy val layout = metas.reverse.find(m => m.kind == "base" || m.kind == "spec")
+    def partitionSpec: Seq[String] = layout.map(_.parts).getOrElse(Seq.empty)
+    def sortSpec: Seq[String] = layout.map(_.sort).getOrElse(Seq.empty)
+
+    /** Ids of staged (write-audit-publish) snapshots and optimistic
+      * placeholders: a `.staged` marker with no `.meta` beside it. */
+    def stagedIds: Seq[Long] = stagedNames.filterNot(publishedStaged).map(stagedId).sorted
+
+    /** Staged markers whose `.meta` is listed too: debris of a publish
+      * that crashed between marker write and staged-marker cleanup. */
+    def publishedStaged(name: String): Boolean = has(metaFile(stagedId(name)).getName)
+
+    def stagedNames: Seq[String] = byName.keys.filter(_.endsWith(".staged")).toSeq
+
+    private def stagedId(name: String): Long =
+      name.stripPrefix("snap-").stripSuffix(".staged").toLong
+
+    /** Ids claimed by an in-flight writer (this process or any other):
+      * one `snap-<id>.claim.<writer>` file per claimant. */
+    def claimedIds: Seq[Long] = byName.keys.filter(_.contains(".claim."))
+      .map(_.stripPrefix("snap-").takeWhile(_.isDigit))
+      .filter(_.nonEmpty).map(_.toLong).toSeq.distinct.sorted
+  }
+
+  /** List the table root once (an absent root lists as an empty table). */
+  private def listing(): Listing = {
+    val entries = try fs.listStatus(new Path(root)).toSeq
+      catch { case _: java.io.FileNotFoundException => return new Listing(Seq.empty, Seq.empty) }
     val qroot = qualifiedRoot
-    fs.listStatus(p).toSeq
+    val metas = entries
       .filter(_.getPath.getName.endsWith(".meta"))
       .map { st =>
         val name = st.getPath.getName
@@ -102,7 +167,10 @@ final class SnapshotTable(
         parseMarkerLine(id, line)
       }
       .sortBy(_.id)
+    new Listing(metas, entries)
   }
+
+  private def metas(): Seq[SnapMeta] = listing().metas
 
   /** Whether a change window starting at `sinceId` is still fully
     * reconstructible from the surviving marker chain: true when `sinceId`
@@ -118,10 +186,6 @@ final class SnapshotTable(
   /** The data-bearing snapshots a read at `id` resolves to: nearest base
     * at-or-before `id` plus the appends after it, `spec` and `colmap`
     * markers skipped (they carry layout/naming only, no data dir). */
-  private def dataChainAt(id: Long): Seq[SnapMeta] = dataChainFrom(metas(), id)
-
-  /** [[dataChainAt]] over an already-fetched marker list — `metas()`
-    * reads one file per marker, so hot read paths fetch once and slice. */
   private def dataChainFrom(ms: Seq[SnapMeta], id: Long): Seq[SnapMeta] = {
     val snaps = ms.takeWhile(_.id <= id)
     snaps.drop(snaps.lastIndexWhere(_.kind == "base"))
@@ -265,16 +329,6 @@ final class SnapshotTable(
   private def delRowsPath(m: SnapMeta): Path =
     if (m.kind == "mor") delRowsDir(m.id) else snapDir(m.id)
 
-  /** The delete-sidecar-carrying members of the CURRENT live chain — the
-    * batches every read of current state must anti-join. Superseded
-    * originals are carried by their merge and skipped. */
-  private def liveDels(): Seq[SnapMeta] =
-    currentSnapshotId.toSeq.flatMap(dataChainAt).filter(carriesEqDeletes) match {
-      case dels =>
-        val sup = supersededIds(dels)
-        dels.filterNot(m => sup(m.id))
-    }
-
   /** The `snap-NNNNN` id encoded in a qualified snapshot-dir path. */
   private def idOfSnapDirPath(dir: String): Long =
     dir.substring(dir.lastIndexOf("snap-") + 5).takeWhile(_.isDigit).toLong
@@ -301,15 +355,6 @@ final class SnapshotTable(
     * counts its INSERTS — its delete side is recorded in `.excl`. */
   private def posDelRowCount(m: SnapMeta): Option[Long] =
     if (isPosMor(m)) readExclusion(m.id).map(_.rows) else m.rows
-
-  /** The positional-delete members of the CURRENT live chain (superseded
-    * originals are carried by their [[compactDeletes]] merge, skipped). */
-  private def livePosDels(): Seq[SnapMeta] =
-    currentSnapshotId.toSeq.flatMap(dataChainAt) match {
-      case chain =>
-        val sup = supersededIds(chain)
-        chain.filter(carriesPosDeletes).filterNot(m => sup(m.id))
-    }
 
   /** Attach the position-identity columns at a LEAF scan (the hidden
     * `_metadata` column does not survive unions). `__file` slices at the
@@ -471,11 +516,16 @@ final class SnapshotTable(
 
   /** A small sidecar's key columns, read on the driver by Spark's
     * vectorized parquet reader: no Spark job. None when a key's type is
-    * outside [[SnapshotTable.plainKeyType]] or is a date/time (the
-    * path-opened reader reads no INT96 timestamps and does no datetime
-    * rebase) — that batch's group keeps the sidecar anti-join. */
+    * outside [[SnapshotTable.plainKeyType]] or is a date/time (the reader
+    * is set up as Spark's path-opened one is: it reads no INT96 timestamps
+    * and does no datetime rebase) — that batch's group keeps the sidecar
+    * anti-join. The reader opens each file over a copy of the session's
+    * Hadoop conf; its path-opened form builds a fresh `Configuration`,
+    * which parses Hadoop's default resources again, per file. */
   private def readDelKeys(b: SnapMeta,
                           physKeys: Seq[String]): Option[SnapshotTable.CapturedDelKeys] = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    import org.apache.spark.sql.internal.SQLConf
     import org.apache.spark.sql.types.{DateType, StructType, TimestampNTZType, TimestampType}
     import scala.jdk.CollectionConverters._
     val files = dataFiles(delRowsPath(b)).toSeq
@@ -485,11 +535,21 @@ final class SnapshotTable(
       else {
         val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToScalaConverter(schema)
+        val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+        Seq(SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+            SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+            SQLConf.LEGACY_PARQUET_NANOS_AS_LONG).foreach(e => conf.setBoolean(e.key, false))
+        conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+          classOf[ParquetReadSupport].getName)
+        conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+        val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+          conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
         val rows = files.flatMap { f =>
           val r = new org.apache.spark.sql.execution.datasources.parquet
             .VectorizedParquetRecordReader(false, SnapshotTable.SmallSidecarRowCap)
           try {
-            r.initialize(f.toString, physKeys.asJava)
+            r.initialize(new org.apache.hadoop.mapred.FileSplit(
+              f, 0L, fs.getFileStatus(f).getLen, Array.empty[String]), task)
             r.initBatch(new StructType(), null)
             val out = Seq.newBuilder[org.apache.spark.sql.Row]
             while (r.nextBatch())
@@ -705,8 +765,10 @@ final class SnapshotTable(
     * table — live (marker note) or expired ([[retiredNotes]])? The
     * replay-refusal predicate for note-deduped exactly-once consumers;
     * unlike a bare [[commitNotes]] scan it survives compact + expire. */
-  def noteEverCommitted(n: String): Boolean =
-    commitNotes().exists(_._2.split(' ').contains(n)) ||
+  def noteEverCommitted(n: String): Boolean = noteEverCommittedIn(listing(), n)
+
+  private def noteEverCommittedIn(l: Listing, n: String): Boolean =
+    l.metas.exists(_.note.exists(_.split(' ').contains(n))) ||
       retiredNotes().exists(_.split(' ').contains(n))
 
   /** (id, kind) for every committed snapshot, ascending — the table history
@@ -715,17 +777,13 @@ final class SnapshotTable(
 
   /** The CURRENT partition spec: the newest `base` rewrite or `spec`
     * evolution marker wins (empty = unpartitioned). */
-  def partitionSpec(): Seq[String] =
-    metas().reverse.find(m => m.kind == "base" || m.kind == "spec")
-      .map(_.parts).getOrElse(Seq.empty)
+  def partitionSpec(): Seq[String] = listing().partitionSpec
 
   /** The current clustering (sort-within-files) spec, same resolution. */
-  def sortSpec(): Seq[String] =
-    metas().reverse.find(m => m.kind == "base" || m.kind == "spec")
-      .map(_.sort).getOrElse(Seq.empty)
+  def sortSpec(): Seq[String] = listing().sortSpec
 
-  def exists: Boolean = metas().nonEmpty
-  def currentSnapshotId: Option[Long] = metas().lastOption.map(_.id)
+  def exists: Boolean = listing().exists
+  def currentSnapshotId: Option[Long] = listing().head
 
   /** One walk over the parquet FOOTERS of a just-written snapshot dir —
     * metadata-only I/O, no Spark job. Returns the total row count AND the
@@ -737,21 +795,21 @@ final class SnapshotTable(
     * file-level bounds + value/null counts (+ NDV, Iceberg keeps that one
     * in puffin sketches) once at commit time; scan planning afterwards
     * prunes files from metadata alone — at 100 TB that decides whether a
-    * time-range query opens 100 TB of data or 100 GB. */
-  private def footerWalk(dir: Path): (Long, Seq[String]) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+    * time-range query opens 100 TB of data or 100 GB. `open` opens one
+    * file's footer ([[SnapshotTable.openParquet]] over the session's
+    * Hadoop conf unless a caller says otherwise). */
+  private[graft] def footerWalk(dir: Path,
+      open: Path => org.apache.parquet.hadoop.ParquetFileReader = openParquet): (Long, Seq[String]) = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.io.api.Binary
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
     val dirStr = fs.makeQualified(dir).toString
     var n = 0L
     val lines = Seq.newBuilder[String]
     dataFiles(dir).foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val r = open(f)
       try {
         n += r.getRecordCount
         val rel = f.toString.stripPrefix(dirStr).stripPrefix("/")
@@ -904,47 +962,22 @@ final class SnapshotTable(
     out.toString
   }
 
-  /** Ids of staged (write-audit-publish) snapshots: data + stats are on
-    * disk under a `.staged` marker, INVISIBLE to every read path until
-    * [[publishStaged]] swaps the marker for a `.meta`. A staged id whose
-    * `.meta` also exists is a publish that crashed between marker write
-    * and staged-marker cleanup — already committed, not staged. */
-  private def stagedIds(): Seq[Long] = {
-    val p = new Path(root)
-    if (!fs.exists(p)) return Seq.empty
-    val (published, staged) = fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".staged"))
-      .map(_.stripPrefix("snap-").stripSuffix(".staged").toLong)
-      .partition(id => fs.exists(metaFile(id)))
-    // a staged marker alongside its .meta is debris from a publish that
-    // crashed between marker write and cleanup — the commit happened;
-    // finish the crashed publish's last step so the id doesn't re-enter
-    // stagedIds() forever (best-effort: read-only filesystems just keep
-    // tolerating the debris, as before)
-    published.foreach(id => try fs.delete(stagedFile(id), false) catch { case _: Exception => () })
-    staged.sorted
+  /** Next unclaimed snapshot id, from one fresh listing: past every
+    * COMMITTED id, every STAGED id (data + stats on disk under a
+    * `.staged` marker, invisible to reads until [[publishStaged]] swaps it
+    * for a `.meta`; a regular commit must never treat a staged writer's
+    * dir as its own orphan), and every id CLAIMED by an in-flight writer
+    * in any process (a crashed writer's claim merely parks its id until
+    * [[sweepStaleClaims]] reaps it). A staged marker listed beside its
+    * `.meta` is a publish that crashed between marker write and cleanup —
+    * committed, not staged; its last step is finished here (best-effort:
+    * a read-only file system just keeps tolerating the debris). */
+  private def nextId(): Long = {
+    val l = listing()
+    l.stagedNames.filter(l.publishedStaged).foreach(n =>
+      try fs.delete(new Path(root, n), false) catch { case _: Exception => () })
+    (l.head.toSeq ++ l.stagedIds ++ l.claimedIds).foldLeft(0L)(math.max) + 1
   }
-
-  /** Ids currently claimed by an in-flight writer (this process or any
-    * other): one `snap-<id>.claim.<writer>` file per claimant. A crashed
-    * writer's claim merely parks its id forever (ids are cheap; nothing
-    * blocks) until [[sweepStaleClaims]] reaps it. */
-  private def claimedIds(): Seq[Long] = {
-    val p = new Path(root)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.contains(".claim."))
-      .map(_.stripPrefix("snap-").takeWhile(_.isDigit))
-      .filter(_.nonEmpty).map(_.toLong).distinct.sorted
-  }
-
-  /** Next unclaimed snapshot id: past every COMMITTED id, every STAGED
-    * id (a regular commit must never treat a staged writer's dir as its
-    * own orphan), and every id CLAIMED by an in-flight writer in any
-    * process. */
-  private def nextId(): Long =
-    (currentSnapshotId.toSeq ++ stagedIds() ++ claimedIds())
-      .foldLeft(0L)(math.max) + 1
 
   /** CROSS-PROCESS id claim — the piece a shared-directory warehouse needs
     * where real Iceberg leans on its catalog's atomic swap. The JVM-local
@@ -1053,12 +1086,10 @@ final class SnapshotTable(
     * reclaimed entry names. */
   def removeOrphans(graceMs: Long = 24L * 3600 * 1000): Seq[String] = withCommitLock {
     writeGuard()
-    val p = new Path(root)
-    if (!fs.exists(p)) return Seq.empty
     val cutoff = System.currentTimeMillis() - graceMs
-    val live: Set[Long] =
-      (metas().map(_.id) ++ stagedIds() ++ claimedIds()).toSet
-    val entries = fs.listStatus(p).toSeq
+    val l = listing()
+    val live: Set[Long] = (l.metas.map(_.id) ++ l.stagedIds ++ l.claimedIds).toSet
+    val entries = l.statuses
     val removed = Seq.newBuilder[String]
     entries.foreach { st =>
       val n = st.getPath.getName
@@ -1198,11 +1229,13 @@ final class SnapshotTable(
   private def withCommitLock[T](f: => T): T =
     processLock.getOrElse(SnapshotTable.lockFor(root)).synchronized(f)
 
+  /** `at`: a listing the caller already holds, if any. */
   private def commit(df: DataFrame, kind: String, parts: Seq[String] = Seq.empty,
                      sort: Seq[String] = Seq.empty,
-                     note: Option[String] = None): Long = withCommitLock {
+                     note: Option[String] = None,
+                     at: Option[Listing] = None): Long = withCommitLock {
     writeGuard() // BCDR: unpromoted secondaries refuse writes (D11)
-    val isNew = currentSnapshotId.isEmpty
+    val isNew = at.getOrElse(listing()).head.isEmpty
     val id = claimId()
     try {
       val rows = writeSnapshotData(df, id, parts, sort, trySmall = localBatch(df))
@@ -1304,19 +1337,21 @@ final class SnapshotTable(
 
   /** What one optimistic attempt commits: its placeholder marker's kind
     * and note, and `write`, which lands the data under the claimed id
-    * and returns the publish step. */
+    * and returns the publish step. The publish step receives the listing
+    * the attempt was validated against. */
   private final class Attempt[+T](val kind: String, val note: String,
-                                 val write: Long => (() => T))
+                                 val write: Long => (Listing => T))
 
   private def stage[T](kind: String, note: String)(
-      write: Long => (() => T)): Either[T, Attempt[T]] =
+      write: Long => (Listing => T)): Either[T, Attempt[T]] =
     Right(new Attempt(kind, note, write))
 
   /** THE optimistic commit protocol (Iceberg's write → validate → swap),
-    * shared by every DML writer and both compactions. Each attempt
-    * captures the head and calls `attempt(head)`, which either finishes
-    * without committing (`Left` — a no-op claims nothing) or [[stage]]s a
-    * write. The heavy write runs OUTSIDE the commit lock — an hours-long
+    * shared by every DML writer and both compactions. Each attempt lists
+    * the root once — the first attempt may reuse the caller's `first`
+    * listing — and calls `attempt(listing)`, which resolves everything it
+    * reads from that one cut and either finishes without committing
+    * (`Left` — a no-op claims nothing) or [[stage]]s a write. The heavy write runs OUTSIDE the commit lock — an hours-long
     * 100 TB rewrite must not block ingest — under a claimed id that a
     * placeholder `.staged` marker holds (visible to [[nextId]] in every
     * process, invisible to readers and to the WAP surface). The publish
@@ -1326,16 +1361,17 @@ final class SnapshotTable(
     * so the id's artifacts are discarded and the attempt retries on the
     * new head. A write or publish that throws before the commit point
     * discards them too. */
-  private def optimisticCommit[T](what: String)(
-      attempt: Long => Either[T, Attempt[T]]): T = {
+  private def optimisticCommit[T](what: String, first: Option[Listing] = None)(
+      attempt: Listing => Either[T, Attempt[T]]): T = {
     var result: Option[T] = None
     var attempts = 0
     while (result.isEmpty) {
       attempts += 1
       if (attempts > 50) throw new IllegalStateException(
         s"$what of $root lost the commit race $attempts times — writer storm?")
-      val head = currentSnapshotId.get
-      attempt(head) match {
+      val at = first.filter(_ => attempts == 1).getOrElse(listing())
+      val head = at.head.get
+      attempt(at) match {
         case Left(done) => result = Some(done)
         case Right(a) =>
           val id = withCommitLock {
@@ -1357,12 +1393,13 @@ final class SnapshotTable(
           try {
             val publish = a.write(id)
             withCommitLock {
-              if (currentSnapshotId.get == head) result = Some(publish())
+              val now = listing()
+              if (now.head.get == head) result = Some(publish(now))
               else discardArtifacts(id) // head moved: the write is stale, retry
             }
           } catch { case e: Throwable =>
             // a throw past the marker rename (the commit point) keeps the
-            // commit; stagedIds() reaps its leftover placeholder
+            // commit; nextId() reaps its leftover placeholder
             if (!fs.exists(metaFile(id))) discardArtifacts(id)
             throw e
           }
@@ -1370,6 +1407,10 @@ final class SnapshotTable(
     }
     result.get
   }
+
+  /** Whether `id`'s own placeholder is the only staged marker `l` holds —
+    * no WAP batch or other writer's attempt is staged at commit time. */
+  private def onlyStaged(l: Listing, id: Long): Boolean = l.stagedIds.forall(_ == id)
 
   /** A wap id rides the note as a `wap=<id>` token — the same character
     * restrictions as [[stageAppend]]'s. */
@@ -1388,13 +1429,14 @@ final class SnapshotTable(
   def evolvePartitionSpec(partitionBy: Seq[String],
                           sortBy: Option[Seq[String]] = None): Long = withCommitLock {
     writeGuard()
-    require(exists, s"evolve of non-existent table at $root")
+    val l = listing()
+    require(l.exists, s"evolve of non-existent table at $root")
     // claimId(), not head+1: a marker-only commit must also skip past
     // staged (WAP) ids — claiming a staged writer's id would make
-    // stagedIds() treat the staged batch as already committed and silently
+    // nextId() treat the staged batch as already committed and silently
     // lose it at publish — and past other processes' in-flight claims
     val id = claimId()
-    try writeMarker(id, "spec", partitionBy, 0L, sortBy.getOrElse(sortSpec()), None)
+    try writeMarker(id, "spec", partitionBy, 0L, sortBy.getOrElse(l.sortSpec), None)
     finally releaseClaim(id)
     id
   }
@@ -1428,8 +1470,6 @@ final class SnapshotTable(
   /** The colmap ops at or below `uptoId`, ascending. Ops below a chain's
     * base never match its members (op.id > ownerId is always false), so
     * taking every marker is safe and keeps callers simple. */
-  private def colOpsUpTo(uptoId: Long): Seq[ColOp] = colOpsFrom(metas(), uptoId)
-
   private def colOpsFrom(ms: Seq[SnapMeta], uptoId: Long): Seq[ColOp] =
     ms.filter(m => m.kind == "colmap" && m.id <= uptoId).flatMap(parseColOps)
 
@@ -1602,12 +1642,10 @@ final class SnapshotTable(
     require(!partitionSpec().contains(name) && !sortSpec().contains(name),
       s"column '$name' is in the current partition/sort spec at $root — " +
         "evolvePartitionSpec away from it first")
-    val sup = supersededIds(dataChainAt(currentSnapshotId.get))
     // compare LOGICAL key names: a sidecar recorded before a rename keys
     // physically on the old name but applies under the current one
-    val priorOps = colOpsUpTo(Long.MaxValue)
-    val keyedOnIt = liveDels().filterNot(m => sup(m.id))
-      .filter(m => logicalDelKeys(m, priorOps).contains(name))
+    val l = listing()
+    val keyedOnIt = l.liveDels.filter(m => logicalDelKeys(m, l.ops).contains(name))
     require(keyedOnIt.isEmpty,
       s"column '$name' keys live equality-delete sidecar(s) " +
         s"${keyedOnIt.map(_.id).mkString(", ")} at $root — compact first")
@@ -1701,10 +1739,10 @@ final class SnapshotTable(
     var schema: Vector[StructField] = read().schema.fields.toVector
     // in-batch name → PRE-batch (live) name; in-batch adds have no entry
     var preName: Map[String, String] = schema.map(f => f.name -> f.name).toMap
-    val pSpec = partitionSpec(); val sSpec = sortSpec()
-    val sup = supersededIds(dataChainAt(currentSnapshotId.get))
-    val priorOps = colOpsUpTo(Long.MaxValue)
-    val liveSidecars = liveDels().filterNot(m => sup(m.id))
+    val l = listing()
+    val pSpec = l.partitionSpec; val sSpec = l.sortSpec
+    val priorOps = l.ops
+    val liveSidecars = l.liveDels
     val segs = Seq.newBuilder[String]
     alters.foreach { a =>
       val cols = schema.map(_.name).toSet
@@ -1825,8 +1863,9 @@ final class SnapshotTable(
 
   private def commitColOp(note: String): Long = {
     // claimId(), not head+1 — the evolvePartitionSpec rationale
+    val l = listing()
     val id = claimId()
-    try writeMarker(id, "colmap", partitionSpec(), 0L, sortSpec(), Some(note))
+    try writeMarker(id, "colmap", l.partitionSpec, 0L, l.sortSpec, Some(note))
     finally releaseClaim(id)
     id
   }
@@ -1836,7 +1875,7 @@ final class SnapshotTable(
     * replication surface: an incremental cycle ships the window's ops to
     * the mirror before its row changes. */
   def columnOps(): Seq[(Long, String, String, String, Option[String])] =
-    colOpsUpTo(Long.MaxValue).map(o => (o.id, o.op, o.from, o.to, o.dflt))
+    listing().ops.map(o => (o.id, o.op, o.from, o.to, o.dflt))
 
   /** The ops in the half-open window (sinceId, endId]. */
   def columnOpsBetween(sinceId: Long,
@@ -1977,8 +2016,10 @@ final class SnapshotTable(
     * own auto-broadcast uses the same on-disk-bytes basis for file
     * relations, so thresholds are directly comparable). None when the
     * table doesn't exist. */
-  def sizeInBytesFromMetadata: Option[Long] = currentSnapshotId.map { id =>
-    val chain = dataChainAt(id)
+  def sizeInBytesFromMetadata: Option[Long] = sizeInBytesAt(listing())
+
+  private def sizeInBytesAt(l: Listing): Option[Long] = l.head.map { _ =>
+    val chain = l.chain
     // `del`/`pdel` sidecars are not scannable table bytes (their rows are
     // the DELETED ones); the bytes those rows still occupy in data files
     // stay counted until vacuum/compact — conservative for broadcast sizing
@@ -2003,9 +2044,10 @@ final class SnapshotTable(
     * marker ATOMICALLY with the data becoming visible — the transactional
     * hook streaming ingestion builds exactly-once on. */
   def append(df: DataFrame, note: Option[String] = None): Long = {
-    require(exists, s"append to non-existent table at $root")
+    val l = listing()
+    require(l.exists, s"append to non-existent table at $root")
     requireNoteSafe(note)
-    commit(df, "append", partitionSpec(), sortSpec(), note)
+    commit(df, "append", l.partitionSpec, l.sortSpec, note, Some(l))
   }
 
   // ---- WRITE-AUDIT-PUBLISH staging (the Iceberg `spark.wap.id` pattern) ----
@@ -2020,11 +2062,11 @@ final class SnapshotTable(
   // exactly once whether the batch passes audit or not, and a failed audit
   // costs a marker delete, not a table rollback.
 
-  private def stagedMetas(): Seq[SnapMeta] =
+  private def stagedMetas(l: Listing = listing()): Seq[SnapMeta] =
     // a staged marker whose data dir is gone is debris from a crashed
     // publish-rename (the commit already happened under the new id, or the
     // orphan sweep will reclaim the target dir) — never offer it again
-    stagedIds().filter(id => fs.exists(snapDir(id)))
+    l.stagedIds.filter(id => l.has(snapDir(id).getName))
       .map(id => parseMarker(id, stagedFile(id)))
 
   /** Stage an append under audit id `wapId`: full data + stats write, no
@@ -2033,7 +2075,8 @@ final class SnapshotTable(
     * same re-application onto the current head). */
   def stageAppend(df: DataFrame, wapId: String): Long = withCommitLock {
     writeGuard()
-    require(exists, s"stage on non-existent table at $root")
+    val l = listing()
+    require(l.exists, s"stage on non-existent table at $root")
     // ' ' also rejected: the note is `wap=<id>`, and a wap id containing
     // a space would tokenize its tail into the note-field namespace
     // ([[noteField]] splits on spaces — reserved seq=/merged= territory)
@@ -2041,9 +2084,9 @@ final class SnapshotTable(
       s"invalid wap id '$wapId'")
     val id = claimId()
     try {
-      val rows = writeSnapshotData(df, id, partitionSpec(), sortSpec(),
+      val rows = writeSnapshotData(df, id, l.partitionSpec, l.sortSpec,
         trySmall = localBatch(df))
-      val line = markerLine("append", partitionSpec(), rows, sortSpec(), Some(s"wap=$wapId"))
+      val line = markerLine("append", l.partitionSpec, rows, l.sortSpec, Some(s"wap=$wapId"))
       val out = fs.create(stagedFile(id)) // staged marker last = staging point
       try out.write(line.getBytes("UTF-8")) finally out.close()
     } finally releaseClaim(id)
@@ -2080,7 +2123,7 @@ final class SnapshotTable(
         "a delete side a bare union cannot render — publish or discard them")
     // a column op committed after staging maps the staged dirs exactly
     // like committed ones (identity when the table has no ops)
-    val ops = colOpsUpTo(Long.MaxValue)
+    val ops = listing().ops
     mine.map(m =>
         applyColmap(spark.read.parquet(snapDir(m.id).toString), m.id, ops))
       .foldLeft(read())(_.unionByName(_, allowMissingColumns = true))
@@ -2389,8 +2432,10 @@ final class SnapshotTable(
     * Snapshot dirs are read separately and unioned (each dir does its own
     * hive partition discovery — one multi-path read would reject the
     * mixed snapshot-dir/partition-dir layout as conflicting structures). */
-  def asOf(id: Long): DataFrame = {
-    val ms = metas() // one marker fetch serves chain, ops, and the guard
+  def asOf(id: Long): DataFrame = asOfIn(listing(), id)
+
+  private def asOfIn(l: Listing, id: Long): DataFrame = {
+    val ms = l.metas
     require(ms.exists(_.id <= id), s"no snapshot ≤ $id at $root")
     val chain = dataChainFrom(ms, id)
     val sup = supersededIds(chain)
@@ -2405,13 +2450,13 @@ final class SnapshotTable(
     val mkDf: SnapMeta => Option[DataFrame] =
       if (excl.isEmpty)
         // fast path (no cow in chain): whole-dir reads, zero file listings
-        s => Some(snapDirRead(s.id))
+        s => Some(snapDirRead(l, s.id))
       else { s =>
         // a cow replaced files inside earlier dirs: each dir reads its
         // surviving file list (basePath keeps hive partition columns)
         val files = listParquet(snapDir(s.id)).filterNot(f => excl(relToRoot(f)))
         if (files.isEmpty) None
-        else Some(snapDirRead(s.id, files))
+        else Some(snapDirRead(l, s.id, files))
       }
     // positional fold: identity attaches at each LEAF (hidden _metadata
     // doesn't survive unions), but the anti-join applies ONCE on the
@@ -2470,7 +2515,8 @@ final class SnapshotTable(
     * travelable until `expireSnapshots`. */
   def compact(targetFileBytes: Long = SnapshotTable.DefaultTargetFileBytes): Long = {
     writeGuard()
-    require(exists, s"compact of non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"compact of non-existent table at $root")
     // Optimistic ([[optimisticCommit]], Iceberg's RewriteFiles
     // validation): an append that lands mid-rewrite is NOT in the
     // rewritten base, so the rewrite is discarded and retried on the
@@ -2478,8 +2524,8 @@ final class SnapshotTable(
     // rewrite: compaction adds no logical rows, so a streaming tail
     // ([[appendsBetween]]) can skip it where a true rewrite must fail the
     // stream.
-    optimisticCommit("compact") { head =>
-      val chain = asOf(head) // exactly head's chain, even if writers race
+    optimisticCommit("compact", Some(first)) { l =>
+      val chain = readAt(l) // exactly head's chain, even if writers race
       stage("base", "compacting") { id =>
         // Bin-pack the rewrite (Iceberg rewrite_data_files `target-file-
         // size-bytes`): without an explicit shape, the output inherits one
@@ -2492,18 +2538,18 @@ final class SnapshotTable(
         // pruning than the incremental appends had), else co-partition by
         // the partition spec, else round-robin.
         val nParts = math.max(1, math.ceil(
-          sizeInBytesFromMetadata.getOrElse(0L).toDouble / targetFileBytes).toInt)
-        val sortCols = sortSpec().filter(chain.columns.contains)
-        val partCols = partitionSpec().filter(chain.columns.contains)
+          sizeInBytesAt(l).getOrElse(0L).toDouble / targetFileBytes).toInt)
+        val sortCols = l.sortSpec.filter(chain.columns.contains)
+        val partCols = l.partitionSpec.filter(chain.columns.contains)
         val sized =
           if (sortCols.nonEmpty)
             chain.repartitionByRange(nParts, sortCols.map(chain.col): _*)
           else if (partCols.nonEmpty)
             chain.repartition(nParts, partCols.map(chain.col): _*)
           else chain.repartition(nParts)
-        val rows = writeSnapshotData(sized, id, partitionSpec(), sortSpec())
-        () => {
-          finalizeMarker(id, "base", partitionSpec(), rows, sortSpec(), Some("compact"))
+        val rows = writeSnapshotData(sized, id, l.partitionSpec, l.sortSpec)
+        _ => {
+          finalizeMarker(id, "base", l.partitionSpec, rows, l.sortSpec, Some("compact"))
           id
         }
       }
@@ -2546,20 +2592,19 @@ final class SnapshotTable(
     require(minRun >= 2, s"minRun must be ≥ 2, got $minRun")
     // one merge per helper call: the commit itself moves the head, so the
     // next call recomputes runs on the fresh chain
-    def mergeOne(): Option[Long] = optimisticCommit("compactDeletes") { head =>
-      val chain = dataChainAt(head)
+    def mergeOne(): Option[Long] = optimisticCommit("compactDeletes") { l =>
+      val chain = l.chain
       val sup = supersededIds(chain)
       val live = chain.filter(_.kind == "del").filterNot(m => sup(m.id))
       // effective sequences of data-CARRYING commits (base/append/cow/mor):
       // two sidecars may merge iff no such id separates their seqs — the
       // set of data snapshots each applies to is then identical. COLMAP
-      // ids are barriers too (they carry no data but dataChainAt drops
+      // ids are barriers too (they carry no data but the data chain drops
       // them, so they must re-enter here): two sidecars physically keyed
       // "k" on either side of a rename chain (k→y, then x→k) target
       // DIFFERENT logical columns — merging them would anti-join the
       // later sidecar's values against the wrong column
-      val colmapIds = metas().filter(m => m.kind == "colmap" && m.id <= head)
-        .map(_.id)
+      val colmapIds = l.metas.filter(_.kind == "colmap").map(_.id)
       val dataIds =
         (chain.filterNot(_.kind == "del").map(_.id) ++ colmapIds).sorted
       def dataBetween(a: Long, b: Long): Boolean =
@@ -2600,7 +2645,7 @@ final class SnapshotTable(
             .reduce(_.unionByName(_, allowMissingColumns = true))
             .coalesce(1)
           val rows = writeSnapshotData(union, id, Seq.empty, Seq.empty)
-          () => {
+          _ => {
             finalizeMarker(id, kind, Seq.empty, rows, Seq.empty, Some(note))
             Some(id)
           }
@@ -2615,24 +2660,29 @@ final class SnapshotTable(
     * tiny `.excl` sidecar). The maintenance pressure gauge: Iceberg keys
     * delete-file compaction on exactly this count, and
     * [[graft.services.MaintenanceService]] sweeps on it here. */
-  def pendingDeleteBatches(): Int = liveDels().count(m =>
-    m.kind == "del" || readExclusion(m.id).forall(_.rows > 0L)) +
-    livePosDels().count(m =>
-      m.kind == "pdel" || readExclusion(m.id).forall(_.rows > 0L))
+  def pendingDeleteBatches(): Int = {
+    val l = listing()
+    l.liveDels.count(m => m.kind == "del" || readExclusion(m.id).forall(_.rows > 0L)) +
+      l.livePosDels.count(m => m.kind == "pdel" || readExclusion(m.id).forall(_.rows > 0L))
+  }
 
   /** Rows the pending delete sidecars hold (deleted but not yet folded
     * into data files) — metadata only. None when some batch predates
     * count recording. */
   def pendingDeleteRows(): Option[Long] = {
-    val counts = liveDels().map { m =>
+    val l = listing()
+    val counts = l.liveDels.map { m =>
       if (m.kind == "del") m.rows
       else readExclusion(m.id).map(_.rows)
-    } ++ livePosDels().map(posDelRowCount)
+    } ++ l.livePosDels.map(posDelRowCount)
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
   /** Current table state. */
-  def read(): DataFrame = asOf(currentSnapshotId.getOrElse(
+  def read(): DataFrame = readAt(listing())
+
+  /** The table state at `l`'s head. */
+  private def readAt(l: Listing): DataFrame = asOfIn(l, l.head.getOrElse(
     throw new IllegalStateException(s"table at $root does not exist")))
 
   /** The snapshot dirs the CURRENT `read()` resolves to (nearest base plus
@@ -2641,10 +2691,9 @@ final class SnapshotTable(
     * by EQUALITY, so a time-travel (`asOf`) or delta (`appendsSince`) scan
     * over the same root — a different dir set — can never be misrouted to
     * the full-table MV answer. */
-  def liveSnapshotDirs(): Seq[String] = currentSnapshotId.toSeq.flatMap { id =>
-    dataChainAt(id).filterNot(m => m.kind == "del" || m.kind == "pdel")
+  def liveSnapshotDirs(): Seq[String] =
+    listing().chain.filterNot(m => m.kind == "del" || m.kind == "pdel")
       .map(s => snapDir(s.id).toString)
-  }
 
   /** The root paths the CURRENT `read()` plan reports for its scans —
     * whole snapshot dirs on the exclusion-free fast path, the surviving
@@ -2652,9 +2701,10 @@ final class SnapshotTable(
     * per-file reads). MV routing matches a query's scanned path set
     * against this by EQUALITY, so it keeps firing across file-pruned DML
     * while time-travel/delta scans (different sets) still decline. */
-  def liveScanPaths(): Set[String] = currentSnapshotId.toSeq.flatMap { id =>
-    val chain = dataChainAt(id).filterNot(m => m.kind == "del" || m.kind == "pdel")
-    val excl = chainExclusions(dataChainAt(id))
+  def liveScanPaths(): Set[String] = {
+    val all = listing().chain
+    val chain = all.filterNot(m => m.kind == "del" || m.kind == "pdel")
+    val excl = chainExclusions(all)
     if (excl.isEmpty) chain.map(s => snapDir(s.id).toString)
     else chain.flatMap(s => listParquet(snapDir(s.id)).filterNot(f => excl(relToRoot(f))))
   }.toSet
@@ -2698,7 +2748,8 @@ final class SnapshotTable(
     * them entirely and reads just the delta dirs, zero shuffle. */
   def rowChangesBetween(sinceId: Long, endId: Long): Option[ChangeScan] = {
     import org.apache.spark.sql.functions.lit
-    val all = metas()
+    val l = listing()
+    val all = l.metas
     // CONTIGUITY GUARD (r12 ADVICE #1): a consumer offset no longer in the
     // chain means expiry truncated history PAST it — the commits between
     // `sinceId` and the surviving base were folded into that base and
@@ -2810,13 +2861,13 @@ final class SnapshotTable(
       if (groups.isEmpty) None
       else Some(groups.map { case (dir, fl) =>
         val ownerId = idOfSnapDirPath(dir)
-        applyColmap(snapDirRead(ownerId, fl), ownerId, ops)
+        applyColmap(snapDirRead(l, ownerId, fl), ownerId, ops)
       }.reduce(_.unionByName(_, allowMissingColumns = true)))
     val removed: Option[DataFrame] =
       removedParts.map(_._1).reduceOption(_.unionByName(_, allowMissingColumns = true))
     val nFiles = addedFiles.map(_._2.size).sum + removedParts.map(_._2).sum
     val change = (union(addedFiles), removed) match {
-      case (None, None) => read().limit(0).withColumn("_change", lit("insert"))
+      case (None, None) => readAt(l).limit(0).withColumn("_change", lit("insert"))
       case (Some(a), None) => a.withColumn("_change", lit("insert")) // pure appends: zero shuffle
       case (None, Some(r)) => r.withColumn("_change", lit("delete"))
       case (Some(a0), Some(r0)) =>
@@ -2828,17 +2879,18 @@ final class SnapshotTable(
         a.exceptAll(r).withColumn("_change", lit("insert"))
           .unionByName(r.exceptAll(a).withColumn("_change", lit("delete")))
     }
-    Some(ChangeScan(change, nFiles, planFiles(Seq.empty).filesTotal))
+    Some(ChangeScan(change, nFiles, planAt(l, Seq(Seq.empty)).filesTotal))
   }
 
   def appendsSince(id: Long): Option[DataFrame] = {
     // a `spec` marker between appends is layout-only: deltas stay valid
-    val later = metas().dropWhile(_.id <= id)
+    val l = listing()
+    val later = l.metas.dropWhile(_.id <= id)
     if (later.exists(m => m.kind != "append" && m.kind != "spec")) None
     else {
       val appends = later.filter(_.kind == "append")
-      if (appends.isEmpty) Some(read().limit(0)) // schema-preserving empty
-      else Some(appends.map(s => snapDirRead(s.id))
+      if (appends.isEmpty) Some(readAt(l).limit(0)) // schema-preserving empty
+      else Some(appends.map(s => snapDirRead(l, s.id))
         .reduce(_ unionByName _))
     }
   }
@@ -2859,7 +2911,8 @@ final class SnapshotTable(
     * 100 TB behind the current offset. */
   def appendsBetween(sinceId: Long, endId: Long,
                      ignoreReplaces: Boolean = false): DataFrame = {
-    val all = metas()
+    val l = listing()
+    val all = l.metas
     // same contiguity guard as [[rowChangesBetween]]: an offset expiry
     // truncated past means appends in the window were folded into the
     // surviving base and physically deleted — not skippable even with
@@ -2898,8 +2951,8 @@ final class SnapshotTable(
           "with ignoreReplaces=true to skip rewrites and tail appends only)")
     val appends = range.filter(_.kind == "append")
     val ops = colOpsFrom(all, endId)
-    if (appends.isEmpty) read().limit(0) // schema-preserving empty
-    else appends.map(m => applyColmap(snapDirRead(m.id), m.id, ops))
+    if (appends.isEmpty) readAt(l).limit(0) // schema-preserving empty
+    else appends.map(m => applyColmap(snapDirRead(l, m.id), m.id, ops))
       .reduce(_ unionByName _)
   }
 
@@ -2994,15 +3047,13 @@ final class SnapshotTable(
 
   /** The parsed `.stats` sidecar of one snapshot: rel path -> col -> stat.
     * Pre-upgrade 5-field lines (no counts) parse with unknown counts. */
-  private def readStatsSidecar(id: Long): Map[String, Map[String, FileColStat]] = {
+  private def readStatsSidecar(l: Listing, id: Long): Map[String, Map[String, FileColStat]] = {
     val p = statsFile(id)
-    val st = try fs.getFileStatus(p) catch {
-      case _: java.io.FileNotFoundException => return Map.empty
-    }
-    // write-once file (complete before its marker commits): the
-    // (len, mtime) stamp validates a cached parse exactly
-    StampedCache.shared.getOrLoad(qualifiedRoot, p.getName,
-        (st.getLen, st.getModificationTime)) {
+    // write-once file (complete before its marker commits, so a listing
+    // that holds the marker holds it): the listed (len, mtime) stamp
+    // validates a cached parse exactly
+    val stamp = l.stamp(p.getName).getOrElse(return Map.empty)
+    StampedCache.shared.getOrLoad(qualifiedRoot, p.getName, stamp) {
       val in = fs.open(p)
       val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
       txt.split('\n').filter(_.nonEmpty).toSeq.map { line =>
@@ -3030,21 +3081,23 @@ final class SnapshotTable(
     * the plan shape behind multi-hull MERGE pruning, where a source
     * mixing low-key updates with high-key inserts would otherwise hull to
     * the whole table. One file listing regardless of alternative count. */
-  def planFilesAny(alternatives: Seq[Seq[ColRange]]): ScanPlan = {
+  def planFilesAny(alternatives: Seq[Seq[ColRange]]): ScanPlan =
+    planAt(listing(), alternatives)
+
+  /** [[planFilesAny]] at `l`'s head. */
+  private def planAt(l: Listing, alternatives: Seq[Seq[ColRange]]): ScanPlan = {
     val kept = Seq.newBuilder[(String, Seq[String])]
     var nKept = 0
     var nTotal = 0
-    val ms = metas() // one marker fetch serves head, chain, and ops
-    val headId = ms.lastOption.map(_.id)
-    val chain = headId.toSeq.flatMap(dataChainFrom(ms, _))
+    val chain = l.chain
     val excluded = chainExclusions(chain)
-    val ops = colOpsFrom(ms, headId.getOrElse(Long.MaxValue))
+    val ops = l.ops
     // `del`/`pdel` sidecar dirs hold deleted rows, not table data: never
     // planned as scan files — readers apply them as anti-joins instead
     chain.filterNot(m => m.kind == "del" || m.kind == "pdel")
       .map(_.id).foreach { id =>
       val dir = fs.makeQualified(snapDir(id)).toString
-      val stats = readStatsSidecar(id)
+      val stats = readStatsSidecar(l, id)
       // the columns SYNTHESIZED for this epoch (adds after it): their
       // per-row value is a known constant (the default) or NULL
       val synthCols: Map[String, SynthCol] =
@@ -3128,8 +3181,9 @@ final class SnapshotTable(
     * mirroring `planFiles`' conservative keep. Per-dir reads keep hive
     * partition columns (basePath). */
   def readPruned(filters: Seq[ColRange]): (DataFrame, ScanPlan) = {
-    val plan = planFiles(filters)
-    val base = readPlanned(plan)
+    val l = listing()
+    val plan = planAt(l, Seq(filters))
+    val base = readPlanned(l, plan)
     val df = filters.flatMap(rangePreds(base, _)).foldLeft(base)(_ filter _)
     (df, plan)
   }
@@ -3143,16 +3197,13 @@ final class SnapshotTable(
     * instead of Spark's inference job; partition columns are still inferred
     * from the paths. Staged/markerless dirs fall back to plain inference,
     * uncached. */
-  private def snapDirRead(ownerId: Long, files: Seq[String] = Seq.empty): DataFrame = {
+  private def snapDirRead(l: Listing, ownerId: Long,
+                          files: Seq[String] = Seq.empty): DataFrame = {
     val dir = fs.makeQualified(snapDir(ownerId)).toString
     val (reader, paths) =
       if (files.isEmpty) (spark.read, Seq(dir))
       else (spark.read.option("basePath", dir), files)
-    val stamp = try {
-      val st = fs.getFileStatus(metaFile(ownerId))
-      Some((st.getLen, st.getModificationTime))
-    } catch { case _: java.io.FileNotFoundException => None }
-    stamp match {
+    l.stamp(metaFile(ownerId).getName) match {
       case None => reader.parquet(paths: _*)
       case Some(s) =>
         // committed dirs are immutable, so the first inference is exact for
@@ -3179,18 +3230,21 @@ final class SnapshotTable(
     * caller cannot forget the delete sidecars and silently resurrect
     * deleted rows. `keepPos = true` keeps the __file/__pos identity
     * columns on the result (the [[deleteWherePositional]] writer stores
-    * them in its sidecar); requires a non-empty plan. */
-  private def readPlanned(plan: ScanPlan, keepPos: Boolean = false): DataFrame =
-    if (plan.files.isEmpty) read().limit(0)
+    * them in its sidecar); requires a non-empty plan. `l` is the listing
+    * `plan` was made at: the deletes folded are those of the head the
+    * files were planned at, so a commit landing in between can never fold
+    * a newer delete over older files without the rows that replaced them. */
+  private def readPlanned(l: Listing, plan: ScanPlan, keepPos: Boolean = false): DataFrame =
+    if (plan.files.isEmpty) readAt(l).limit(0)
     else {
-      val dels = liveDels()
-      val pdels = livePosDels()
+      val dels = l.liveDels
+      val pdels = l.livePosDels
       val needPos = keepPos || pdels.nonEmpty
-      val ops = colOpsUpTo(currentSnapshotId.getOrElse(Long.MaxValue))
+      val ops = l.ops
       val cache = newDelKeyCache // one key-frame build per (key set, frontier), not per dir
       val unioned = plan.files.map { case (dir, files) =>
         val ownerId = idOfSnapDirPath(dir)
-        val leaf = snapDirRead(ownerId, files)
+        val leaf = snapDirRead(l, ownerId, files)
         applyEqDeletes(
           applyColmap(if (needPos) withPosCols(leaf) else leaf, ownerId, ops),
           ownerId, dels, cache, ops)
@@ -3220,10 +3274,15 @@ final class SnapshotTable(
     * the auto-applied residual is the OR of each alternative's ANDed
     * bounds — so `WHERE k ≤ a OR k ≥ b` SELECTs skip the middle files
     * exactly like the q129 DELETE does, instead of full-scanning. */
-  def readPrunedAny(alternatives: Seq[Seq[ColRange]]): (DataFrame, ScanPlan) = {
+  def readPrunedAny(alternatives: Seq[Seq[ColRange]]): (DataFrame, ScanPlan) =
+    readPrunedAt(listing(), alternatives)
+
+  /** [[readPrunedAny]] at `l`'s head. */
+  private def readPrunedAt(l: Listing,
+                           alternatives: Seq[Seq[ColRange]]): (DataFrame, ScanPlan) = {
     import org.apache.spark.sql.functions.lit
-    val plan = planFilesAny(alternatives)
-    val base = readPlanned(plan)
+    val plan = planAt(l, alternatives)
+    val base = readPlanned(l, plan)
     val perAlt = alternatives.map(
       _.flatMap(rangePreds(base, _)).reduceOption(_ && _).getOrElse(lit(true)))
     (base.filter(perAlt.reduceOption(_ || _).getOrElse(lit(true))), plan)
@@ -3236,8 +3295,9 @@ final class SnapshotTable(
     * `read().filter(cond)` at a fraction of the scan. The SELECT-side
     * twin of [[deletePruned]]'s planning. */
   def readWhere(cond: org.apache.spark.sql.Column): (DataFrame, ScanPlan) = {
-    val plan = planFilesAny(FilterRanges.extractAlternatives(cond))
-    (readPlanned(plan).filter(cond), plan)
+    val l = listing()
+    val plan = planAt(l, FilterRanges.extractAlternatives(cond))
+    (readPlanned(l, plan).filter(cond), plan)
   }
 
   /** Fold every live file's sidecar line into one profile per column —
@@ -3252,15 +3312,14 @@ final class SnapshotTable(
     // `del`/`pdel` sidecars describe DELETED rows — folding their stats in
     // would inflate counts; pending-delete rows still counted in data-file
     // stats are a conservative overcount until vacuum/compact
-    val liveIds = currentSnapshotId.toSeq
-      .flatMap(id => dataChainAt(id)
-        .filterNot(m => m.kind == "del" || m.kind == "pdel").map(_.id))
-    val ops = colOpsUpTo(currentSnapshotId.getOrElse(Long.MaxValue))
+    val l = listing()
+    val liveIds = l.chain.filterNot(m => m.kind == "del" || m.kind == "pdel").map(_.id)
+    val ops = l.ops
     // stats carry the file-epoch PHYSICAL names; the profile reports the
     // LOGICAL schema — dropped columns fold into nothing, renamed ones
     // fold under their current name (identity without ops)
     val all: Seq[(String, FileColStat)] =
-      liveIds.flatMap(id => readStatsSidecar(id).valuesIterator
+      liveIds.flatMap(id => readStatsSidecar(l, id).valuesIterator
         .flatMap(_.iterator).toSeq
         .flatMap { case (c, st) => mapNameAfter(c, id, ops).map(_ -> st) })
     all.groupBy(_._1).map { case (col, pairs) =>
@@ -3294,12 +3353,13 @@ final class SnapshotTable(
     * deletes are pending (their matched rows aren't attributed to
     * partitions in metadata). */
   def partitionRowCountsFromMetadata(partCol: String): Option[Map[String, Long]] = {
-    val chain = currentSnapshotId.toSeq.flatMap(dataChainAt)
+    val l = listing()
+    val chain = l.chain
     if (chain.exists(m => carriesEqDeletes(m) || carriesPosDeletes(m))) return None
     val excluded = chainExclusions(chain)
     val out = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     chain.foreach { m =>
-      readStatsSidecar(m.id).foreach { case (rel, cols) =>
+      readStatsSidecar(l, m.id).foreach { case (rel, cols) =>
         val rootRel = f"snap-${m.id}%05d/$rel"
         if (!excluded(rootRel)) {
           val pv = rel.split('/').dropRight(1)
@@ -3319,12 +3379,12 @@ final class SnapshotTable(
     * I/O only, no Spark job (the cow commit records replaced-row counts
     * with it, so metadata COUNT(*) stays scan-free across DML). */
   private def footerRowCount(file: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(file), spark.sparkContext.hadoopConfiguration))
+    val r = openParquet(new Path(file))
     try r.getRecordCount finally r.close()
   }
+
+  private def openParquet(file: Path): org.apache.parquet.hadoop.ParquetFileReader =
+    SnapshotTable.openParquet(file, spark.sparkContext.hadoopConfiguration)
 
   /** FILE-PRUNED copy-on-write — the engine under DELETE/UPDATE/MERGE
     * (Iceberg RewriteFiles semantics). `filters` (from
@@ -3346,9 +3406,10 @@ final class SnapshotTable(
                          emptyPlanIsNoop: Boolean)
                         (transform: DataFrame => DataFrame): (Long, ScanPlan, Long, Long) = {
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
-    optimisticCommit("cow rewrite") { _ =>
-      val plan = planFilesAny(alternatives)
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
+    optimisticCommit("cow rewrite", Some(first)) { l =>
+      val plan = planAt(l, alternatives)
       if (plan.filesKept == 0 && emptyPlanIsNoop) Left((-1L, plan, 0L, 0L))
       else {
         // pending equality deletes fold into the rewrite (readPlanned
@@ -3357,10 +3418,10 @@ final class SnapshotTable(
         // would resurrect its rows (the rewrite's id orders after the
         // del, so the read-path anti-join no longer covers them)
         val hasDels =
-          (liveDels().nonEmpty || livePosDels().nonEmpty) && plan.filesKept > 0
+          (l.liveDels.nonEmpty || l.livePosDels.nonEmpty) && plan.filesKept > 0
         val touched =
-          if (plan.filesKept == 0) read().limit(0) // MERGE into no matching file: pure insert
-          else readPlanned(plan)
+          if (plan.filesKept == 0) readAt(l).limit(0) // MERGE into no matching file: pure insert
+          else readPlanned(l, plan)
         // replaced-rows accounting must be LOGICAL: with folded MoR
         // deletes the replaced files physically hold rows that were
         // already deleted, so callers' "rows removed" math needs the LIVE
@@ -3369,11 +3430,11 @@ final class SnapshotTable(
         val touchedLive = if (hasDels) touched.count() else -1L
         val rewritten = transform(touched)
         stage("cow", "rewriting") { id =>
-          val rows = writeSnapshotData(rewritten, id, partitionSpec(), sortSpec())
+          val rows = writeSnapshotData(rewritten, id, l.partitionSpec, l.sortSpec)
           val replaced = plan.files.flatMap(_._2)
           val exclRows = replaced.map(footerRowCount).sum
           val exclBytes = replaced.map(f => fs.getFileStatus(new Path(f)).getLen).sum
-          () => {
+          _ => {
             // excl sidecar BEFORE the marker: the marker rename is the
             // commit point, so no reader ever sees a cow without its
             // replaced-file manifest. The sidecar records PHYSICAL file
@@ -3381,7 +3442,7 @@ final class SnapshotTable(
             // returned replaced count is the LIVE rows when MoR deletes
             // were folded into this rewrite
             writeExclusion(id, replaced.map(relToRoot), exclRows, exclBytes)
-            finalizeMarker(id, "cow", partitionSpec(), rows, sortSpec(), Some(note))
+            finalizeMarker(id, "cow", l.partitionSpec, rows, l.sortSpec, Some(note))
             (id, plan, if (hasDels) touchedLive else exclRows, rows)
           }
         }
@@ -3443,14 +3504,15 @@ final class SnapshotTable(
     * under). */
   def deleteByKeys(keys: Seq[String], keyRows: DataFrame): (Long, ScanPlan) = {
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
     require(keys.nonEmpty, "deleteByKeys needs at least one key column")
     requireNoteSafeKeys(keys)
     val kb = new KeyBatch(keyRows, keys)
     try {
       if (kb.total == 0) return (0L, ScanPlan(Seq.empty, 0, 0))
-      optimisticCommit("MoR delete") { _ =>
-        val (pre, plan) = readPrunedAny(kb.alternatives)
+      optimisticCommit("MoR delete", Some(first)) { l =>
+        val (pre, plan) = readPrunedAt(l, kb.alternatives)
         val matched = kb.matched(pre)
         stage("del", "deleting") { id =>
           // the delete sidecar carries no partition layout of its own:
@@ -3459,13 +3521,13 @@ final class SnapshotTable(
           // the driver (no Spark write job — see [[writeSmallSidecar]])
           val rows = writeSnapshotData(matched, id, Seq.empty, Seq.empty,
             trySmall = kb.small)
-          () =>
+          now =>
             if (rows == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched: no-op
             else {
               val ts = finalizeMarker(id, "del", Seq.empty, rows, Seq.empty,
                 Some(s"eqdel=${keys.mkString(",")}"))
               // only when no WAP batch is staged at commit time
-              if (kb.small && stagedIds().isEmpty) kb.capture(id, ts)
+              if (kb.small && onlyStaged(now, id)) kb.capture(id, ts)
               (rows, plan)
             }
         }
@@ -3493,10 +3555,11 @@ final class SnapshotTable(
   def deleteWherePositional(cond: org.apache.spark.sql.Column,
                             preMatched: Option[(Long, DataFrame)] = None): (Long, ScanPlan) = {
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
     val alternatives = FilterRanges.extractAlternatives(cond)
-    optimisticCommit("positional delete") { head =>
-      val plan = planFilesAny(alternatives)
+    optimisticCommit("positional delete", Some(first)) { l =>
+      val plan = planAt(l, alternatives)
       if (plan.filesKept == 0) Left((0L, plan)) // hull matches nothing
       else {
         // a router's probe already materialized the matched rows+positions
@@ -3505,14 +3568,14 @@ final class SnapshotTable(
         // any retry (r12 verdict: the probe and the route must share ONE
         // scan)
         val matched = preMatched match {
-          case Some((h, df)) if h == head => df
-          case _ => readPlanned(plan, keepPos = true).filter(cond)
+          case Some((h, df)) if l.head.contains(h) => df
+          case _ => readPlanned(l, plan, keepPos = true).filter(cond)
         }
         stage("pdel", "pos-deleting") { id =>
           // like eq sidecars, no partition layout of its own: consumed via
           // the (file, pos) anti-join, never merged into hive dirs
           val rows = writeSnapshotData(matched, id, Seq.empty, Seq.empty)
-          () =>
+          _ =>
             if (rows == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched
             else {
               finalizeMarker(id, "pdel", Seq.empty, rows, Seq.empty, None)
@@ -3547,24 +3610,25 @@ final class SnapshotTable(
                             sets: Map[String, org.apache.spark.sql.Column],
                             preMatched: Option[(Long, DataFrame)] = None): (Long, ScanPlan) = {
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
     require(sets.nonEmpty, "positional update needs at least one SET column")
     require(!sets.keys.exists(Seq("__file", "__pos").contains),
       "positional update cannot assign the position-identity columns")
     val alternatives = FilterRanges.extractAlternatives(cond)
     var own: Option[DataFrame] = None // this call's own pinned scan
     def unpin(): Unit = { own.foreach(_.unpersist(blocking = false)); own = None }
-    try optimisticCommit("positional update") { head =>
+    try optimisticCommit("positional update", Some(first)) { l =>
       unpin() // a retry re-scans
-      val plan = planFilesAny(alternatives)
+      val plan = planAt(l, alternatives)
       if (plan.filesKept == 0) Left((0L, plan)) // hull matches nothing
       else {
         // reuse a router probe's matched frame iff the head hasn't moved
         // (see deleteWherePositional); a reused frame is the CALLER's cache
         val matched = preMatched match {
-          case Some((h, df)) if h == head => df
+          case Some((h, df)) if l.head.contains(h) => df
           case _ =>
-            own = Some(readPlanned(plan, keepPos = true).filter(cond).persist())
+            own = Some(readPlanned(l, plan, keepPos = true).filter(cond).persist())
             own.get
         }
         stage("mor", "pos-updating") { id =>
@@ -3574,21 +3638,21 @@ final class SnapshotTable(
           val updated = sets.foldLeft(matched.drop("__file", "__pos")) {
             case (d, (c, v)) => d.withColumn(c, v)
           }
-          val inserted = writeSnapshotData(updated, id, partitionSpec(), sortSpec())
+          val inserted = writeSnapshotData(updated, id, l.partitionSpec, l.sortSpec)
           val replaced =
             if (inserted == 0L) 0L
             else {
               matched.write.mode(SaveMode.Overwrite).parquet(delRowsDir(id).toString)
               footerWalk(delRowsDir(id))._1
             }
-          () =>
+          _ =>
             if (inserted == 0L) { discardArtifacts(id); (0L, plan) } // nothing matched
             else {
               require(replaced == inserted,
                 s"positional update wrote $inserted rows but matched $replaced")
               val delBytes = fs.getContentSummary(delRowsDir(id)).getLength
               writeExclusion(id, Seq.empty, replaced, delBytes)
-              finalizeMarker(id, "mor", partitionSpec(), inserted, sortSpec(),
+              finalizeMarker(id, "mor", l.partitionSpec, inserted, l.sortSpec,
                 Some("posdel=1"))
               (inserted, plan)
             }
@@ -3770,7 +3834,8 @@ final class SnapshotTable(
                              wap: Option[String] = None): (Long, Long) = {
     import org.apache.spark.sql.functions.{col, lit, row_number}
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
     require(batch.columns.contains("_change"),
       "applyChangesPositional expects a _change-tagged CDC batch")
     requireNoteSafe(note)
@@ -3779,7 +3844,7 @@ final class SnapshotTable(
       // checked against live marker notes AND the retired-notes ledger,
       // so the mirror compacting + expiring on its own schedule (it is
       // free to) can never re-open the window to a late redelivery
-      if (noteEverCommitted(n)) return (0L, 0L)
+      if (noteEverCommittedIn(first, n)) return (0L, 0L)
     }
     // pin the BATCH, not its two filtered sides: one execution of the
     // change-window plan feeds the side counts AND both sides' later
@@ -3800,18 +3865,18 @@ final class SnapshotTable(
       val alternatives =
         if (delTotal == 0) Seq.empty
         else keyHullAlternatives(deletes, cols, delTotal)
-      optimisticCommit("keyless CDC apply") { _ =>
+      optimisticCommit("keyless CDC apply", Some(first)) { l =>
         val doomed: Option[DataFrame] =
           if (delTotal == 0) None
           else {
-            val plan = planFilesAny(alternatives)
+            val plan = planAt(l, alternatives)
             if (plan.filesKept == 0) None
             else {
               // conform the live side to the batch's columns: a window
               // carrying a schema EVOLUTION (new column) must still match
               // pre-evolution rows, whose value for it is NULL (the
               // read-time-evolution stance) — <=> treats NULL as a value
-              val live0 = readPlanned(plan, keepPos = true)
+              val live0 = readPlanned(l, plan, keepPos = true)
               val live = cols.foldLeft(live0) { (d, c) =>
                 if (d.columns.contains(c)) d
                 else d.withColumn(c, lit(null).cast(deletes.schema(c).dataType))
@@ -3832,7 +3897,7 @@ final class SnapshotTable(
             }
           }
         stage("mor", "cdc-applying") { id =>
-          val inserted = writeSnapshotData(inserts, id, partitionSpec(), sortSpec(),
+          val inserted = writeSnapshotData(inserts, id, l.partitionSpec, l.sortSpec,
             trySmall = localBatch(inserts))
           val replaced = doomed match {
             case None => 0L
@@ -3841,7 +3906,7 @@ final class SnapshotTable(
               footerWalk(delRowsDir(id))._1
           }
           if (replaced == 0L) fs.delete(delRowsDir(id), true)
-          () =>
+          _ =>
             if (inserted == 0L && replaced == 0L) {
               discardArtifacts(id); (0L, 0L) // nothing to do
             } else if (inserted == 0L) {
@@ -3856,13 +3921,13 @@ final class SnapshotTable(
               // for eq-kind, the dir itself for posdel-kind), so tagging
               // one without a sidecar breaks every reader
               fs.delete(exclFile(id), false)
-              finalizeMarker(id, "append", partitionSpec(), inserted, sortSpec(),
+              finalizeMarker(id, "append", l.partitionSpec, inserted, l.sortSpec,
                 note, wap)
               (0L, inserted)
             } else {
               writeExclusion(id, Seq.empty, replaced,
                 fs.getContentSummary(delRowsDir(id)).getLength)
-              finalizeMarker(id, "mor", partitionSpec(), inserted, sortSpec(),
+              finalizeMarker(id, "mor", l.partitionSpec, inserted, l.sortSpec,
                 Some(("posdel=1" +: note.toSeq).mkString(" ")), wap)
               (replaced, inserted)
             }
@@ -3883,26 +3948,27 @@ final class SnapshotTable(
                         preMatched: Option[(Long, DataFrame)] = None,
                         wap: Option[String] = None): (Long, Long, Long) = {
     writeGuard()
-    require(exists, s"DML on non-existent table at $root")
+    val first = listing()
+    require(first.exists, s"DML on non-existent table at $root")
     require(keys.nonEmpty, "MoR upsert needs at least one key column")
     requireNoteSafeKeys(keys)
     requireNoteSafe(note)
     requireWapSafe(wap)
     val kb = new KeyBatch(delKeys, keys)
-    try optimisticCommit("MoR upsert") { head =>
+    try optimisticCommit("MoR upsert", Some(first)) { l =>
       // a router probe's matched frame stands in for the key semi-join
       // iff the head hasn't moved (the router guarantees its frame IS the
       // rows these keys identify — unique-key contract)
       val matched =
-        if (kb.total == 0) read().limit(0)
+        if (kb.total == 0) readAt(l).limit(0)
         else preMatched match {
-          case Some((h, df)) if h == head => df
-          case _ => kb.matched(readPrunedAny(kb.alternatives)._1)
+          case Some((h, df)) if l.head.contains(h) => df
+          case _ => kb.matched(readPrunedAt(l, kb.alternatives)._1)
         }
       stage("mor", "upserting") { id =>
         // inserts land in the TABLE's layout (they are data, exactly an
         // append); the delete sidecar carries none
-        val inserted = writeSnapshotData(insertRows, id, partitionSpec(), sortSpec(),
+        val inserted = writeSnapshotData(insertRows, id, l.partitionSpec, l.sortSpec,
           trySmall = localBatch(insertRows))
         val replaced =
           if (kb.total == 0) 0L
@@ -3914,14 +3980,15 @@ final class SnapshotTable(
           }
         if (replaced == 0L) fs.delete(delRowsDir(id), true)
         val noteStr = s"eqdel=${keys.mkString(",")}" + note.map(n => s" $n").getOrElse("")
-        def commitAs(kind: String, parts: Seq[String], rows: Long, sort: Seq[String]): Unit = {
+        def commitAs(now: Listing, kind: String, parts: Seq[String], rows: Long,
+                     sort: Seq[String]): Unit = {
           val ts = finalizeMarker(id, kind, parts, rows, sort, Some(noteStr), wap)
           // live commit of a small batch with a real delete side, no WAP
           // batch staged
-          if (wap.isEmpty && kb.small && replaced > 0L && stagedIds().isEmpty)
+          if (wap.isEmpty && kb.small && replaced > 0L && onlyStaged(now, id))
             kb.capture(id, ts)
         }
-        () =>
+        now =>
           if (inserted == 0L && replaced == 0L) {
             discardArtifacts(id); (0L, 0L, -1L) // nothing to do: no-op
           } else if (inserted == 0L) {
@@ -3929,7 +3996,7 @@ final class SnapshotTable(
             // dir IS the delete sidecar) — an empty `mor` data dir would
             // be unreadable and carries nothing
             promoteDelRows(id, "del")
-            commitAs("del", Seq.empty, replaced, Seq.empty)
+            commitAs(now, "del", Seq.empty, replaced, Seq.empty)
             (replaced, 0L, id)
           } else {
             // excl sidecar (the matched-delete count metadata readers
@@ -3944,7 +4011,7 @@ final class SnapshotTable(
               if (replaced == 0L) 0L
               else fs.getContentSummary(delRowsDir(id)).getLength
             writeExclusion(id, Seq.empty, replaced, delBytes)
-            commitAs("mor", partitionSpec(), inserted, sortSpec())
+            commitAs(now, "mor", l.partitionSpec, inserted, l.sortSpec)
             (replaced, inserted, id)
           }
       }
@@ -4013,16 +4080,17 @@ final class SnapshotTable(
     require(!sets.keys.exists(keys.contains),
       s"updateRouted must not assign key columns: ${sets.keys.filter(keys.contains)}")
     val alternatives = FilterRanges.extractAlternatives(cond)
-    val headAtProbe = currentSnapshotId.get // BEFORE planning: a commit
-    // landing after this read makes the probe frame stale, and the head
-    // check below must catch it
-    val plan = planFilesAny(alternatives)
+    // plan and probe at one listing's head: a commit landing after it
+    // makes the probe frame stale, and the writers' head check catches it
+    val l = listing()
+    val headAtProbe = l.head.get
+    val plan = planAt(l, alternatives)
     if (plan.filesKept == 0) return ("noop", 0L) // hull matches nothing
     if (!morCheaper(plan, 1L, amplification)) {
       // metadata alone already rules MoR out (even ONE matched row would
       // route COW): keep the cheap narrow probe — count only, column-
       // pruned to the predicate's columns
-      val (pre, _) = readPrunedAny(alternatives)
+      val (pre, _) = readPrunedAt(l, alternatives)
       val matched = pre.filter(cond).count()
       if (matched == 0L) return ("noop", 0L)
       updatePruned(cond, sets)
@@ -4034,7 +4102,7 @@ final class SnapshotTable(
     // hand the same frame to whichever MoR commit wins. A statement that
     // still routes COW pays full-width probe IO once — bounded by the
     // rewrite it precedes, which reads every kept byte anyway.
-    val probe = readPlanned(plan, keepPos = keys.isEmpty).filter(cond).persist()
+    val probe = readPlanned(l, plan, keepPos = keys.isEmpty).filter(cond).persist()
     try {
       val matched = probe.count()
       if (matched == 0L) return ("noop", 0L) // files overlap, no row matches
@@ -4082,19 +4150,20 @@ final class SnapshotTable(
                    amplification: Double = 8.0): (String, Long) = {
     writeGuard()
     val alternatives = FilterRanges.extractAlternatives(cond)
-    val headAtProbe = currentSnapshotId.get // before planning (see updateRouted)
-    val plan = planFilesAny(alternatives)
+    val l = listing() // plan and probe at one head (see updateRouted)
+    val headAtProbe = l.head.get
+    val plan = planAt(l, alternatives)
     if (plan.filesKept == 0) return ("noop", 0L) // hull matches nothing
     if (!morCheaper(plan, 1L, amplification)) {
       // even one matched row routes COW: narrow count probe
-      val (pre, _) = readPrunedAny(alternatives)
+      val (pre, _) = readPrunedAt(l, alternatives)
       val matched = pre.filter(cond).count()
       if (matched == 0L) return ("noop", 0L)
       val (n, _) = deletePruned(cond)
       return ("cow", n)
     }
     // one scan serves probe and route (r12 verdict "What's wrong #1")
-    val probe = readPlanned(plan, keepPos = true).filter(cond).persist()
+    val probe = readPlanned(l, plan, keepPos = true).filter(cond).persist()
     try {
       val matched = probe.count()
       if (matched == 0L) return ("noop", 0L) // files overlap, no row matches
@@ -4265,7 +4334,7 @@ final class SnapshotTable(
     expired.foreach { m =>
       // the staged marker goes too: a crashed publish can leave .meta +
       // .staged both present, and dropping only the .meta would re-enter
-      // the id into stagedIds() permanently
+      // the id into the staged set permanently
       discardArtifacts(m.id)
       fs.delete(metaFile(m.id), false)
     }
@@ -4479,6 +4548,17 @@ object SnapshotTable {
       schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.Row])
   private[graft] def delKeysName(id: Long): String = f"snap-$id%05d.delkeys"
+
+  /** Open one parquet file for its footer, with read options built from
+    * `conf`. Parquet's `ParquetFileReader.open(InputFile)` builds them
+    * over a fresh Hadoop `Configuration`, which parses Hadoop's default
+    * resources again on every open: 6–9 ms an open against 0.14–0.66 ms
+    * this way (measured on a 4-vCPU host). */
+  private[graft] def openParquet(file: Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, file).build())
 
   /** The Spark read schema of one parquet file, from its footer read on
     * the driver with the session's parquet conversion settings — what

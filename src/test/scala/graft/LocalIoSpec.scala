@@ -287,4 +287,80 @@ class LocalIoSpec extends SparkSpec {
     FaultFs.register(conf)
     assert(LocalFs.of(new Path(s"${FaultFs.Scheme}:$dir"), conf).isInstanceOf[FaultFs])
   }
+
+  test("the fork-free listing and status equal Hadoop's raw local ones, " +
+    "minus the checksum files") {
+    import org.apache.hadoop.fs.{FileStatus, RawLocalFileSystem}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = Paths.get(freshRoot("listing"))
+    Files.createDirectories(dir)
+    def write(name: String, bytes: Int): Unit =
+      Files.write(dir.resolve(name), Array.fill[Byte](bytes)(7))
+    write("part-00000.parquet", 120); write(".part-00000.parquet.crc", 12)
+    write("snap-00001.meta", 30); write(".snap-00001.meta.crc", 12)
+    write("_SUCCESS", 0); write("._SUCCESS.crc", 8)
+    write(".hidden", 5); write("_note", 3)
+    Seq("snap-00001", "k=1", "_temporary", ".staging").foreach(d =>
+      Files.createDirectories(dir.resolve(d)))
+    Files.write(dir.resolve("k=1").resolve("f.parquet"), Array.fill[Byte](9)(1))
+    val raw = new RawLocalFileSystem()
+    raw.initialize(java.net.URI.create("file:///"), conf)
+    val graft = LocalFs.of(new Path(dir.toString), conf)
+    def view(sts: Array[FileStatus]) = sts.toSeq.map(s =>
+      (s.getPath.toString, s.isDirectory, s.getLen, s.getModificationTime,
+        s.getBlockSize, s.getReplication)).sortBy(_._1)
+    def crc(s: FileStatus) = { val n = s.getPath.getName; n.startsWith(".") && n.endsWith(".crc") }
+    val p = new Path(dir.toString)
+    val hadoopRaw = raw.listStatus(p)
+    assert(hadoopRaw.length === 12)
+    assert(view(graft.asInstanceOf[LocalFs].getRawFileSystem.listStatus(p)) === view(hadoopRaw))
+    assert(view(graft.listStatus(p)) === view(hadoopRaw.filterNot(crc)))
+    assert(view(graft.listStatus(new Path(s"file:$dir/k=1"))) ===
+      view(raw.listStatus(new Path(s"file:$dir/k=1"))))
+    // a file lists as itself, and its status is Hadoop's
+    val file = new Path(s"$dir/part-00000.parquet")
+    assert(view(graft.listStatus(file)) === view(raw.listStatus(file)))
+    Seq(file, p, new Path(s"$dir/k=1")).foreach(f =>
+      assert(view(Array(graft.getFileStatus(f))) === view(Array(raw.getFileStatus(f))), f))
+    val missing = new Path(s"$dir/no-such")
+    intercept[java.io.FileNotFoundException](graft.listStatus(missing))
+    intercept[java.io.FileNotFoundException](graft.getFileStatus(missing))
+    assert(!graft.exists(missing) && graft.exists(file))
+  }
+
+  test("footer stats read over the session's Hadoop conf are byte-identical " +
+    "to a default-options read") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = freshRoot("stats-eq")
+    val t = new SnapshotTable(spark, root)
+    def batch(from: Long) = spark.range(from, from + 400).select(
+      col("id"),
+      (col("id") * 1.25).cast("decimal(12,2)").as("dec"),
+      (col("id") * 1000003L).cast("decimal(30,4)").as("wide_dec"),
+      date_add(lit("2024-01-01").cast("date"), (col("id") % 50).cast("int")).as("d"),
+      timestamp_seconds(col("id") * 3600L).as("ts"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(concat(lit("s"), col("id") % 13)).as("s"),
+      concat(lit("u"), col("id")).as("u"),
+      when(col("id") === from + 17, lit(Double.NaN)).otherwise(col("id") / 3.0).as("x"))
+      .repartition(2)
+    t.createOrReplace(batch(0)) // dictionary chunks where the values repeat
+    spark.conf.set("parquet.enable.dictionary", "false")
+    try t.append(batch(400)) // plain chunks throughout
+    finally spark.conf.unset("parquet.enable.dictionary")
+    t.append(Seq((900L, "a"), (901L, null)).toDF("id", "s")) // the driver writer's file
+    val defaults: Path => ParquetFileReader = f =>
+      ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    t.snapshots().map(_._1).foreach { id =>
+      val dir = new Path(root, f"snap-$id%05d")
+      val written = new String(Files.readAllBytes(Paths.get(root, f"snap-$id%05d.stats")), "UTF-8")
+      val (rows, lines) = t.footerWalk(dir, defaults)
+      assert(written === lines.mkString("\n") + "\n", s"snapshot $id")
+      assert(t.footerWalk(dir) === ((rows, lines)), s"snapshot $id")
+    }
+    assert(t.rowCountFromMetadata === Some(802L) && t.read().count() === 802L)
+    val perCol = t.columnStats()
+    assert(perCol("s").nullCount === Some(160L + 1L) && perCol("x").kind === "d")
+  }
 }
