@@ -974,9 +974,14 @@ final class SnapshotTable(
     * a read-only file system just keeps tolerating the debris). */
   private def nextId(): Long = {
     val l = listing()
+    (l.head.toSeq ++ stagedIds(l) ++ l.claimedIds).foldLeft(0L)(math.max) + 1
+  }
+
+  /** `l`'s staged ids, with the crashed publishes' debris reaped. */
+  private def stagedIds(l: Listing): Seq[Long] = {
     l.stagedNames.filter(l.publishedStaged).foreach(n =>
       try fs.delete(new Path(root, n), false) catch { case _: Exception => () })
-    (l.head.toSeq ++ l.stagedIds ++ l.claimedIds).foldLeft(0L)(math.max) + 1
+    l.stagedIds
   }
 
   /** CROSS-PROCESS id claim — the piece a shared-directory warehouse needs
@@ -2066,7 +2071,7 @@ final class SnapshotTable(
     // a staged marker whose data dir is gone is debris from a crashed
     // publish-rename (the commit already happened under the new id, or the
     // orphan sweep will reclaim the target dir) — never offer it again
-    l.stagedIds.filter(id => l.has(snapDir(id).getName))
+    stagedIds(l).filter(id => l.has(snapDir(id).getName))
       .map(id => parseMarker(id, stagedFile(id)))
 
   /** Stage an append under audit id `wapId`: full data + stats write, no
