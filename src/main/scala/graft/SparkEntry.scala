@@ -14,6 +14,7 @@ import graft.operators._
   *  - [[graft.operators.Relational]]  — filter/project/sort/set-op/string fns
   *  - [[graft.operators.Events]]      — event-stream analytics (SURVEY §2.10)
   *  - [[graft.operators.Views]]       — the reference's view/MV layer (SURVEY §2.9)
+  *  - [[graft.operators.Gates]]       — warehouse, BCDR, streaming and MV gates
   *  - [[graft.operators.TextOps]]     — LLM-pipeline text analysis + dedup
   *  - [[graft.operators.Similarity]]  — embedding similarity / ANN
   *  - [[graft.operators.Multimodal]]  — opaque-binary media columns with
@@ -40,6 +41,7 @@ object SparkEntry {
     (Relational.queries, Relational.oracle),
     (Events.queries, Events.oracle),
     (Views.queries, Views.oracle),
+    (Gates.queries, Gates.oracle),
     (Windows.queries, Windows.oracle),
     (Sources.queries, Sources.oracle),
     (TextOps.queries, TextOps.oracle),

@@ -624,10 +624,9 @@ final class ReplicationService(primary: Catalog, secondary: Catalog) {
           // the secondary read-only again (a sibling still writing would
           // otherwise race the flag); the first failure in declared order
           // is rethrown once all have settled
-          try members.map { case (s, t) =>
+          try graft.Driver.awaitAll(members.map { case (s, t) =>
               scala.concurrent.Future(stageOne(s, t))
-            }.map(f => scala.util.Try(scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf))).flatMap(_.get)
+            }).flatten
           finally pool.shutdown()
         }
       StagedCycle(groupName, work)

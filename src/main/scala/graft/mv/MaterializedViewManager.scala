@@ -77,15 +77,8 @@ final class MaterializedViewManager(cat: Catalog) {
   /** Run an MV (re)build with transparent MV routing OFF: a rebuild's
     * aggregate-over-base plan must never be rewritten back onto the stale
     * MV it is replacing (see [[MvRewrite]]). */
-  private def withRewriteOff[T](f: => T): T = {
-    val prev = cat.spark.conf.getOption(MvRewrite.FlagKey)
-    cat.spark.conf.set(MvRewrite.FlagKey, "false")
-    try f
-    finally prev match {
-      case Some(v) => cat.spark.conf.set(MvRewrite.FlagKey, v)
-      case None => cat.spark.conf.unset(MvRewrite.FlagKey)
-    }
-  }
+  private def withRewriteOff[T](f: => T): T =
+    graft.Driver.withConf(cat.spark, MvRewrite.FlagKey -> "false")(f)
 
   /** Route matching aggregates over this MV's base table to the
     * materialized partials (installs [[MvRewriteRule]] session-wide). */

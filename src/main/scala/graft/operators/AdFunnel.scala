@@ -67,8 +67,7 @@ object AdFunnel {
     * be identical for the Verify JVM and the driver's DuckDB process. The
     * base is (re)built in place at the scale of the current run's sf dir,
     * so the static path always holds the data the oracle should see. */
-  def root: String =
-    sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft-scratch") + "/adfunnel-v2"
+  def root: String = graft.Driver.scratchRoot + "/adfunnel-v2"
   private def baseDir: String = s"$root/base"
 
   /** Datagen size for an sf dir: campaigns fixed at the reference default

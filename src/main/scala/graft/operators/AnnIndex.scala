@@ -56,8 +56,7 @@ object AnnIndex {
 
   /** Per-sf default index root (under the scratch area, never testdata). */
   def defaultRoot(dir: String): String =
-    s"${sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft-scratch")}" +
-      s"/ann-index/${new java.io.File(dir).getName}"
+    s"${graft.Driver.scratchRoot}/ann-index/${new java.io.File(dir).getName}"
 
   /** The root q121's oracle renders `read_parquet` paths against. Set by
     * the query fns at run time (Verify evaluates `oracleSql` AFTER the
@@ -554,13 +553,11 @@ object AnnIndex {
         t.compact(); t.expireSnapshots(keepLast = 1)
         ps
       }
-    val (vPlans, cPlans) = try {
-      val fv = leg(vecs, "vec_id")
-      val fc = leg(codes, "n_id")
-      import scala.concurrent.duration.Duration
-      (scala.concurrent.Await.result(fv, Duration.Inf),
-        scala.concurrent.Await.result(fc, Duration.Inf))
-    } finally pool.shutdown()
+    // both legs settle before the pool shuts down: a failed vectors leg
+    // must not return while the codes leg is still deleting and compacting
+    val Seq(vPlans, cPlans) =
+      try graft.Driver.awaitAll(Seq(leg(vecs, "vec_id"), leg(codes, "n_id")))
+      finally pool.shutdown()
     val plans = cells.indices.flatMap(i => Seq(vPlans(i), cPlans(i)))
     tomb.drop()
     registerViews(s, root)

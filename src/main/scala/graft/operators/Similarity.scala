@@ -1212,18 +1212,27 @@ object Similarity {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      // every future the panel submits, in submission order: all are
+      // joined before the pool shuts down (no training or pin keeps
+      // running past the query), and the first failure is rethrown
+      val submitted = scala.collection.mutable.ArrayBuffer.empty[scala.concurrent.Future[Any]]
+      def submit[T](f: => T): scala.concurrent.Future[T] = {
+        val fut = scala.concurrent.Future(f)
+        submitted += fut
+        fut
+      }
       def bg(f: => DataFrame): scala.concurrent.Future[DataFrame] =
-        scala.concurrent.Future { f.localCheckpoint(true) }
+        submit(f.localCheckpoint(true))
       try {
         // prewarm the four SHARED trainings first (r18): they are the
         // roots of most members' DAGs, so starting them in parallel up
         // front means a member joining the memo never stalls the pool
-        // behind a training another member has yet to reach. Submitted,
-        // not awaited — members join the same futures.
-        scala.concurrent.Future { trainedCells(s, dir, memo) }
-        scala.concurrent.Future { stagedTrain(s, sparkPq, memo) }
-        scala.concurrent.Future { stagedTrain(s, sparkIvf, memo) }
-        scala.concurrent.Future { stagedTrain(s, sparkClust, memo) }
+        // behind a training another member has yet to reach. Members
+        // join the same futures through the memo.
+        submit(trainedCells(s, dir, memo))
+        submit(stagedTrain(s, sparkPq, memo))
+        submit(stagedTrain(s, sparkIvf, memo))
+        submit(stagedTrain(s, sparkClust, memo))
         // the exact top-k is ≤20 rows but costs a full brute-force scan —
         // pinned eagerly so the per-method joins below don't re-run the
         // scan (localCheckpoint: materialized, lineage cut, no cache
@@ -1248,8 +1257,8 @@ object Similarity {
         val fClustRes = bg(buildIvfPqClustered(s, dir, memo)
           .select(lit("ivfpq_res_clust").as("method"),
             $"q_id", $"k", $"hits_in_top3".as("hits_in_topk")))
-        def await(f: scala.concurrent.Future[DataFrame]): DataFrame =
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+        graft.Driver.awaitAll(submitted.toSeq)
+        def await(f: scala.concurrent.Future[DataFrame]): DataFrame = f.value.get.get
         val exact = await(fExact)
         def recallOf(approx: DataFrame, k: Int, method: String): DataFrame = {
           // each method's result is ≤20 rows but referenced twice (spine +

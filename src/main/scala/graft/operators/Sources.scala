@@ -14,18 +14,15 @@ import Q._
   *    back, the schema-sync transport (S10,
   *    `scripts/33_schema_sync_task.sql:528-541`).
   *
-  * Both write under a scratch dir (SPARK_GRAFT_TMP, default target/) with a
-  * fresh subdir per run. The written artifact is small (aggregates /
+  * Both write under [[graft.Driver.scratchRoot]] with a fresh subdir per
+  * run. The written artifact is small (aggregates /
   * metadata) — the reference's stage files are metadata too; bulk data
   * never routes through the driver.
   */
 object Sources {
 
-  private def scratch(name: String): String = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft-scratch")
-    val dir = s"$base/$name-${java.util.UUID.randomUUID().toString.take(8)}"
-    dir
-  }
+  private def scratch(name: String): String =
+    s"${graft.Driver.scratchRoot}/$name-${java.util.UUID.randomUUID().toString.take(8)}"
 
   val queries: Map[String, QFn] = Map(
     "q33_csv_roundtrip" -> { (s, dir) =>
