@@ -10,10 +10,12 @@ import scala.util.Try
 object Driver {
 
   /** Scratch area for gate warehouses, persisted indexes and stage files
-    * (`SPARK_GRAFT_TMP`). Oracle SQL embeds paths under it, so the default
-    * never changes. */
+    * (`SPARK_GRAFT_TMP`, default `target/graft-scratch` under the working
+    * directory, made absolute). Oracle SQL embeds paths under it, so both
+    * sides must read it from here. */
   def scratchRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_TMP", "/root/repo/target/graft-scratch")
+    sys.env.getOrElse("SPARK_GRAFT_TMP",
+      new java.io.File("target/graft-scratch").getAbsolutePath)
 
   /** Run `f` with session conf `kvs` set, then restore each key to its
     * prior value, or unset it if it had none — whether `f` returns or

@@ -133,7 +133,7 @@ object Gates {
       import s.implicits._
       // the rule is off until the MV is built; the flag, the rule
       // registry and the warehouse are all restored after the routed plan
-      // ran (ADVICE r5 #4: a query function must not leak session state)
+      // ran (a query function must not leak session state)
       withConf(s, graft.mv.MvRewrite.FlagKey -> "false") {
         try gate(s, "mvroute") { case Seq(wh) =>
           val cat = new graft.catalog.Catalog(s, wh, "MVROUTE")
@@ -280,8 +280,8 @@ object Gates {
       }
     },
 
-    // MERGE-ON-READ DELETE TRICKLE through the correctness gate (VERDICT
-    // r9 #1 verbatim): a 100-statement trickle of single-row equality
+    // MERGE-ON-READ DELETE TRICKLE through the correctness gate: a
+    // 100-statement trickle of single-row equality
     // deletes lands on an 8-file snapshot table — REQUIREd to commit
     // ZERO data-file rewrites (every pre-existing data file still on
     // disk; history = base + 100 `del` sidecars); the mid-trickle state
@@ -332,8 +332,8 @@ object Gates {
       }
     },
 
-    // PER-DISJUNCT PRUNED READ through the correctness gate (VERDICT r9
-    // #2): the q129 retention shape as a SELECT — `WHERE key <= lo OR
+    // PER-DISJUNCT PRUNED READ through the correctness gate:
+    // the q129 retention shape as a SELECT — `WHERE key <= lo OR
     // key >= hi` over an 8-file range-laid table must keep only the HEAD
     // and TAIL files (REQUIREd ≤ half), with the ORIGINAL predicate
     // auto-applied as the residual; the DuckDB oracle runs the same
@@ -430,8 +430,8 @@ object Gates {
       }
     },
 
-    // MINOR DELETE-COMPACTION through the correctness gate (VERDICT r10
-    // #1+#2): a 12-statement MoR delete trickle leaves 12 sidecars on an
+    // MINOR DELETE-COMPACTION through the correctness gate:
+    // a 12-statement MoR delete trickle leaves 12 sidecars on an
     // 8-file table — every read pays 12 anti-join batches until someone
     // compacts, and a FULL rewrite is the wrong tool for 12 deleted rows.
     // `compactDeletes` folds the run into ONE merged sidecar, REQUIREd to
@@ -485,7 +485,7 @@ object Gates {
       }
     },
 
-    // COST-ROUTED UPDATE through the correctness gate (VERDICT r10 #3):
+    // COST-ROUTED UPDATE through the correctness gate:
     // two UPDATE statements land on the same 8-file table and the router
     // must pick a DIFFERENT write mode for each — REQUIREd: the one-row
     // status flip routes MERGE-ON-READ (kept-file bytes ≫ one row's
@@ -535,7 +535,7 @@ object Gates {
       }
     },
 
-    // POSITIONAL DELETE through the correctness gate (VERDICT r10 #4):
+    // POSITIONAL DELETE through the correctness gate:
     // DELETE WHERE on a NON-KEY column (o_orderstatus — the table is laid
     // out by o_orderkey, so no equality key and no prunable range can
     // express it) commits a `pdel` (file, row-ordinal) sidecar — REQUIREd:
@@ -832,7 +832,7 @@ object Gates {
     },
 
     // KEYLESS INCREMENTAL LOGICAL REPLICATION through the correctness
-    // gate (r12 verdict #3): a table with NO usable key — duplicate rows
+    // gate: a table with NO usable key — duplicate rows
     // by construction — replicates incrementally through the POSITIONAL
     // CDC consumer. REQUIREd: exact shipped-row counts per window (cost
     // ∝ change, never table), exactly ONE atomic commit per window on
@@ -904,7 +904,7 @@ object Gates {
       }
     },
 
-    // SCHEMA EVOLUTION THROUGH INCREMENTAL REPLICATION (r12 verdict #6):
+    // SCHEMA EVOLUTION THROUGH INCREMENTAL REPLICATION:
     // the primary EVOLVES (new column) mid-window — the same window also
     // deletes pre-evolution rows — and the mirror must land the evolved
     // inserts, keep reading pre-evolution rows as NULL for the new
@@ -969,8 +969,8 @@ object Gates {
       }
     },
 
-    // DURABLE REPLICATION OFFSETS through the correctness gate (r13
-    // verdict #1): after a bootstrap + one shipped window, the service is
+    // DURABLE REPLICATION OFFSETS through the correctness gate:
+    // after a bootstrap + one shipped window, the service is
     // "RESTARTED" — a brand-new instance with zero shared driver memory —
     // and the next cycle is REQUIREd to ship EXACTLY the new window's net
     // rows as ONE atomic mor commit: a service whose progress lived in
@@ -1030,8 +1030,8 @@ object Gates {
       }
     },
 
-    // CROSS-TABLE CONSISTENT CUT for INCREMENTAL LOGICAL replication (r13
-    // verdict #2): two tables' heads are pinned, racing commits land on
+    // CROSS-TABLE CONSISTENT CUT for INCREMENTAL LOGICAL replication:
+    // two tables' heads are pinned, racing commits land on
     // BOTH tables after the pin, and the cycle is REQUIREd to ship exactly
     // the pre-cut windows — each mirror equals the primary AS OF its cut
     // (multiset both ways), so the secondary shows ONE point in time. The
@@ -1099,7 +1099,7 @@ object Gates {
       }
     },
 
-    // LOGICAL FAILBACK through the correctness gate (r13 verdict #5): a
+    // LOGICAL FAILBACK through the correctness gate: a
     // KEYLESS logically replicated group — the secondary has its OWN ids,
     // so marker rewind can't apply — takes a lost write on the old
     // primary, the promoted secondary commits its own timeline, and
@@ -1162,8 +1162,8 @@ object Gates {
       }
     },
 
-    // NULL-MIXED KEYLESS CDC WINDOW through the correctness gate (r13
-    // ADVICE #1): the table's nullable column is laid out so entire files
+    // NULL-MIXED KEYLESS CDC WINDOW through the correctness gate:
+    // the table's nullable column is laid out so entire files
     // are ALL-NULL in it, and one window deletes a value set MIXING NULL
     // and non-null values — a null-blind min/max hull prunes the all-null
     // files and silently never deletes the NULL-valued victims. REQUIREd:
@@ -1210,8 +1210,8 @@ object Gates {
       }
     },
 
-    // GROUP-ATOMIC CYCLE PUBLISH through the correctness gate (r14 verdict
-    // #3): two tables take windows, the cycle STAGES both (phase 1), and
+    // GROUP-ATOMIC CYCLE PUBLISH through the correctness gate:
+    // two tables take windows, the cycle STAGES both (phase 1), and
     // the mirror is REQUIREd to still read the previous cut — then one
     // publish (phase 2) flips both live together. A per-table serial
     // commit would expose table A's new window next to table B's old one
@@ -1287,8 +1287,8 @@ object Gates {
       }
     },
 
-    // RBAC ROLE HIERARCHY through the correctness gate (r14 verdict #1 /
-    // top_next): the reference's role-to-role grants
+    // RBAC ROLE HIERARCHY through the correctness gate:
+    // the reference's role-to-role grants
     // (`scripts/00_prereqs_rbac.sql:38-44`) — one role per nation holding
     // SELECT on its table, granted to its region's role, all regions
     // granted to ADMIN. REQUIREd: two-hop transitive resolution, replay
@@ -1364,8 +1364,8 @@ object Gates {
       }
     },
 
-    // FIELD-ID-STYLE SCHEMA EVOLUTION through the correctness gate (r15
-    // verdict #3): mid-window the primary RENAMES one column and DROPS
+    // FIELD-ID-STYLE SCHEMA EVOLUTION through the correctness gate:
+    // mid-window the primary RENAMES one column and DROPS
     // another — both REQUIREd to be marker-only commits touching ZERO
     // data files — then appends under the new schema; one incremental
     // cycle ships ops + changes, the mirror is REQUIREd to land the ops
@@ -1484,8 +1484,8 @@ object Gates {
       }
     },
 
-    // FAILBACK WITH COLUMN OPS through the correctness gate (r16 verdict
-    // missing #2, the q145 mold at data scale): the new primary runs
+    // FAILBACK WITH COLUMN OPS through the correctness gate (the
+    // q145 mold at data scale): the new primary runs
     // RENAME + DROP + ADD-with-DEFAULT after failover — REQUIREd
     // marker-only on its side — plus keyed DML; `failbackLogical` must
     // ship the ops home as marker-only commits BEFORE the value algebra
@@ -1571,8 +1571,8 @@ object Gates {
       }
     },
 
-    // ATOMIC MULTI-OP DDL through the correctness gate (r17
-    // `alterColumns`, Iceberg UpdateSchema semantics): a column SWAP +
+    // ATOMIC MULTI-OP DDL through the correctness gate
+    // (`alterColumns`, Iceberg UpdateSchema semantics): a column SWAP +
     // widen + add-with-default land as ONE marker commit — REQUIREd
     // zero data files touched and exactly one colmap snapshot — then an
     // append under the post-batch schema and a COW delete spanning both
@@ -1814,14 +1814,14 @@ object Gates {
       }
     },
 
-    // NULL-COUNT pruning through the correctness gate (VERDICT r6 #7).
+    // NULL-COUNT pruning through the correctness gate.
     // q104 proves min/max bounds prune; this proves the OTHER sidecar
     // field: `urgent_cust` is NULL except on 1-URGENT orders, and the
     // table is laid out so whole files carry only non-urgent rows — an
     // IS NOT NULL scan (a ColRange with notNull and NO bounds, so min/max
     // can't help) must drop those files from the footer-recorded null
     // counts alone, before any Spark job. readPruned auto-applies the
-    // IS NOT NULL residual (VERDICT r6 #5), so the kept file's mixed rows
+    // IS NOT NULL residual, so the kept file's mixed rows
     // are trimmed without a manual re-filter. The DuckDB oracle runs the
     // equivalent predicate over the FULL table: a lost file (missing
     // rows) or pruning not firing (the require) both red the row. At
@@ -1936,8 +1936,8 @@ object Gates {
       }
     },
 
-    // CONTINUOUS MV maintenance through the correctness gate (VERDICT r7
-    // #5): q101 proves the ROUTER; this proves the stream-driven FOLD.
+    // CONTINUOUS MV maintenance through the correctness gate:
+    // q101 proves the ROUTER; this proves the stream-driven FOLD.
     // The MV partials are built over a seed third of `orders`, the other
     // two thirds land as appends AFTER the build, and the only thing that
     // folds them in is a [[graft.streaming.MvMaintenance]] tail firing
@@ -1991,8 +1991,8 @@ object Gates {
       }
     },
 
-    // STATS-DRIVEN BROADCAST through the correctness gate (VERDICT r7 #7 →
-    // r8 #3, the first CBO step made AMBIENT): Spark's own auto-broadcast
+    // STATS-DRIVEN BROADCAST through the correctness gate (the first
+    // CBO step made AMBIENT): Spark's own auto-broadcast
     // is DISABLED and the query calls NO join API — a plain
     // `read().join(read(), ...)` — so the only thing that can turn this
     // join into a BroadcastHashJoin is the injected
